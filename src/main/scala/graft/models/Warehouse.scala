@@ -2,6 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * The whole view DAG wired together — the Spark analogue of `dbt run` over the
@@ -13,6 +14,9 @@ import org.apache.spark.sql.functions._
  * expanded fact_event tree, staging appears 7× (SURVEY §3.2) — DuckDB re-scans
  * one local file cheaply, but at 100 TB recomputing the staged projection per
  * branch is 7 full scans, so the shared prefix is worth materializing once.
+ * Those cached frames live until the raw table changes: an append to it
+ * (`RawLoader.load`) refreshes every cache built over its path, and the next
+ * `fromRaw` over the same table reuses that cache instead of caching again.
  */
 final case class Warehouse(
     raw: DataFrame,
@@ -57,9 +61,9 @@ object Warehouse {
       ingestionTs: Column = current_timestamp(),
       cacheShared: Boolean = false): Warehouse = {
     val stg0 = Staging.stg(raw, ingestionTs)
-    val stg = if (cacheShared) stg0.cache() else stg0
+    val stg = if (cacheShared) cached(stg0) else stg0
     val valid0 = Intermediate.valid(stg)
-    val valid = if (cacheShared) valid0.cache() else valid0
+    val valid = if (cacheShared) cached(valid0) else valid0
     val invalid = Intermediate.invalid(stg)
     val dOrder = Dimensions.order(valid)
     val dTime = Dimensions.time(valid)
@@ -71,4 +75,8 @@ object Warehouse {
     Warehouse(raw, stg, valid, invalid, dOrder, dTime, dStatus, dLocation,
       dCarrier, fact, dq)
   }
+
+  /** Cache `df` unless an identical plan is cached already (an earlier run's). */
+  private def cached(df: DataFrame): DataFrame =
+    if (df.storageLevel == StorageLevel.NONE) df.cache() else df
 }

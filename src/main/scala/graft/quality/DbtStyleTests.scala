@@ -1,7 +1,8 @@
 package graft.quality
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * dbt's four generic schema-test kinds as reusable DataFrame assertions, run
@@ -42,6 +43,44 @@ object DbtStyleTests {
   }
 
   /**
+   * One row a test contributes to the suite's single pass, per row of
+   * `frame`: the test's key (null for row-level tests), a violation flag and
+   * a parent-row marker, for relationships.
+   */
+  private final case class Emit(frame: DataFrame, key: Column, flag: Column, parent: Column)
+
+  /** Per test, over its key groups: summed flags, keys flagged more than
+    * once, and flags of keys with no parent row. */
+  private final case class Tally(flagged: Long, dupKeys: Long, orphans: Long)
+
+  /** One declared test of the roster: its rows and the tally it reads. */
+  private final case class Check(model: String, name: String, emits: Seq[Emit],
+                                 violations: Tally => Long)
+
+  private val noKey = lit(null).cast("string")
+  private def flag(p: Column): Column = when(p, 1L).otherwise(0L)
+
+  private def notNullCheck(model: String, df: DataFrame, c: String): Check =
+    Check(model, s"not_null:$c",
+      Seq(Emit(df, noKey, flag(col(c).isNull), lit(0L))), _.flagged)
+
+  private def acceptedValuesCheck(model: String, df: DataFrame, c: String,
+                                  values: Seq[Any]): Check =
+    Check(model, s"accepted_values:$c",
+      Seq(Emit(df, noKey, flag(col(c).isNotNull && !col(c).isin(values: _*)), lit(0L))),
+      _.flagged)
+
+  private def uniqueCheck(model: String, df: DataFrame, c: String): Check =
+    Check(model, s"unique:$c",
+      Seq(Emit(df, col(c).cast("string"), flag(col(c).isNotNull), lit(0L))), _.dupKeys)
+
+  private def relationshipsCheck(model: String, child: DataFrame, fk: String,
+                                 parent: DataFrame, pk: String): Check =
+    Check(model, s"relationships:$fk", Seq(
+      Emit(child, col(fk).cast("string"), flag(col(fk).isNotNull), lit(0L)),
+      Emit(parent, col(pk).cast("string"), lit(0L), lit(1L))), _.orphans)
+
+  /**
    * The FULL schema.yml test roster over a built warehouse, mirrored
    * declaration by declaration from
    * `logistics_pipeline/models/layer/schema.yml:1-192` (51 tests), plus one
@@ -49,7 +88,9 @@ object DbtStyleTests {
    * status enumeration). Test names are `kind:column` per model, so the
    * suite output reads like `dbt test`'s.
    */
-  def suite(w: graft.models.Warehouse): Seq[TestResult] = {
+  private def roster(w: graft.models.Warehouse): Seq[Check] = {
+    import graft.model.LogisticsEvent.validStatuses
+
     // (model, frame, not_null columns, unique columns) — schema.yml order
     val columnTests: Seq[(String, DataFrame, Seq[String], Seq[String])] = Seq(
       ("stg_logistics_events", w.stg,
@@ -77,71 +118,85 @@ object DbtStyleTests {
           "is_late_delivery"),
         Seq("event_sk", "event_id")))
 
-    // Persist every model frame for the suite's duration (r11 review): each
-    // test is its own action, and an unpersisted lazy model re-executes its
-    // full staging+join DAG per test — ~60 full plan executions for 51
-    // tests at the scale this package targets. With the frames cached, each
-    // action scans the materialized model once; additionally, ALL not_null
-    // checks of one model collapse into ONE conditional-aggregation pass
-    // (the DqChecks.runAll pattern — '7× less I/O'). unique/relationships
-    // keep their own jobs: they need groupBys/anti-joins a single aggregate
-    // cannot express, but they now run over the cached frames.
-    // columnTests already contains every model frame the relationship
-    // tests touch (fact_event and dim_location are rows of it; Warehouse is
-    // a case class of vals, so the references are identical) — appending
-    // them again only looked load-bearing (r12 review)
-    val frames = columnTests.map(_._2).distinct
-    frames.foreach(_.persist())
-    try {
-      suiteChecks(columnTests, w)
-    } finally frames.foreach(_.unpersist())
-  }
-
-  private def suiteChecks(
-      columnTests: Seq[(String, DataFrame, Seq[String], Seq[String])],
-      w: graft.models.Warehouse): Seq[TestResult] = {
-    import graft.model.LogisticsEvent.validStatuses
-
-    def cnt(pred: org.apache.spark.sql.Column) =
-      coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L))
-
     val keyTests = columnTests.flatMap { case (m, df, nn, uq) =>
-      val nnResults =
-        if (nn.isEmpty) Seq.empty[TestResult]
-        else {
-          val row = df.agg(
-            cnt(col(nn.head).isNull).as("c0"),
-            nn.tail.zipWithIndex.map { case (c, i) =>
-              cnt(col(c).isNull).as(s"c${i + 1}") }: _*).head()
-          nn.zipWithIndex.map { case (c, i) =>
-            TestResult(m, s"not_null:$c", row.getLong(i)) }
-        }
-      nnResults ++ uq.map(c => TestResult(m, s"unique:$c", unique(df, c)))
+      nn.map(notNullCheck(m, df, _)) ++ uq.map(uniqueCheck(m, df, _))
     }
 
     val enumTests = Seq(
-      TestResult("int_invalid_logistics_events", "accepted_values:invalid_reason",
-        acceptedValues(w.invalid, "invalid_reason", Seq(
-          "INVALID_WEIGHT", "MISSING_COORDINATES", "INVALID_ESTIMATED_DELIVERY",
-          "MISSING_STATUS", "MISSING_LOCATION"))),
-      TestResult("fact_event", "accepted_values:is_late_delivery",
-        acceptedValues(w.factEvent, "is_late_delivery", Seq(true, false))),
+      acceptedValuesCheck("int_invalid_logistics_events", w.invalid, "invalid_reason", Seq(
+        "INVALID_WEIGHT", "MISSING_COORDINATES", "INVALID_ESTIMATED_DELIVERY",
+        "MISSING_STATUS", "MISSING_LOCATION")),
+      acceptedValuesCheck("fact_event", w.factEvent, "is_late_delivery", Seq(true, false)),
       // beyond schema.yml: the conformed status enumeration
-      TestResult("dim_status", "accepted_values:status_name",
-        acceptedValues(w.dimStatus, "status_name", validStatuses)))
+      acceptedValuesCheck("dim_status", w.dimStatus, "status_name", validStatuses))
 
     val relTests = Seq(
-      ("order_sk", w.dimOrder), ("time_sk", w.dimTime),
-      ("status_sk", w.dimStatus), ("carrier_sk", w.dimCarrier)
-    ).map { case (fk, dim) =>
-      TestResult("fact_event", s"relationships:$fk",
-        relationships(w.factEvent, fk, dim, fk))
-    } ++ Seq(
-      TestResult("fact_event", "relationships:origin_location_sk",
-        relationships(w.factEvent, "origin_location_sk", w.dimLocation, "location_sk")),
-      TestResult("fact_event", "relationships:destination_location_sk",
-        relationships(w.factEvent, "destination_location_sk", w.dimLocation, "location_sk")))
+      ("order_sk", w.dimOrder, "order_sk"), ("time_sk", w.dimTime, "time_sk"),
+      ("status_sk", w.dimStatus, "status_sk"), ("carrier_sk", w.dimCarrier, "carrier_sk"),
+      ("origin_location_sk", w.dimLocation, "location_sk"),
+      ("destination_location_sk", w.dimLocation, "location_sk")
+    ).map { case (fk, dim, pk) => relationshipsCheck("fact_event", w.factEvent, fk, dim, pk) }
 
     keyTests ++ enumTests ++ relTests
+  }
+
+  /**
+   * Run the whole roster as ONE Spark action. Every model frame is projected
+   * once, with one `explode`, into `(test id, key, flag, parent)` rows; the
+   * union is grouped by `(test, key)` and then by test, and collected:
+   *  - not_null / accepted_values carry no key, so their flags combine
+   *    map-side into one row per test and partition;
+   *  - unique counts the keys whose group holds more than one flagged row;
+   *  - relationships counts the flagged child rows of key groups with no
+   *    parent row (null FKs carry flag 0: exempt, as in dbt).
+   * Keys compare as strings; every keyed column of the roster is a string.
+   *
+   * Cost at scale: the unique and relationship keys are shuffled once, as
+   * a groupBy or anti-join per test would shuffle them, while every
+   * not_null/accepted_values flag is pre-aggregated before the exchange.
+   * One query in place of one per test saves the per-query fixed cost
+   * (planning, code generation, scheduling): nearly all of the suite's cost
+   * on a small hourly increment.
+   *
+   * The model frames the pass reads more than once (the dims and
+   * int_invalid are also read inside fact_event and the DQ summary) are
+   * persisted for its duration, but only those not cached already: frames
+   * the caller cached (`Warehouse.fromRaw(cacheShared = true)`) keep their
+   * cache after the call, and only frames persisted here are unpersisted.
+   */
+  def suite(w: graft.models.Warehouse): Seq[TestResult] = {
+    val checks = roster(w)
+    // in dependency order, so a frame persisted here is built from its
+    // persisted inputs; fact_event and the DQ summary are read once
+    val reread = Seq(w.stg, w.valid, w.invalid,
+      w.dimOrder, w.dimTime, w.dimStatus, w.dimLocation, w.dimCarrier)
+    val owned = reread.filter(_.storageLevel == StorageLevel.NONE)
+    owned.foreach(_.persist())
+    try {
+      val tallies = tally(checks)
+      checks.zipWithIndex.map { case (c, i) =>
+        TestResult(c.model, c.name, c.violations(tallies.getOrElse(i, Tally(0L, 0L, 0L))))
+      }
+    } finally owned.reverse.foreach(_.unpersist())
+  }
+
+  private def tally(checks: Seq[Check]): Map[Int, Tally] = {
+    val emits = checks.zipWithIndex.flatMap { case (c, i) =>
+      c.emits.map(e => e.frame ->
+        struct(lit(i).as("t"), e.key.as("k"), e.flag.as("f"), e.parent.as("p")))
+    }
+    val projected = emits.map(_._1).distinct.map { df =>
+      df.select(explode(array(emits.collect { case (d, r) if d eq df => r }: _*)).as("r"))
+        .select("r.*")
+    }
+    projected.reduce(_ union _)
+      .groupBy("t", "k").agg(sum("f").as("f"), sum("p").as("p"))
+      .groupBy("t").agg(
+        sum("f").as("flagged"),
+        count(when(col("f") > 1, 1)).as("dup_keys"),
+        coalesce(sum(when(col("p") === 0, col("f"))), lit(0L)).as("orphans"))
+      .collect()
+      .map(r => r.getInt(0) -> Tally(r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toMap
   }
 }

@@ -45,6 +45,9 @@ class PipelineSpec extends SparkSuite {
     val r2 = Pipeline.run(spark, s"$tmp/landing", s"$tmp/bronze",
       s"$tmp/ckpt", s"$tmp/raw")
     assert(r2.newRawRows == 10)   // 55-60 deduped by the anti-join
+    // stg/valid stay cached across runs; the raw append must refresh them
+    assert(r2.testsPassed, s"failing: ${r2.testResults.filterNot(_.passed)}")
+    assert(r2.warehouse.factEvent.count() == 70)
   }
 
   test("serve stage: dashboards attach over the wire, read-only enforced") {

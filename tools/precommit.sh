@@ -5,9 +5,11 @@
 #
 # Runs, in order:
 #   1. the suites named as arguments (the ones covering whatever changed),
-#   2. the FAST execution-config parity tier (AqeParitySpec, 18
-#      representative queries x 3 configs — the full 116-query sweep runs
-#      with GRAFT_FULL_PARITY=true once per round / on the final binary),
+#   2. the default fast tier: the execution-config parity tier
+#      (AqeParitySpec, 18 representative queries x 3 configs — the full
+#      116-query sweep runs with GRAFT_FULL_PARITY=true once per round / on
+#      the final binary) and the pipeline path (DbtStyleTestsSpec,
+#      PipelineSpec),
 #   3. graft.Verify at sf0.01 + the DuckDB oracle compare (the real gate).
 #
 # Total ~10 min on this host. (Since r11 the FULL battery is also cheap —
@@ -17,12 +19,12 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SUITES=("$@")
-TESTONLY="graft.coverage.AqeParitySpec"
+TESTONLY="graft.coverage.AqeParitySpec graft.quality.DbtStyleTestsSpec graft.pipeline.PipelineSpec"
 for s in "${SUITES[@]:-}"; do
   [[ -n "$s" ]] && TESTONLY="$TESTONLY $s"
 done
 
-echo "== 1+2/3: targeted suites + fast parity tier =="
+echo "== 1+2/3: targeted suites + fast tier =="
 sbt -batch "testOnly $TESTONLY"
 
 echo "== 3/3: Verify sf0.01 + oracle compare =="
