@@ -68,18 +68,15 @@ object RawLoader {
    */
   def load(spark: SparkSession, bronzeGlob: String, tableDir: String): Long = {
     val incoming = withIngestionTs(readBronze(spark, bronzeGlob))
-    // ONLY path-not-found means "first run" (r11 review): a catch-all here
-    // turned any transient read failure (object-store 503, credential
+    // ONLY a missing table directory means "first run": a catch-all read
+    // probe turned any transient read failure (object-store 503, credential
     // hiccup, one corrupt footer) into exists=false — appending the whole
-    // increment WITHOUT the anti-join and permanently duplicating events.
-    // Every other error must propagate and fail the load.
-    val exists = try {
-      spark.read.schema(LogisticsEvent.rawSchema).parquet(tableDir).head(1).nonEmpty
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getCondition).exists(_.startsWith("PATH_NOT_FOUND")) =>
-        false
-    }
+    // increment WITHOUT the anti-join and permanently duplicating events. An
+    // existing directory always takes the anti-join, whose read fails the
+    // load on any such error.
+    val tablePath = new org.apache.hadoop.fs.Path(tableDir)
+    val exists = tablePath.getFileSystem(spark.sessionState.newHadoopConf())
+      .exists(tablePath)
     val toWrite =
       if (!exists) incoming
       else dedupAgainst(incoming,

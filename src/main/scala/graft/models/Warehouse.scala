@@ -7,16 +7,31 @@ import org.apache.spark.storage.StorageLevel
 /**
  * The whole view DAG wired together — the Spark analogue of `dbt run` over the
  * reference's model tree (every model `+materialized: view`,
- * `logistics_pipeline/dbt_project.yml:32-43`): plain unpersisted DataFrames,
- * recomputed on read, exactly like the reference's views.
+ * `logistics_pipeline/dbt_project.yml:32-43`).
  *
- * `fromRaw` optionally caches the staged/valid frames: in the reference's
- * expanded fact_event tree, staging appears 7× (SURVEY §3.2) — DuckDB re-scans
- * one local file cheaply, but at 100 TB recomputing the staged projection per
- * branch is 7 full scans, so the shared prefix is worth materializing once.
- * Those cached frames live until the raw table changes: an append to it
- * (`RawLoader.load`) refreshes every cache built over its path, and the next
- * `fromRaw` over the same table reuses that cache instead of caching again.
+ * `fromRaw(cacheShared = false)` keeps the reference's views: plain lazy
+ * DataFrames, recomputed on every read. Expanded, those views form one plan
+ * of about 1,000 lines in which staging appears 7× (SURVEY §3.2); DuckDB
+ * re-expands that cheaply, Spark re-analyzes, re-plans, serializes and
+ * compiles all of it for every query that reads a model.
+ *
+ * `fromRaw(cacheShared = true)` — the pipeline's path — builds each of the
+ * ten models exactly once, in dependency order, with an eager
+ * `localCheckpoint` at [[CheckpointLevel]]: every model frame is then a
+ * `LogicalRDD` leaf over its stored blocks, and every later plan (the
+ * schema tests, the dashboard publish, each wire query) starts from it.
+ *  - Snapshot per run: the frames hold what that run built and tested. A
+ *    later append to the raw table does not change them (only `raw` itself
+ *    is still a lazy read of the table).
+ *  - Lifetime: the blocks live until Spark's ContextCleaner frees them, once
+ *    no warehouse, view or running query references them (it notices on a
+ *    driver GC, forced every `spark.cleaner.periodicGC.interval`). Nothing
+ *    here unpersists them: a dashboard query still running on a view that
+ *    was just replaced keeps its data.
+ *  - Local checkpoints drop lineage: blocks lost with an executor cannot
+ *    be recomputed, and queries reading them fail. A cluster deployment
+ *    would need a reliable checkpoint directory (`Dataset.checkpoint`);
+ *    there is no option for it here.
  */
 final case class Warehouse(
     raw: DataFrame,
@@ -49,34 +64,37 @@ final case class Warehouse(
 
 object Warehouse {
 
+  /** Where `fromRaw(cacheShared = true)` keeps each model's blocks:
+    * deserialized in memory, spilling to local disk. */
+  val CheckpointLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK
+
   /**
    * Build the full model DAG from the raw table.
    *
    * @param ingestionTs injectable clock for staging (tests / oracle runs pass
    *                    a fixed literal; production uses `current_timestamp()`)
-   * @param cacheShared cache stg/valid — the shared prefix of every branch
+   * @param cacheShared materialize each model once, in dependency order, as a
+   *                    local checkpoint (see the class doc); false keeps the
+   *                    lazy views and starts no Spark job
    */
   def fromRaw(
       raw: DataFrame,
       ingestionTs: Column = current_timestamp(),
       cacheShared: Boolean = false): Warehouse = {
-    val stg0 = Staging.stg(raw, ingestionTs)
-    val stg = if (cacheShared) cached(stg0) else stg0
-    val valid0 = Intermediate.valid(stg)
-    val valid = if (cacheShared) cached(valid0) else valid0
-    val invalid = Intermediate.invalid(stg)
-    val dOrder = Dimensions.order(valid)
-    val dTime = Dimensions.time(valid)
-    val dStatus = Dimensions.status(valid)
-    val dLocation = Dimensions.location(valid)
-    val dCarrier = Dimensions.carrier(valid)
-    val fact = Facts.factEvent(valid, dOrder, dTime, dStatus, dLocation, dCarrier)
-    val dq = DqSummary.summary(stg, invalid)
+    def model(df: DataFrame): DataFrame =
+      if (cacheShared) df.localCheckpoint(eager = true, storageLevel = CheckpointLevel)
+      else df
+    val stg = model(Staging.stg(raw, ingestionTs))
+    val valid = model(Intermediate.valid(stg))
+    val invalid = model(Intermediate.invalid(stg))
+    val dOrder = model(Dimensions.order(valid))
+    val dTime = model(Dimensions.time(valid))
+    val dStatus = model(Dimensions.status(valid))
+    val dLocation = model(Dimensions.location(valid))
+    val dCarrier = model(Dimensions.carrier(valid))
+    val fact = model(Facts.factEvent(valid, dOrder, dTime, dStatus, dLocation, dCarrier))
+    val dq = model(DqSummary.summary(stg, invalid))
     Warehouse(raw, stg, valid, invalid, dOrder, dTime, dStatus, dLocation,
       dCarrier, fact, dq)
   }
-
-  /** Cache `df` unless an identical plan is cached already (an earlier run's). */
-  private def cached(df: DataFrame): DataFrame =
-    if (df.storageLevel == StorageLevel.NONE) df.cache() else df
 }

@@ -62,7 +62,9 @@ object Pipeline {
       .parquet(rawTableDir)
     val dq = DqChecks.runAll(raw)
 
-    // 4. dbt_run: (re)define the model DAG — lazy views, nothing computes yet
+    // 4. dbt_run: past the DQ gate, materialize each model once, in
+    // dependency order, and register it as a view; the tests, the dashboard
+    // publish and every serving query read these checkpointed frames
     val w = Warehouse.fromRaw(raw, cacheShared = true)
     w.registerViews()
 

@@ -2,7 +2,6 @@ package graft.quality
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * dbt's four generic schema-test kinds as reusable DataFrame assertions, run
@@ -156,28 +155,16 @@ object DbtStyleTests {
    * not_null/accepted_values flag is pre-aggregated before the exchange.
    * One query in place of one per test saves the per-query fixed cost
    * (planning, code generation, scheduling): nearly all of the suite's cost
-   * on a small hourly increment.
-   *
-   * The model frames the pass reads more than once (the dims and
-   * int_invalid are also read inside fact_event and the DQ summary) are
-   * persisted for its duration, but only those not cached already: frames
-   * the caller cached (`Warehouse.fromRaw(cacheShared = true)`) keep their
-   * cache after the call, and only frames persisted here are unpersisted.
+   * on a small hourly increment. Each branch reads its model frame as given:
+   * a checkpointed leaf on the pipeline's warehouse, the model's whole
+   * lineage on lazy views.
    */
   def suite(w: graft.models.Warehouse): Seq[TestResult] = {
     val checks = roster(w)
-    // in dependency order, so a frame persisted here is built from its
-    // persisted inputs; fact_event and the DQ summary are read once
-    val reread = Seq(w.stg, w.valid, w.invalid,
-      w.dimOrder, w.dimTime, w.dimStatus, w.dimLocation, w.dimCarrier)
-    val owned = reread.filter(_.storageLevel == StorageLevel.NONE)
-    owned.foreach(_.persist())
-    try {
-      val tallies = tally(checks)
-      checks.zipWithIndex.map { case (c, i) =>
-        TestResult(c.model, c.name, c.violations(tallies.getOrElse(i, Tally(0L, 0L, 0L))))
-      }
-    } finally owned.reverse.foreach(_.unpersist())
+    val tallies = tally(checks)
+    checks.zipWithIndex.map { case (c, i) =>
+      TestResult(c.model, c.name, c.violations(tallies.getOrElse(i, Tally(0L, 0L, 0L))))
+    }
   }
 
   private def tally(checks: Seq[Check]): Map[Int, Tally] = {

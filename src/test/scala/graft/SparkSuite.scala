@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +17,31 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     getClass.getResource(s"/fixtures/$name").getPath
 
   def rows(df: DataFrame): Seq[org.apache.spark.sql.Row] = df.collect().toSeq
+
+  /** Names of the SQL actions `body` runs, in order. */
+  def sqlActions(body: => Unit): Seq[String] = {
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(funcName)
+    }
+    // listener events arrive in order, so once a sentinel's is seen, every
+    // action run before it has been reported
+    def untilSentinel(): Seq[String] = {
+      spark.range(1).tail(1)
+      Iterator.continually(seen.poll(30, TimeUnit.SECONDS))
+        .takeWhile(name => { assert(name != null, "no listener event in 30 s"); name != "tail" })
+        .toSeq
+    }
+    spark.listenerManager.register(listener)
+    try {
+      untilSentinel() // events of earlier actions still queued at registration
+      body
+      untilSentinel()
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
 
 object SparkSuite {

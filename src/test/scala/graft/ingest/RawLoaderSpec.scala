@@ -39,8 +39,29 @@ class RawLoaderSpec extends SparkSuite {
     assert(spark.read.parquet(table).count() == 2)
   }
 
+  test("load: an existing empty table directory loads every incoming row") {
+    val tmp = Files.createTempDirectory("graft-loader-empty").toString
+    val bronze = s"$tmp/bronze"; val table = s"$tmp/raw"
+    new java.io.File(table).mkdirs()
+    spark.createDataFrame(Seq(ev("a"), ev("b"), ev("c"))).write.parquet(bronze)
+    assert(RawLoader.load(spark, bronze, table) == 3)
+    assert(spark.read.parquet(table).count() == 3)
+  }
+
+  test("load: the append path is one SQL action") {
+    val tmp = Files.createTempDirectory("graft-loader-actions").toString
+    val table = s"$tmp/raw"
+    spark.createDataFrame(Seq(ev("a"))).write.parquet(s"$tmp/bronze/1")
+    assert(RawLoader.load(spark, s"$tmp/bronze/1", table) == 1)
+    spark.createDataFrame(Seq(ev("a"), ev("b"))).write.parquet(s"$tmp/bronze/2")
+    var loaded = -1L
+    val actions = sqlActions { loaded = RawLoader.load(spark, s"$tmp/bronze/2", table) }
+    assert(actions.size == 1, actions)
+    assert(loaded == 1)
+  }
+
   test("a corrupt table read PROPAGATES instead of silently skipping dedup") {
-    // only PATH_NOT_FOUND means first run; any other read failure must fail
+    // only a missing table directory means first run; a read failure must fail
     // the load — treating it as "no table" would append without the
     // anti-join and permanently duplicate events
     val tmp = java.nio.file.Files.createTempDirectory("graft-load-corrupt").toString

@@ -45,7 +45,6 @@ class PipelineSpec extends SparkSuite {
     val r2 = Pipeline.run(spark, s"$tmp/landing", s"$tmp/bronze",
       s"$tmp/ckpt", s"$tmp/raw")
     assert(r2.newRawRows == 10)   // 55-60 deduped by the anti-join
-    // stg/valid stay cached across runs; the raw append must refresh them
     assert(r2.testsPassed, s"failing: ${r2.testResults.filterNot(_.passed)}")
     assert(r2.warehouse.factEvent.count() == 70)
   }
@@ -76,6 +75,51 @@ class PipelineSpec extends SparkSuite {
         }
       }
       assert(denied.getMessage.contains("read-only"))
+    } finally ConnectServe.stop()
+  }
+
+  test("a run's warehouse is a snapshot: a later append does not change it") {
+    import graft.serve.{ConnectServe, DashboardQueries}
+    def carrierTotal(w: graft.models.Warehouse): Long =
+      DashboardQueries.carrierPerformance(w).collect()
+        .map(_.getAs[Long]("total_events")).sum
+    def servedTotal(port: Int): Long = ConnectServe.withConnection(port) { conn =>
+      ConnectServe.querySeq(conn,
+        "SELECT total_events FROM global_temp.dash_carrier_performance")._2
+        .map(_.head.toLong).sum
+    }
+
+    val tmp = Files.createTempDirectory("graft-pipe4").toString
+    writeBatchFile((1 to 40).map(ev), s"$tmp/landing/b1.parquet")
+    val r1 = Pipeline.run(spark, s"$tmp/landing", s"$tmp/bronze",
+      s"$tmp/ckpt", s"$tmp/raw")
+    val port = ConnectServe.DefaultPort + 3
+    Pipeline.serve(spark, r1.warehouse, port)
+    try {
+      assert(servedTotal(port) == 40)
+
+      // run 2 appends a 6000 kg event: it passes `valid` (weight > 0) but
+      // fails the gate's bad_weights check, after the raw append
+      writeBatchFile(Seq(ev(41).copy(weight_kg = Some(6000.0))),
+        s"$tmp/landing/b2.parquet")
+      intercept[DqChecks.DqGateFailure] {
+        Pipeline.run(spark, s"$tmp/landing", s"$tmp/bronze",
+          s"$tmp/ckpt", s"$tmp/raw")
+      }
+      assert(spark.read.parquet(s"$tmp/raw").count() == 41)
+      assert(carrierTotal(r1.warehouse) == 40)
+      assert(r1.warehouse.factEvent.count() == 40)
+      assert(servedTotal(port) == 40)
+
+      // a later successful run (its own lake: this one stays gated) and its
+      // publish: the dashboard reads that run's facts
+      val tmp2 = Files.createTempDirectory("graft-pipe5").toString
+      writeBatchFile((1 to 50).map(ev), s"$tmp2/landing/b1.parquet")
+      val r3 = Pipeline.run(spark, s"$tmp2/landing", s"$tmp2/bronze",
+        s"$tmp2/ckpt", s"$tmp2/raw")
+      Pipeline.serve(spark, r3.warehouse, port)
+      assert(servedTotal(port) == r3.warehouse.factEvent.count())
+      assert(servedTotal(port) == 50)
     } finally ConnectServe.stop()
   }
 

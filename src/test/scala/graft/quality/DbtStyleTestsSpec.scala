@@ -1,19 +1,16 @@
 package graft.quality
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
 import graft.SparkSuite
 import graft.model.LogisticsEvent.validStatuses
 import graft.models.Warehouse
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /**
  * The one-pass `DbtStyleTests.suite` against the single-test functions it
  * replaces, on the fixture warehouse and on a corrupted copy where every
- * test kind fires; plus its action count and its cache ownership.
+ * test kind fires; plus its action count and the storage it leaves alone.
  */
 class DbtStyleTestsSpec extends SparkSuite {
   import DbtStyleTests._
@@ -23,11 +20,6 @@ class DbtStyleTestsSpec extends SparkSuite {
       lit(ingestedAt).cast("timestamp"), cacheShared)
 
   private lazy val w = fixtureWarehouse("2026-02-23 12:00:00", cacheShared = true)
-
-  override def afterAll(): Unit = {
-    Seq(w.valid, w.stg).foreach(_.unpersist())
-    super.afterAll()
-  }
 
   /** The schema.yml roster, test by test, through the single-test functions. */
   private def reference(w: Warehouse): Seq[TestResult] = {
@@ -145,29 +137,9 @@ class DbtStyleTestsSpec extends SparkSuite {
       Set("not_null", "unique", "accepted_values", "relationships"))
   }
 
-  /** Names of the SQL actions `body` runs, in order. */
-  private def sqlActions(body: => Unit): Seq[String] = {
-    val seen = new LinkedBlockingQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.add(funcName)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        seen.add(funcName)
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      // listener events arrive in order, so once this sentinel's is seen,
-      // every action of `body` has been reported
-      spark.range(1).tail(1)
-      Iterator.continually(seen.poll(30, TimeUnit.SECONDS))
-        .takeWhile(name => { assert(name != null, "no listener event in 30 s"); name != "tail" })
-        .toSeq
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   test("the suite is one SQL action") {
-    assert(sqlActions(suite(w)) == Seq("collect"))
+    val built = w // building the warehouse checkpoints its models: one action each
+    assert(sqlActions(suite(built)) == Seq("collect"))
   }
 
   test("the suite leaves every warehouse frame at the storage level it found") {
@@ -183,8 +155,15 @@ class DbtStyleTestsSpec extends SparkSuite {
       suite(wh)
       assert(levels(wh) == before)
     }
-    assert(Seq(shared.stg, shared.valid).forall(_.storageLevel.useMemory))
+    // the ten shared models (every frame but raw) are still checkpointed
+    // leaves whose blocks are kept
+    val persisted = spark.sparkContext.getPersistentRDDs
+    shared.productIterator.drop(1).map(_.asInstanceOf[DataFrame]).foreach { df =>
+      df.queryExecution.analyzed match {
+        case leaf: LogicalRDD => assert(persisted.contains(leaf.rdd.id))
+        case other => fail(s"not a checkpointed leaf: $other")
+      }
+    }
     assert(levels(plain).forall(!_.isValid))
-    Seq(shared.valid, shared.stg).foreach(_.unpersist())
   }
 }

@@ -8,8 +8,9 @@
 #   2. the default fast tier: the execution-config parity tier
 #      (AqeParitySpec, 18 representative queries x 3 configs — the full
 #      116-query sweep runs with GRAFT_FULL_PARITY=true once per round / on
-#      the final binary) and the pipeline path (DbtStyleTestsSpec,
-#      PipelineSpec),
+#      the final binary) and the pipeline path (RawLoaderSpec,
+#      DbtStyleTestsSpec, PipelineSpec, and WarehouseReplaySpec and
+#      WarehouseCheckpointSpec on the checkpointed warehouse),
 #   3. graft.Verify at sf0.01 + the DuckDB oracle compare (the real gate).
 #
 # Total ~10 min on this host. (Since r11 the FULL battery is also cheap —
@@ -19,7 +20,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SUITES=("$@")
-TESTONLY="graft.coverage.AqeParitySpec graft.quality.DbtStyleTestsSpec graft.pipeline.PipelineSpec"
+TESTONLY="graft.coverage.AqeParitySpec graft.ingest.RawLoaderSpec graft.quality.DbtStyleTestsSpec graft.pipeline.PipelineSpec graft.models.WarehouseReplaySpec graft.models.WarehouseCheckpointSpec"
 for s in "${SUITES[@]:-}"; do
   [[ -n "$s" ]] && TESTONLY="$TESTONLY $s"
 done
