@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
  * prints one JSON line (driver contract).
@@ -13,72 +11,41 @@ import org.apache.spark.sql.SparkSession
  * — end to end. This mirrors the DuckDB baseline's warm repeat-runs (OS page
  * cache + buffer manager + cached catalog).
  *
- * AQE is OFF by default here (SPARK_GRAFT_AQE to override): at bench scale
- * its stage-materialization barriers add fixed latency per query that swamps
- * sub-second stages; measured neutral-to-worse across the width sweep. At
- * 100 TB with real shuffles the trade-off reverses — production sessions
- * should enable AQE for skew-join splitting and partition coalescing.
+ * The session is [[Session]]'s (width, AQE and codec choices live there).
  *
- * Flagship floor (j2_role_playing_join, sf0.1): 0.235 s min-of-10 in
- * isolation (graft.tools.Probe), invariant across shuffle widths 4-16. The
- * plan is already the target shape — zero-Exchange ShuffledHashJoin on the
- * orderkey-co-partitioned cached fact tables, all four dims broadcast,
- * partial+final agg, coalesce(1) in place of a range-partitioned sort — so
- * the residual vs DuckDB's ~0.05 s is local-mode fixed cost (per-execution
- * broadcast-build jobs and stage scheduling under host CPU steal), not a
- * missing optimization; on a real cluster the same plan amortizes those
- * barriers over seconds-long stages. Numbers in the bench JSON read higher
- * than the isolated floor when the interleaved passes contend with the
- * multi-second 10× scaling queries.
+ * Flagship floor (j2_role_playing_join, sf0.1): 0.235 s isolated min-of-10,
+ * invariant across shuffle widths 4-16. The plan is already the target shape
+ * — zero-Exchange ShuffledHashJoin on the orderkey-co-partitioned cached
+ * fact tables, all four dims broadcast, partial+final agg, coalesce(1) in
+ * place of a range-partitioned sort — so the residual vs DuckDB's ~0.05 s is
+ * local-mode fixed cost (per-execution broadcast-build jobs and stage
+ * scheduling under host CPU steal), not a missing optimization; on a real
+ * cluster the same plan amortizes those barriers over seconds-long stages.
+ * Numbers in the bench JSON read higher than the isolated floor when the
+ * interleaved passes contend with the multi-second 10× scaling queries.
  *
- * Skew-join floor (j_skew_salted, sf0.1): 0.52/0.54 s min-of-10 in
- * isolation (graft.tools.SkewAB, two quiet windows, loadavg 2.8/3.4),
- * with the full variant ladder pinning the attribution: targeted 0.52,
- * detection-free salting 0.28, blanket salting 0.26-0.30, plain join 0.26,
- * plain+SHJ 0.28-0.32 (result sets machine-checked equal across variants
- * before timing). The ~0.25 s delta between targeted and detection-free is
- * ENTIRELY the hot-key detection chain — sample → count → collect →
- * broadcast is three serialized job barriers over a ~6k-row sample, a
- * fixed local stage cost; the salting machinery itself adds ~0.01-0.03 s
- * over a plain join (negative stage-collapse A/B). Collapsing detection
- * into blanket salting would halve the LOCAL floor but replicates the dim
- * 4x on EVERY key — at 100 TB the targeted form's bounded sample +
- * broadcast mark is the scale-correct trade, and its fixed barriers
- * amortize over seconds-long stages exactly like j2's. DuckDB's 0.125 s on
- * the same query is the single-process floor with none of those barriers.
+ * Skew-join floor (j_skew_salted, sf0.1): 0.52/0.54 s isolated min-of-10
+ * (r13, two quiet windows, loadavg 2.8/3.4), with the full variant ladder
+ * pinning the attribution: targeted 0.52, detection-free salting 0.28,
+ * blanket salting 0.26-0.30, plain join 0.26, plain+SHJ 0.28-0.32 (result
+ * sets machine-checked equal across variants before timing). The ~0.25 s
+ * delta between targeted and detection-free is ENTIRELY the hot-key
+ * detection chain — sample → count → collect → broadcast is three serialized
+ * job barriers over a ~6k-row sample, a fixed local stage cost; the salting
+ * machinery itself adds ~0.01-0.03 s over a plain join (negative
+ * stage-collapse A/B). Collapsing detection into blanket salting would halve
+ * the LOCAL floor but replicates the dim 4x on EVERY key — at 100 TB the
+ * targeted form's bounded sample + broadcast mark is the scale-correct
+ * trade, and its fixed barriers amortize over seconds-long stages exactly
+ * like j2's. DuckDB's 0.125 s on the same query is the single-process floor
+ * with none of those barriers.
  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle width: re-swept late round 4 after the multi-second text
-    // queries joined the set. The original sweep over sub-second queries
-    // favored 6-8 (totals 8.7/8.4/8.5/10.5/16.1 s at w=4/6/8/16/32 — task
-    // launch cost dominates megabyte partitions), but the LM/curation
-    // queries explode ~3M rows and were width-starved at 8: w=8 vs w=16
-    // full-set totals 44.4 vs 33.7 s — the small queries pay ≤ 0.1 s each
-    // while t_lm_perplexity_10x halves (15.5 → 7.6) and t_curation_pipeline
-    // drops 6.5 → 2.5. Width 16 is the better global trade now.
-    // Production sessions size this to cluster cores.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", math.min(cpus.toInt, 16).toString)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", aqe)
-      // Latency trims for sub-second stages over megabyte-scale data: codec
-      // startup per shuffle block costs more than the bytes it saves, both
-      // on the shuffle path and in the cached-table columnar store.
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.broadcast.compress", "false")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create()
+    val cpus = spark.sparkContext.defaultParallelism
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
     // Prepared-statement model: each query's DataFrame (analysis +
     // optimization + physical planning) is built ONCE; timed passes measure
@@ -182,7 +149,7 @@ object Bench {
     // suspect_cpus_ignored; the stamp plus the x_scaling_probe row make the
     // parallelism signal checkable from the parsed line alone.
     val jsonLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":${cpus.toInt},"shuffle_partitions":${shufflePartitions.toInt},"queries":$qs,"failed":$failedJson,"sf":$sfJson,"loadavg1":$load1}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"shuffle_partitions":$shufflePartitions,"queries":$qs,"failed":$failedJson,"sf":$sfJson,"loadavg1":$load1}"""
     // The driver records only the LAST 2000 characters of stdout and tries
     // to parse one JSON line out of that tail (BENCH_r01..r13 all carry
     // `"tail": <2000 chars>, "parsed": null` — the full 128-query line is
@@ -205,7 +172,7 @@ object Bench {
     val fixed =
       s""","n_queries":${results.size},"full":"bench_out.json","n_failed":${failed.size},"failed":$failedCompact,"sf":$sfJson,"loadavg1":$load1}"""
     val head =
-      s"""{"metric":"total","value":${math.round(total * 1000) / 1000.0},"unit":"sec","cpus":${cpus.toInt},"shuffle_partitions":${shufflePartitions.toInt},"queries":{"""
+      s"""{"metric":"total","value":${math.round(total * 1000) / 1000.0},"unit":"sec","cpus":$cpus,"shuffle_partitions":$shufflePartitions,"queries":{"""
     val budget = 1700 - fixed.length - head.length
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     var used = 0

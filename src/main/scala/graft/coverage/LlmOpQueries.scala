@@ -288,11 +288,7 @@ object LlmOpQueries {
    * LSH workload, not a 10-way duplicate cluster (exact copies would grow
    * candidate pairs quadratically by construction and measure nothing).
    */
-  // private[graft] (r14 advice): graft.tools.MicroAB re-implemented this
-  // construction by hand and had already silently drifted (suffix concat vs
-  // the per-token rewrite) — the A/B tool must measure the workload the
-  // declared queries actually run
-  private[graft] def nearDupCorpus10x(s: SparkSession, dir: String): DataFrame =
+  private def nearDupCorpus10x(s: SparkSession, dir: String): DataFrame =
     matInput(s, dir, "corpus_neardup10x") {
       val base = nearDupCorpus(s, dir)
       (0 until 10).map { k =>

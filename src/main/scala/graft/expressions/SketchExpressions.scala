@@ -840,13 +840,13 @@ case class NormalizeVectorExpr(child: Expression)
  * spec (ShinglesExprSpec pins both on the corner fixtures).
  *
  * Why (r14 optimization round): shingling is the shared leading cost of
- * every sketch query — MicroAB measured the HOF chain at 0.6 s of the 0.8 s
- * tokens→shingles step over the 55k-doc corpus (vs ~0.05 s for the md5/
- * xxhash64 hashing it feeds), because each of the ~n shingles pays an
- * interpreted lambda walk, a `slice` array allocation, and a generic
- * `concat_ws` dispatch, then `array_distinct` re-walks the result. One
- * imperative loop with a LinkedHashSet does the same work in O(total
- * bytes).
+ * every sketch query — an isolated stagewise min-of-5 measured the HOF
+ * chain at 0.6 s of the 0.8 s tokens→shingles step over the 55k-doc corpus
+ * (vs ~0.05 s for the md5/xxhash64 hashing it feeds), because each of the
+ * ~n shingles pays an interpreted lambda walk, a `slice` array allocation,
+ * and a generic `concat_ws` dispatch, then `array_distinct` re-walks the
+ * result. One imperative loop with a LinkedHashSet does the same work in
+ * O(total bytes).
  *
  * Semantics replicated exactly, including the documented short-doc
  * fallback (fewer than k tokens ⇒ ONE truncated shingle — the whole text)

@@ -175,12 +175,12 @@ object ConnectedComponents {
     // edge plan FOUR times, so every `sym` reference in an unrolled plan
     // inlined the whole upstream pair pipeline ×4 — the driver-side
     // re-analysis of that tree was ~0.5 s of every cluster_assign/keep_best
-    // execution (StageProf non-job wall). The explode emits (u,v), (v,u),
-    // (u,u), (v,v) in a single generator pass; self-loops now repeat per
-    // edge OCCURRENCE rather than once per node, which is harmless — like
-    // duplicate edges, they only re-send the same min into an idempotent
-    // aggregate — and the node-distinct SHUFFLE disappears outright
-    // (guide §2.4). ConnectedComponentsSpec pins label equality with
+    // execution (wall outside any job in a per-stage profile). The explode
+    // emits (u,v), (v,u), (u,u), (v,v) in a single generator pass; self-loops
+    // now repeat per edge OCCURRENCE rather than once per node, which is
+    // harmless — like duplicate edges, they only re-send the same min into an
+    // idempotent aggregate — and the node-distinct SHUFFLE disappears
+    // outright (guide §2.4). ConnectedComponentsSpec pins label equality with
     // union-find on mixed/duplicate/chain graphs for both entry points.
     val e = edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"))

@@ -348,7 +348,7 @@ object Dedup {
     * oracles replay in SQL). The HOF chain pays an interpreted lambda +
     * slice allocation + generic concat_ws per shingle plus an
     * array_distinct re-walk — measured as the leading cost of every sketch
-    * query (MicroAB, r14). */
+    * query (isolated stagewise min-of-5, r14). */
   private[graft] def shinglesOfTokensHof(toks: Column, k: Int = 3): Column =
     array_distinct(transform(
       sequence(lit(1), greatest(size(toks) - (k - 1), lit(1))),

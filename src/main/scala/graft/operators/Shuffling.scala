@@ -83,12 +83,12 @@ object Shuffling {
    * wide exchange for mix+rank+layout instead of two. What it costs: the
    * ranking pass is a `mapPartitions` outside whole-stage codegen — per-row
    * ser/de where the Window version stays in Tungsten. Measured
-   * (WriteShuffleAB, NOTES_r10): a WASH at single-node sf0.1/sf1 where the
-   * parquet write dominates; the deleted exchange is network+spill of the
-   * FULL corpus, which is what matters on a real cluster, so the write
-   * path keeps this form. For an in-plan consumer the A/B was ~10%
-   * negative — [[graft.operators.Mixing.mixShuffled]] keeps the Window
-   * form.
+   * (alternating reps, min per variant, NOTES_r10): a WASH at single-node
+   * sf0.1/sf1 where the parquet write dominates; the deleted exchange is
+   * network+spill of the FULL corpus, which is what matters on a real
+   * cluster, so the write path keeps this form. For an in-plan consumer the
+   * A/B was ~10% negative — [[graft.operators.Mixing.mixShuffled]] keeps the
+   * Window form.
    */
   def shuffledLocalRank(df: DataFrame, keyCol: String, seed: String,
                         nShards: Int): DataFrame = {

@@ -109,13 +109,14 @@ object SkewJoin {
     // total-as-crossJoin(broadcast(agg)) form nested a broadcast build
     // inside the hot-list broadcast build — sample scan → total broadcast →
     // hot broadcast → main join, three SERIALIZED driver barriers, measured
-    // as ~half the query's isolated floor (SkewAB ladder: targeted 0.52 s
-    // vs detection-free 0.28 s). The sample total is instead an unpartitioned
-    // window sum over the GROUPED counts — per-key rows of a bounded sample,
-    // a few thousand rows on one task — so the whole hot-key list builds in
-    // the one job that broadcasts it. Same counts, same threshold, same hot
-    // set; and salting any subset of keys is result-preserving anyway
-    // (SkewJoinSpec + the SkewAB machine-check pin result equality).
+    // as ~half the query's isolated floor (r13 isolated min-of-10 variant
+    // ladder: targeted 0.52 s vs detection-free 0.28 s). The sample total is
+    // instead an unpartitioned window sum over the GROUPED counts — per-key
+    // rows of a bounded sample, a few thousand rows on one task — so the
+    // whole hot-key list builds in the one job that broadcasts it. Same
+    // counts, same threshold, same hot set; and salting any subset of keys is
+    // result-preserving anyway (SkewJoinSpec pins result equality against
+    // blanket and plain joins).
     val hot = grouped
       .withColumn("__n", sum(col("__c")).over(
         Window.partitionBy().rowsBetween(

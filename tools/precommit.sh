@@ -30,5 +30,7 @@ sbt -batch "testOnly $TESTONLY"
 
 echo "== 3/3: Verify sf0.01 + oracle compare =="
 OUT=$(mktemp -d /tmp/graft_precommit.XXXXXX)
-./run-main.sh graft.Verify /root/testdata/sf0.01 "$OUT" >/dev/null 2>&1
-python3 tools/compare_oracle.py /root/testdata/sf0.01 "$OUT" | tail -2
+# keep Verify's per-query failure lines and every non-OK compare line; a
+# failing Verify or compare still fails the script through pipefail
+./run-main.sh graft.Verify /root/testdata/sf0.01 "$OUT" 2>&1 | { grep '^\[verify\]' || true; }
+python3 tools/compare_oracle.py /root/testdata/sf0.01 "$OUT" | { grep -Ev ' OK$|^$' || true; }
