@@ -52,10 +52,10 @@ object Bench {
     // execution. Each noop-sink write plans a fresh write job over the cached
     // logical plan, so every timed run re-executes all stages — shuffles
     // included — from the persisted session tables. The only frames
-    // persisted beyond the input tables are the dedup operators' internal
-    // sketch intermediates (multi-consumer within one plan, like a SQL
-    // engine's materialized CTE); resetDerivedCaches() below invalidates
-    // them before every timed pass, so each pass pays that computation once
+    // persisted beyond the inputs are the intermediates the operators stage
+    // on Materializer.library (multi-consumer within one plan, like a SQL
+    // engine's materialized CTE); library.reset() below invalidates them
+    // before every timed pass, so each pass pays that computation once
     // rather than the first pass filling a cache the rest re-read.
     // SPARK_GRAFT_ONLY: comma-separated query-name filter for isolated
     // profiling runs; absent → the full set (the driver's mode).
@@ -96,7 +96,7 @@ object Bench {
     for (pass <- 1 to 5) {
       // derived results (sketch frames) recompute fresh in every pass;
       // the input-table buffer pool stays warm (BASELINE.md §d methodology)
-      graft.coverage.LlmOpQueries.resetDerivedCaches()
+      Materializer.library.reset()
       for (name <- names) {
         // multi-second queries (the 10× scaling runs) get 2 timed passes,
         // not 5 — steal noise is proportionally small on them, and the
@@ -190,8 +190,7 @@ object Bench {
     } catch { case t: Throwable =>
       System.err.println(s"[Bench] could not write bench_out.json: $t")
     }
-    graft.coverage.OperatorQueries.clearCache()
-    graft.coverage.LlmOpQueries.clearCache()
+    Materializer.library.close()
     spark.stop()
   }
 }

@@ -29,8 +29,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.coverage.OperatorQueries.clearCache()
-    graft.coverage.LlmOpQueries.clearCache()
+    Materializer.library.close()
     spark.stop()
   }
 }

@@ -26,22 +26,19 @@ import org.apache.spark.sql.types.DecimalType
  */
 object OperatorQueries {
 
-  // Memoized per-(session, dir) readers: re-building a reader re-lists the
-  // path and re-reads the parquet footer on every query — pure fixed overhead
-  // when the same 10 tables serve dozens of queries per run. Scope: one
-  // Verify/Bench run — the mains call clearCache() before session stop; a
-  // long-lived embedding JVM should do the same between corpora (the map
-  // holds session-keyed persisted frames and would otherwise serve stale
-  // file listings if the directory changes).
-  private val tableCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+  // Memoized per-(session, dir) readers on the library's handle: re-building
+  // a reader re-lists the path and re-reads the parquet footer on every
+  // query — pure fixed overhead when the same 10 tables serve dozens of
+  // queries per run. Scope: one Verify/Bench run — the mains close the
+  // handle before session stop; a long-lived embedding JVM should do the
+  // same between corpora (the memos hold session-keyed persisted frames and
+  // would otherwise serve stale file listings if the directory changes).
+  private def memo[T](s: SparkSession, dir: String, key: String)(build: => T): T =
+    graft.Materializer.library.input(("OperatorQueries", s, dir, key))(build)
 
-  /** Drop every memoized reader and release its persisted storage. */
-  def clearCache(): Unit = {
-    tableCache.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    tableCache.clear()
-    keyedWidthCache.clear()
-  }
+  /** [[graft.Materializer.library]]`.close()`. Kept for the perfbench
+    * harness (`LibraryWorkload`), which calls it. */
+  def clearCache(): Unit = graft.Materializer.library.close()
 
   /**
    * Physical layout key per fact table: the dominant join/grouping key its
@@ -72,7 +69,7 @@ object OperatorQueries {
   private val boundedDims = Set("region", "nation", "supplier", "customer", "part")
 
   private[graft] def T(s: SparkSession, dir: String, name: String): DataFrame =
-    tableCache.getOrElseUpdate((s, dir, name), {
+    memo(s, dir, name) {
       val df =
         if (name == "events") events(s, dir)
         else s.read.parquet(s"$dir/$name.parquet")
@@ -130,7 +127,7 @@ object OperatorQueries {
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         }
       } else df
-    })
+    }
 
   /** Shared hash-partition width for ALL keyed caches of one sf dir (widths
     * must MATCH across co-joined tables or the smaller side re-shuffles):
@@ -139,17 +136,14 @@ object OperatorQueries {
     * old max-outside-min form returned 4 when the session width was
     * smaller, handing downstream width-2 stages a width-4 cache and
     * forcing the exact re-Exchange the shared width exists to avoid). */
-  private val keyedWidthCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
-
   private def keyedWidth(s: SparkSession, dir: String): Int =
-    keyedWidthCache.getOrElseUpdate((s, dir), {
+    memo(s, dir, "keyed_width") {
       val maxBytes = layoutKey.keysIterator
         .map(t => fileSize(s, s"$dir/$t.parquet")).max
       val sessionWidth = s.sessionState.conf.numShufflePartitions.toLong
       math.min(sessionWidth,
         math.max(4L, maxBytes / (2L * 1024 * 1024))).toInt
-    })
+    }
 
   private def fileSize(s: SparkSession, path: String): Long =
     try {
@@ -464,7 +458,7 @@ object OperatorQueries {
     // consumer). Same per-pass-reset CTE idiom as the sketch frames; at
     // scale this is the difference between N and 2^N merge executions for
     // an N-batch chain.
-    val s1 = graft.operators.Dedup.persistTracked(
+    val s1 = graft.Materializer.library.stage(
       ScdMerge.scd2Apply(init, b1, "c_custkey", attrs,
         lit("2024-02-01 00:00:00")))
     val b2 = cust
@@ -1006,7 +1000,7 @@ object OperatorQueries {
    * claim this query exists to measure.
    */
   def wSessionize10x(s: SparkSession, dir: String): DataFrame = {
-    val rep = tableCache.getOrElseUpdate((s, dir, "events10x"), {
+    val rep = memo(s, dir, "events10x") {
       val e = T(s, dir, "events").select("user_id", "ts", "event_id")
       (0 until 10).map { k =>
         e.select((col("user_id") + lit(k * 1000000L)).as("user_id"),
@@ -1014,7 +1008,7 @@ object OperatorQueries {
       }.reduce(_ unionByName _)
         .repartition(s.sessionState.conf.numShufflePartitions, col("user_id"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
     graft.operators.Sessionize
       .sessionStats(rep, "user_id", "ts", "event_id", gapSeconds = 4L * 3600)
       .agg(count(lit(1)).as("n_sessions"),

@@ -114,8 +114,8 @@ object ConnectedComponents {
    * exponential jump tree.
    *
    * `stage`: materializer applied to the symmetrized edge list, which every
-   * round references (the callers pass [[Dedup.persistTracked]], the same
-   * per-pass-reset CTE idiom every sketch frame uses) so it computes once
+   * round references (the callers pass [[graft.Materializer.stage]], the
+   * same per-pass-reset CTE idiom every sketch frame uses) so it computes once
    * per execution, not once per round. Default `identity` keeps the plan
    * persistence-free.
    */

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.Materializer.library
 
 /**
  * Deduplication operators for training-data pipelines, each designed around
@@ -24,112 +24,12 @@ object Dedup {
 
   import graft.text.TextAnalysis.tokens
 
-  // Sketch frames are persisted because each feeds two consumers (bucket
-  // pruning + the pair join / verify re-attach); every persisted handle is
-  // tracked here so long-lived sessions can release executor storage between
-  // corpora — at 100 TB a leaked sketch cache pins real memory.
-  private val persistedFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  // Thread-local PRIVATE scope (r12 review): a foreachBatch body that
-  // drained the session-GLOBAL queue in its finally (unpersistSketches)
-  // would, when two streams share one SparkSession, unpersist the OTHER
-  // query's in-flight frames mid-batch — nondeterministic recompute storms
-  // under load. A scope captures the frames persisted inside it on the
-  // scope's thread AND (r13 review — the ThreadLocal version silently
-  // dropped these to the global queue) on any thread SPAWNED inside the
-  // scope, via InheritableThreadLocal: a future or parallel collection
-  // forked within the body follows its scope. Registrations from a thread
-  // created BEFORE the scope opened (a pre-existing pool) fall back to the
-  // session-global queue, released by [[unpersistSketches]] — a deferred
-  // release, not a cross-scope unpersist. RESIDUAL (r13 second pass):
-  // inheritance is stamped at THREAD CREATION, so a lazily-growing SHARED
-  // pool whose first growth happens inside scope A mints threads that
-  // carry A's scope for life — work query B runs on such a thread WHILE
-  // A's scope is still open registers into A's scope and is unpersisted at
-  // A's drain (a recompute for B, not a wrong answer; after A closes, the
-  // closed-flag divert routes such strays to the global queue). Parallel
-  // work inside a scope should therefore use scope-local threads (as the
-  // micro-batch bodies here do), not a shared lazily-initialized pool.
-  private final class SketchScope {
-    val frames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    @volatile var closed = false
-  }
-
-  private val localScope = new InheritableThreadLocal[SketchScope]()
-
-  /** Run `body` with a private tracking scope: every [[persistTracked]]
-    * frame created during `body` on this thread or a thread it spawns is
-    * unpersisted on exit (after the body's actions completed), and the
-    * session-global queue — other concurrent queries' frames — is left
-    * untouched. A straggler thread outliving the scope falls back to the
-    * global queue (the scope is closed before draining), so its frame is
-    * still released by [[unpersistSketches]] rather than leaking. */
-  private[graft] def withScopedSketches[T](body: => T): T = {
-    val prev = localScope.get()
-    val mine = new SketchScope
-    localScope.set(mine)
-    try body
-    finally {
-      localScope.set(prev)
-      mine.closed = true // late registrations divert to the global queue
-      var df = mine.frames.poll()
-      while (df != null) {
-        try df.unpersist() catch { case _: Throwable => () }
-        df = mine.frames.poll()
-      }
-    }
-  }
-
-  // package-visible: other multi-consumer derived frames (e.g. the LM-score
-  // model tables) reuse the same tracking so the bench's per-pass cache
-  // reset and session release cover them too
-  private[graft] def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    val scope = localScope.get()
-    if (scope != null && !scope.closed) {
-      scope.frames.add(p)
-      // close() may have raced between the check and the add; if the drain
-      // already polled the frame it is released, otherwise reclaim it for
-      // the global queue (poll/remove hand off each element exactly once)
-      if (scope.closed && scope.frames.remove(p)) persistedFrames.add(p)
-    } else persistedFrames.add(p)
-    p
-  }
-
-
-  /** Release every sketch frame persisted by the dedup operators. Call after
-    * the consuming actions complete (e.g. once per corpus in a service). */
-  def unpersistSketches(): Unit = {
-    var df = persistedFrames.poll()
-    while (df != null) {
-      try df.unpersist() catch { case _: Throwable => () }
-      df = persistedFrames.poll()
-    }
-  }
-
-  /** Drop each tracked sketch frame's cached data but keep it marked for
-    * re-persistence, so the NEXT action over it repopulates the cache. Bench
-    * calls this between timed passes: each pass then pays its own sketch
-    * computation exactly once (the per-execution CTE-materialization
-    * semantics a SQL engine gives these intermediates), instead of the first
-    * pass paying and later passes reading a warm result. */
-  def resetSketchCache(): Unit = {
-    persistedFrames.forEach { df =>
-      // Separate try blocks: if unpersist succeeds but re-persist fails, the
-      // frame would silently stay uncached for all remaining bench passes,
-      // changing what later passes measure — make that visible.
-      try df.unpersist(blocking = true) catch {
-        case t: Throwable =>
-          System.err.println(s"[Dedup.resetSketchCache] unpersist failed: $t")
-      }
-      try df.persist(StorageLevel.MEMORY_AND_DISK) catch {
-        case t: Throwable =>
-          System.err.println(
-            s"[Dedup.resetSketchCache] re-persist failed (frame will recompute uncached): $t")
-      }
-    }
-  }
+  // Frames that feed two or more consumers (sketches, gram streams, the
+  // components edge list) are staged on the operator library's handle, so a
+  // long-lived session releases their executor storage when it closes the
+  // handle — at 100 TB a leaked sketch cache pins real memory. A caller that
+  // owns its frames (a streaming micro-batch) stages the shared sketch on its
+  // own handle and passes it in as `precomputedSketch`.
 
   /** Stable 128-bit content fingerprint (hash the fingerprint, shuffle 16
     * bytes instead of multi-KB documents). */
@@ -223,11 +123,11 @@ object Dedup {
     // per-doc re-join), and nothing upstream is materialized — without
     // staging, the whole tokenize → shingle → explode → hash pipeline
     // re-executes per consumer, i.e. the corpus is scanned and re-tokenized
-    // twice per run (r14 measurement: ~30% of the query). Same
-    // persistTracked CTE idiom as [[exciseDuplicateSpans]]'s toks frame; in
+    // twice per run (r14 measurement: ~30% of the query). Same staged
+    // CTE idiom as [[exciseDuplicateSpans]]'s toks frame; in
     // hashGrams mode the cached rows are (id, long) — far narrower than the
     // documents they derive from.
-    val grams = persistTracked(gramsRaw.select(col(idCol),
+    val grams = library.stage(gramsRaw.select(col(idCol),
       (if (hashGrams) xxhash64(col("__g")) else col("__g")).as("gram")))
     // a gram is a cross-document duplicate iff it occurs under ≥2 distinct
     // ids; grams are per-doc distinct, so plain count == distinct-doc count
@@ -276,7 +176,7 @@ object Dedup {
    */
   def exciseDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
                            n: Int = 8, hashGrams: Boolean = true): DataFrame = {
-    val toks = persistTracked(
+    val toks = library.stage(
       df.select(col(idCol), tokens(col(textCol)).as("__toks")))
     // positional grams: (id, start, content-key); docs shorter than n emit
     // none (sequence() would count DOWN on a negative span — guard it out)
@@ -416,7 +316,7 @@ object Dedup {
     // array is pruned BEFORE the persist (this entry point verifies by
     // signature agreement, not exact Jaccard), so the cache holds
     // (id, sig) only — never the wide shingle arrays.
-    val sig = persistTracked(
+    val sig = library.stage(
       sketchFrame(df, idCol, textCol, numHashes).select(col("id"), col("sig")))
 
     // NOT staged (r14 A/B): the band stream is referenced three times per
@@ -500,8 +400,8 @@ object Dedup {
    * [[bandIndex]] (their `precomputedSketch` parameters) is how a caller
    * that feeds the same documents to several of them — the per-batch hot
    * loop of [[graft.streaming.StreamingDedup]] — pays the sketch exactly
-   * once instead of once per entry point. Callers persist it themselves
-   * ([[persistTracked]]) since it feeds multiple consumers.
+   * once instead of once per entry point. Callers stage it themselves
+   * ([[graft.Materializer.stage]]) since it feeds multiple consumers.
    *
    * `hashShingles` maps the shingle ARRAY to its 64-bit hash array —
    * per-element xxhash64 by default,
@@ -567,7 +467,7 @@ object Dedup {
     require(precomputedSketch.isEmpty || !portableHashing,
       "precomputedSketch carries xxhash64 signatures; portableHashing builds md5 ones")
     val sig = precomputedSketch.map(requireSketchHashes(_, numHashes))
-      .getOrElse(persistTracked(
+      .getOrElse(library.stage(
         if (portableHashing)
           // array-level portable hasher (r14): one pass, no per-element
           // lambda walk or hex/radix string round-trip — value-identical to
@@ -650,7 +550,7 @@ object Dedup {
     // `precomputedSketch`: a [[sketchFrame]] of `incoming` the caller already
     // computed and persisted — the batch is then sketched zero times here.
     val inc = precomputedSketch.map(requireSketchHashes(_, numHashes))
-      .getOrElse(persistTracked(sketchFrame(incoming, idCol, textCol, numHashes)))
+      .getOrElse(library.stage(sketchFrame(incoming, idCol, textCol, numHashes)))
     val incBands = bandRows(inc.select("id", "sig"), numHashes, bands)
     // Skew guard on the CORPUS side (r11 review — this entry point was the
     // only LSH path without one): an over-full corpus bucket is a
@@ -668,7 +568,7 @@ object Dedup {
     // re-sketched once per reference. A caller-supplied corpusBands is a
     // table/persisted frame already and is left untouched.
     val corpusIdx = pruneFullBuckets(
-      corpusBands.getOrElse(persistTracked(
+      corpusBands.getOrElse(library.stage(
         bandIndex(corpus, idCol, textCol, numHashes, bands))),
       Seq("band", "band_hash"), maxBucketSize)
 
@@ -751,12 +651,12 @@ object Dedup {
       numHashes, bands, maxBucketSize)
     val comp =
       if (unrolledRounds > 0)
-        // stage = persistTracked: the symmetrized edge list materializes
+        // stage = library.stage: the symmetrized edge list materializes
         // once per execution instead of once per round — see
         // componentsUnrolled's scaladoc. Same per-pass-reset honesty
         // contract as every sketch frame.
-        ConnectedComponents.componentsUnrolled(persistTracked(pairs),
-          "id_a", "id_b", unrolledRounds, persistTracked)
+        ConnectedComponents.componentsUnrolled(library.stage(pairs),
+          "id_a", "id_b", unrolledRounds, library.stage)
       else ConnectedComponents.components(pairs, "id_a", "id_b")
     base
       .join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
@@ -897,7 +797,7 @@ object Dedup {
       // directly as its eight 16-bit chunks (see SimHashHexChunksExpr).
       // Same shuffle shape — 8 small chunk rows per document — and the
       // DuckDB oracle replays chunks, buckets, pairs, and Hamming exactly.
-      val sk = persistTracked(
+      val sk = library.stage(
         df.select(col(idCol).as("id"),
           // fused tokens→md5→chunks (r15): one pass, no interpreted
           // per-token md5 lambda or hex round-trip — bit-identical to
@@ -918,7 +818,7 @@ object Dedup {
         Seq("hamming" -> ham))
         .filter(col("hamming") <= maxHamming)
     } else {
-      val sk = persistTracked(
+      val sk = library.stage(
         df.select(col(idCol).as("id"), simhash128(col(textCol)).as("sk")))
       val chunked = simhashChunks(sk, maxBucketSize)
       bucketSelfPairs(chunked, Seq("chunk", "chunk_val"),
@@ -954,7 +854,7 @@ object Dedup {
   def simhashVerifiedPairs(
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, maxBucketSize: Int = 256): DataFrame = {
-    val sk = persistTracked(
+    val sk = library.stage(
       df.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
         .select(col("id"), shinglesOfTokens(col("toks")).as("sh"),
           graft.expressions.SketchExpressions.simhash128(

@@ -76,7 +76,7 @@ object HeavyHitters {
     // the scans (ADVICE r7). The concurrent default keeps the lazy def —
     // its two scans are intentional (see the param doc above).
     lazy val groupedPersisted =
-      Dedup.persistTracked(toks.groupBy("w").agg(count(lit(1)).as("n")))
+      graft.Materializer.library.stage(toks.groupBy("w").agg(count(lit(1)).as("n")))
     def grouped =
       if (sketchFromGrouped) groupedPersisted
       else toks.groupBy("w").agg(count(lit(1)).as("n"))

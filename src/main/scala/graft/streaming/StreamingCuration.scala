@@ -1,8 +1,11 @@
 package graft.streaming
 
+import scala.util.Using
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.Materializer
 import graft.text.{FilterCascade, LmScore}
 
 /**
@@ -41,10 +44,13 @@ object StreamingCuration {
 
   /** One micro-batch: cascade → frozen-model LM score → split keep/drop.
     * Factored out of the closure so batch semantics are testable without a
-    * streaming harness. Returns (kept, dropped-with-reason). */
+    * streaming harness. Returns (kept, dropped-with-reason); their shared
+    * stages are staged on `m`, which the caller closes once both are
+    * written. */
   private[streaming] def curateBatch(
       batch: DataFrame, idCol: String, textCol: String,
-      model: LmScore.BigramModel, maxNll: Double): (DataFrame, DataFrame) = {
+      model: LmScore.BigramModel, maxNll: Double,
+      m: Materializer): (DataFrame, DataFrame) = {
     val clashes = batch.columns.filter(reservedColumns.contains)
     require(clashes.isEmpty,
       s"batch columns ${clashes.mkString(", ")} collide with curation's " +
@@ -52,18 +58,16 @@ object StreamingCuration {
         s"recomputed metric instead of the source data. Reserved: " +
         s"${reservedColumns.mkString(", ")}")
     // Both returned frames are consumed by SEPARATE sink actions, and each
-    // stage below is referenced twice — persist the shared stages so one
+    // stage below is referenced twice — stage the shared ones so one
     // micro-batch runs the cascade and the LM scoring once, not ~4×
-    // (r11 review; the Dedup.persistTracked pattern StreamingDedup already
-    // uses — the caller releases via Dedup.unpersistSketches in a finally).
-    val decided = graft.operators.Dedup.persistTracked(
-      FilterCascade.gopherRecipe(batch, textCol))
+    // (r11 review).
+    val decided = m.stage(FilterCascade.gopherRecipe(batch, textCol))
     val cascadeDrop = decided.filter(!col("kept"))
       .select(col(idCol), col(textCol),
         col("drop_reason"), lit(null).cast("double").as("nll"))
     val survivors = decided.filter(col("kept"))
       .select(batch.columns.map(col): _*)
-    val scored = graft.operators.Dedup.persistTracked(
+    val scored = m.stage(
       LmScore.score(survivors, idCol, textCol, model, maxNll = maxNll))
     val kept = survivors.join(
       scored.filter(col("kept")).select(idCol), Seq(idCol), "left_semi")
@@ -98,17 +102,14 @@ object StreamingCuration {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // materialize the micro-batch once — it feeds the cascade AND the
         // two sink actions; without this each action re-reads the source.
-        // curateBatch's persisted stages are tracked in a PRIVATE scope
-        // (r12 review): the old global unpersistSketches() drain would
-        // unpersist a concurrent StreamingDedup batch's in-flight frames
-        // when both streams share one session.
-        val b = batch.persist()
-        graft.operators.Dedup.withScopedSketches {
-          try {
-            val (kept, dropped) = curateBatch(b, idCol, textCol, model, maxNll)
-            kept.write.mode("append").parquet(keptPath)
-            dropped.write.mode("append").parquet(droppedPath)
-          } finally b.unpersist()
+        // The batch and curateBatch's stages live on this batch's own handle
+        // (r12 review), so closing it cannot release a concurrent
+        // StreamingDedup batch's in-flight frames in the same session.
+        Using.resource(new Materializer) { m =>
+          val (kept, dropped) =
+            curateBatch(m.stage(batch), idCol, textCol, model, maxNll, m)
+          kept.write.mode("append").parquet(keptPath)
+          dropped.write.mode("append").parquet(droppedPath)
         }
       }
       .start()

@@ -1,8 +1,11 @@
 package graft.streaming
 
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.Materializer
 import graft.operators.Dedup
 
 /**
@@ -89,14 +92,13 @@ object StreamingDedup {
       threshold: Double, numHashes: Int, bands: Int,
       intraMaxBucketSize: Int = 256): Unit = {
     // The batch feeds two consumers (pair join + index append) and the
-    // shared sketch frame below is persisted; materialize the batch once so
-    // the source is not re-read per consumer. The sketch frames are tracked
-    // in a PRIVATE scope (r12 review): draining the session-global queue in
-    // the finally would unpersist a concurrently-running query's (e.g.
-    // StreamingCuration in the same session) in-flight frames mid-batch.
-    val b = batch.persist()
-    Dedup.withScopedSketches {
-    try {
+    // shared sketch frame below is staged; materialize the batch once so
+    // the source is not re-read per consumer. Both are staged on this
+    // batch's own handle (r12 review): releasing them cannot touch a
+    // concurrently-running query's (e.g. StreamingCuration in the same
+    // session) in-flight frames.
+    Using.resource(new Materializer) { m =>
+      val b = m.stage(batch)
       if (!b.isEmpty) {
         // ONE sketch per batch: tokenize/shingle/minhash is the hot per-row
         // pass, and the batch feeds THREE sketch consumers (cross pairs,
@@ -104,8 +106,7 @@ object StreamingDedup {
         // consumer an InMemoryTableScan over the same cache — machine-checked
         // by StreamingDedupSpec's sketch-count pin (exactly one cached
         // minhash relation, zero sketch computations outside it).
-        val sketch = Dedup.persistTracked(
-          Dedup.sketchFrame(b, idCol, textCol, numHashes))
+        val sketch = m.stage(Dedup.sketchFrame(b, idCol, textCol, numHashes))
         // corpus text: verify-side only (left_semi on collided ids). The
         // index covers the original corpus AND every previously accepted
         // batch, whose text lands in the same table via acceptNewDocs-style
@@ -199,9 +200,6 @@ object StreamingDedup {
         b.select(col(idCol), col(textCol))
           .write.mode("append").parquet(corpusPath)
       }
-    } finally {
-      b.unpersist()
     }
-    } // scope exit releases this batch's sketch frames, and only those
   }
 }

@@ -64,7 +64,7 @@ object Dsir {
       coalesce(targetPred, lit(false)).as("__is_t"),
       TextAnalysis.tokens(col(textCol)).as("__toks"))
     val base =
-      if (shareTokenize) Some(graft.operators.Dedup.persistTracked(base0))
+      if (shareTokenize) Some(graft.Materializer.library.stage(base0))
       else None
     val m = scalarSubquery(base.map(bigramPairRowFromToks(_, minCount))
       .getOrElse(bigramPairRow(docs, textCol, targetPred, minCount)))
@@ -114,13 +114,13 @@ object Dsir {
       TextAnalysis.tokens(col(textCol)).as("__toks"))
     // per-doc collapsed bigram/token streams (round-6 verdict item 1): the
     // explodes emit one row per DISTINCT per-doc bigram/token, counts final
-    val bg = graft.operators.Dedup.persistTracked(
+    val bg = graft.Materializer.library.stage(
       base.select(col("__is_t"),
           explode(graft.expressions.LmExpressions.bigram_counts(col("__toks"))).as("e"))
         .groupBy(col("e.w1").as("w1"), col("e.w2").as("w2"))
         .agg(sum(col("e.cnt")).as("c12_r"),
           sum(when(col("__is_t"), col("e.cnt")).otherwise(0L)).as("c12_t")))
-    val vRow = graft.operators.Dedup.persistTracked(
+    val vRow = graft.Materializer.library.stage(
       base.select(col("__is_t"), explode(map_keys(graft.expressions
           .SketchExpressions.term_counts(col("__toks")))).as("w"))
         .agg(count_distinct(col("w")).as("v_r"),

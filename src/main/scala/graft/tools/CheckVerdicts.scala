@@ -33,8 +33,7 @@ object CheckVerdicts {
         .filter(!col("within_bound")).count()
       println(s"$dir: cms_bad=$cms hll_bad=$hll acd_bad=$acd")
       bad += cms + hll + acd
-      graft.coverage.OperatorQueries.clearCache()
-      graft.coverage.LlmOpQueries.clearCache()
+      graft.Materializer.library.close()
     }
     spark.stop()
     if (bad > 0) sys.exit(1)

@@ -43,7 +43,7 @@ object Profile {
       println(s"==== $name ====")
       println(df.queryExecution.explainString(FormattedMode))
       run(df) // warm: JIT, codegen, cached input tables
-      graft.coverage.LlmOpQueries.resetDerivedCaches()
+      graft.Materializer.library.reset()
       drain(spark, events)
       val t0 = System.nanoTime()
       run(df)

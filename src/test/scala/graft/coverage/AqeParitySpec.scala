@@ -70,7 +70,6 @@ class AqeParitySpec extends SparkSuite {
   private def drainCaches(): Unit = {
     OperatorQueries.clearCache()
     LlmOpQueries.clearCache()
-    graft.operators.Dedup.unpersistSketches()
   }
 
   override def afterAll(): Unit = {

@@ -74,7 +74,7 @@ class TableLayoutSpec extends SparkSuite {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS band_idx_b")
-      graft.operators.Dedup.unpersistSketches()
+      graft.Materializer.library.close()
     }
   }
 

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.Using
+
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
@@ -164,7 +166,7 @@ class DedupSpec extends SparkSuite {
     // unrelated docs lose nothing
     assert(byId(4L).getAs[Int]("n_spans") == 0)
     assert(byId(4L).getAs[Int]("n_tokens_removed") == 0)
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("exciseDuplicateSpans: disjoint duplicated regions stay separate spans") {
@@ -184,7 +186,7 @@ class DedupSpec extends SparkSuite {
     assert(d2.getAs[String]("text_deduped") == "gap unique words")
     val d1 = r.find(_.getLong(0) == 1L).get
     assert(d1.getAs[Int]("n_spans") == 0) // first occurrence of both regions
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("exciseDuplicateSpans: within-document repeat keeps only the first instance") {
@@ -198,7 +200,7 @@ class DedupSpec extends SparkSuite {
     assert(r.head.getAs[String]("spans") == "7:11")
     assert(r.head.getAs[String]("text_deduped") ==
       "one two three four middle words here")
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("exciseDuplicateSpans: hashed gram mode (100 TB path) matches raw grams") {
@@ -210,17 +212,17 @@ class DedupSpec extends SparkSuite {
       hashGrams = true).orderBy("doc_id").collect().toSeq
     assert(hashed == raw)
     assert(raw.exists(_.getAs[Int]("n_spans") > 0)) // planted copies excised
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("unpersistSketches releases tracked sketch storage and is idempotent") {
-    Dedup.unpersistSketches() // drain anything left by earlier tests
+    graft.Materializer.library.close() // drain anything left by earlier tests
     Dedup.nearDuplicatePairs(docs, "doc_id", "text", threshold = 0.5).count()
     val cachedAfterRun = spark.sparkContext.getRDDStorageInfo.length
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
     val cachedAfterRelease = spark.sparkContext.getRDDStorageInfo.length
     assert(cachedAfterRelease <= cachedAfterRun)
-    Dedup.unpersistSketches() // second call is a no-op
+    graft.Materializer.library.close() // second call is a no-op
   }
 
   test("simhashNearDuplicates finds the exact pair") {
@@ -239,7 +241,7 @@ class DedupSpec extends SparkSuite {
         portableHashing = true)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(portable == default)
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("portable simhash mode finds the exact pair with distance 0 and no far pairs") {
@@ -250,7 +252,7 @@ class DedupSpec extends SparkSuite {
     assert(rows.find(r => r.getAs[Long]("id_a") == 1L && r.getAs[Long]("id_b") == 2L)
       .get.getAs[Int]("hamming") == 0)
     assert(!pairs.exists(p => p._2 == 4L || p._2 == 5L || p._1 == 4L || p._1 == 5L))
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("bucket pruning (inverted anti-join) is a no-op on healthy buckets, drops over-full ones") {
@@ -273,7 +275,7 @@ class DedupSpec extends SparkSuite {
       (i.toLong, "identical content repeated across every single clone document")).toDF("doc_id", "text")
     val survivors = Dedup.minhashCandidatePairs(clones, "doc_id", "text", maxBucketSize = 100).count()
     assert(survivors == 0L, s"over-full buckets not pruned: $survivors pairs emitted")
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("simhash128 on a shuffled small-vocab corpus: all 50 planted pairs, bounded FPs") {
@@ -333,7 +335,7 @@ class DedupSpec extends SparkSuite {
         threshold = 0.5, corpusBands = Some(idx))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaIndex == got)
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("incremental near-dup: corpus ids present in the batch are re-delivered state") {
@@ -362,7 +364,7 @@ class DedupSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set.empty[(Long, Long)],
       "corpus ids in the batch must produce no pairs (re-delivered state)")
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("a precomputed sketch built with a DIFFERENT numHashes fails fast " +
@@ -387,7 +389,7 @@ class DedupSpec extends SparkSuite {
     assert(Dedup.nearDuplicatePairs(docs, "doc_id", "text", threshold = 0.7,
         numHashes = 32, precomputedSketch = Some(sk32))
       .collect().nonEmpty)
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("incremental near-dup prunes degenerate corpus buckets (skew guard)") {
@@ -405,7 +407,7 @@ class DedupSpec extends SparkSuite {
     assert(Dedup.incrementalNearDupPairs(
       corpus, incoming, "doc_id", "text", maxBucketSize = 1000)
       .count() === 300)
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("boundary-pair fixture: the exact-0.7 pair COLLIDES and is kept; 7/11 is rejected") {
@@ -439,20 +441,22 @@ class DedupSpec extends SparkSuite {
     import s.implicits._
     import org.apache.spark.storage.StorageLevel
     // r12 review: a foreachBatch that drained the session-global queue
-    // unpersisted a CONCURRENT query's in-flight frames mid-batch
-    val outer = Dedup.persistTracked(Seq(1, 2).toDF("x"))
+    // unpersisted a CONCURRENT query's in-flight frames mid-batch. A batch
+    // now stages on its own handle: closing it releases its frames only,
+    // never the library handle's.
+    val outer = graft.Materializer.library.stage(Seq(1, 2).toDF("x"))
     outer.count()
     var inner: org.apache.spark.sql.DataFrame = null
-    Dedup.withScopedSketches {
-      inner = Dedup.persistTracked(Seq(3, 4).toDF("y"))
+    Using.resource(new graft.Materializer) { m =>
+      inner = m.stage(Seq(3, 4).toDF("y"))
       inner.count()
       assert(inner.storageLevel != StorageLevel.NONE)
       assert(outer.storageLevel != StorageLevel.NONE)
     }
-    // scope exit released the inner frame, not the global one
+    // closing the batch's handle released the inner frame, not the library's
     assert(inner.storageLevel == StorageLevel.NONE)
     assert(outer.storageLevel != StorageLevel.NONE)
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
     assert(outer.storageLevel == StorageLevel.NONE)
   }
 
@@ -460,47 +464,48 @@ class DedupSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     import org.apache.spark.storage.StorageLevel
-    // r13 review: the plain-ThreadLocal scope silently dropped off-thread
-    // registrations to the session-global queue, reintroducing the
-    // cross-query unpersist hazard for any future/parallel-collection work
-    // forked inside a micro-batch body
+    // r13 review: off-thread work forked inside a micro-batch body must be
+    // released with the batch. A thread the batch spawns stages through the
+    // batch's handle, so the handle's close releases it and nothing reaches
+    // the library handle.
+    graft.Materializer.library.close()
     var child: org.apache.spark.sql.DataFrame = null
-    Dedup.withScopedSketches {
+    Using.resource(new graft.Materializer) { m =>
       val t = new Thread(() => {
-        child = Dedup.persistTracked(Seq(5, 6).toDF("z"))
+        child = m.stage(Seq(5, 6).toDF("z"))
         child.count()
       })
       t.start(); t.join()
       assert(child.storageLevel != StorageLevel.NONE)
     }
-    // the child-thread frame was drained by ITS scope, not leaked to the
-    // global queue (which must stay empty: unpersistSketches has nothing)
     assert(child.storageLevel == StorageLevel.NONE)
+    assert(graft.Materializer.library.staged.isEmpty)
   }
 
   test("a straggler registration after scope exit diverts to the global queue") {
     val s = spark
     import s.implicits._
     import org.apache.spark.storage.StorageLevel
-    // a thread that INHERITED the scope but registers only after the scope
-    // drained: the frame must not leak into the dead scope's queue — it
-    // diverts to the global queue and unpersistSketches releases it
-    val scopeExited = new java.util.concurrent.CountDownLatch(1)
+    // a thread that stages through a batch's handle only after the handle
+    // closed: the handle stays usable, so the frame is tracked (not lost)
+    // and the next close releases it
+    val m = new graft.Materializer
+    val handleClosed = new java.util.concurrent.CountDownLatch(1)
     @volatile var late: org.apache.spark.sql.DataFrame = null
-    var straggler: Thread = null
-    Dedup.withScopedSketches {
-      straggler = new Thread(() => {       // inherits the (still open) scope
-        scopeExited.await()
-        late = Dedup.persistTracked(Seq(9).toDF("w"))
-        late.count()
-      })
-      straggler.start()
-    }
-    scopeExited.countDown()
+    val straggler = new Thread(() => {
+      handleClosed.await()
+      late = m.stage(Seq(9).toDF("w"))
+      late.count()
+    })
+    straggler.start()
+    m.close()
+    handleClosed.countDown()
     straggler.join(60000)
     assert(late != null && late.storageLevel != StorageLevel.NONE,
-      "straggler frame must stay tracked (not drained by the dead scope)")
-    Dedup.unpersistSketches()
+      "straggler frame must stay cached until the next close")
+    assert(m.staged == Seq(late))
+    m.close()
     assert(late.storageLevel == StorageLevel.NONE)
+    assert(m.staged.isEmpty)
   }
 }

@@ -92,7 +92,7 @@ class HeavyHittersSpec extends SparkSuite {
     // drop frames persisted by earlier tests: the cache manager substitutes
     // any plan-matching cached frame, which would make the concurrent
     // default read a leftover cache and fail the 0-scan assertion below
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
     val concurrent = HeavyHitters.topTermsWithCmsVerdict(docs, "text", k = 20)
     assert(cacheScans(concurrent) === 0,
       "the concurrent default must not silently persist")
@@ -100,6 +100,6 @@ class HeavyHittersSpec extends SparkSuite {
       .topTermsWithCmsVerdict(docs, "text", k = 20, sketchFromGrouped = true)
     assert(cacheScans(grouped) >= 2,
       "persisted grouped vocabulary must feed both the sketch subquery and the top-k")
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 }

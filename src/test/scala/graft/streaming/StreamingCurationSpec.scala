@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.Using
+
 import graft.SparkSuite
 import graft.text.LmScore
 import org.apache.spark.sql.functions._
@@ -70,11 +72,13 @@ class StreamingCurationSpec extends SparkSuite {
     // (c) streamed ≡ batch over the union
     val union = Seq((101L, good), (102L, "tiny doc"),
       (201L, outDomain), (202L, good + " again today")).toDF("doc_id", "text")
-    val (batchKept, batchDropped) =
-      StreamingCuration.curateBatch(union, "doc_id", "text", model, maxNll = 1.5)
-    assert(batchKept.select("doc_id").collect().map(_.getLong(0)).toSet === kept)
-    assert(batchDropped.select("doc_id", "drop_reason")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap === dropped)
+    Using.resource(new graft.Materializer) { m =>
+      val (batchKept, batchDropped) =
+        StreamingCuration.curateBatch(union, "doc_id", "text", model, maxNll = 1.5, m)
+      assert(batchKept.select("doc_id").collect().map(_.getLong(0)).toSet === kept)
+      assert(batchDropped.select("doc_id", "drop_reason")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap === dropped)
+    }
 
     // (d) restart: checkpoint prevents reprocessing — sinks unchanged
     val nKept = spark.read.parquet(keptPath).count()
@@ -90,7 +94,28 @@ class StreamingCurationSpec extends SparkSuite {
     val e = intercept[IllegalArgumentException](
       StreamingCuration.curateBatch(clashing, "doc_id", "text",
         graft.text.LmScore.train(Seq((1L, "some text here")).toDF("doc_id", "text"), "text"),
-        maxNll = 6.0))
+        maxNll = 6.0, new graft.Materializer))
     assert(e.getMessage.contains("collide"), e.getMessage)
+  }
+
+  test("a curated batch releases its frames and stages nothing on the library handle") {
+    // the foreachBatch body owns its frames: the batch and curateBatch's
+    // stages live on the batch's own handle, so after the stream drains
+    // nothing but the stream-lifetime model tables is left cached
+    val s = spark
+    import s.implicits._
+    val tmp = Files.createTempDirectory("graft-scur-own").toString
+    val model = LmScore.train((0L until 40L).map(i => (i, good)).toDF("doc_id", "text"), "text")
+    land(Seq((301L, good), (302L, "tiny doc")), s"$tmp/landing/b1.parquet")
+    spark.catalog.clearCache()
+    graft.Materializer.library.close()
+    StreamingCuration.start(
+      spark.readStream.schema("doc_id LONG, text STRING").parquet(s"$tmp/landing"),
+      "doc_id", "text", model, s"$tmp/kept", s"$tmp/dropped", s"$tmp/ckpt",
+      maxNll = 1.5).awaitTermination(120000)
+    assert(spark.read.parquet(s"$tmp/kept").count() === 1)
+    assert(graft.Materializer.library.staged.isEmpty)
+    model.unpersistAll()
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

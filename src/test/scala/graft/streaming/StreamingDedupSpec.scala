@@ -370,21 +370,21 @@ class StreamingDedupSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     spark.catalog.clearCache()
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
     val tmp = Files.createTempDirectory("graft-sdedup-pin").toString
     val corpusPath = s"$tmp/corpus"; val indexPath = s"$tmp/index"
     val corpus = (0L until 20L).map(i => doc(i, baseText(i))).toDF("id", "text")
     corpus.write.parquet(corpusPath)
     Dedup.bandIndex(corpus, "id", "text", numHashes = 32, bands = 8)
       .write.parquet(indexPath)
-    Dedup.unpersistSketches()
+    graft.Materializer.library.close()
 
-    val b = Seq(doc(301L, baseText(900L) + " alpha"),
+    val m = new graft.Materializer
+    val b = m.stage(Seq(doc(301L, baseText(900L) + " alpha"),
       doc(302L, baseText(900L) + " beta"),
-      doc(303L, baseText(5L) + " extra")).toDF("id", "text").persist()
+      doc(303L, baseText(5L) + " extra")).toDF("id", "text"))
     try {
-      val sketch = Dedup.persistTracked(
-        Dedup.sketchFrame(b, "id", "text", numHashes = 32))
+      val sketch = m.stage(Dedup.sketchFrame(b, "id", "text", numHashes = 32))
       val cross = Dedup.incrementalNearDupPairs(
         spark.read.parquet(corpusPath), b, "id", "text", 0.7, 32, 8,
         corpusBands = Some(spark.read.parquet(indexPath)),
@@ -430,7 +430,7 @@ class StreamingDedupSpec extends SparkSuite {
           .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
       assert(idx.collect().toSet ===
         Dedup.bandIndex(b, "id", "text", 32, 8).collect().toSet)
-    } finally { b.unpersist(); Dedup.unpersistSketches() }
+    } finally { m.close(); graft.Materializer.library.close() }
   }
 
   test("PARTIAL-append crashes (between the three sinks) repair to the clean state") {
@@ -476,7 +476,7 @@ class StreamingDedupSpec extends SparkSuite {
       if (crashedSinks >= 2)
         Dedup.bandIndex(b, "id", "text", 32, 8)
           .write.mode("append").parquet(indexPath)
-      Dedup.unpersistSketches()
+      graft.Materializer.library.close()
 
       // nothing was committed, so the stream delivers the batch = replay
       val q = StreamingDedup.start(spark,
@@ -536,5 +536,28 @@ class StreamingDedupSpec extends SparkSuite {
       .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
     assert(afterB2 === Set((10L, 11L)),
       s"no reversed (11,10) orientation after re-delivery: $afterB2")
+  }
+
+  test("processBatch releases its frames and stages nothing on the library handle") {
+    // a micro-batch owns its frames: the batch and its sketch live on the
+    // batch's own handle, so after it returns nothing is left cached — not
+    // in the session and not on Materializer.library, whose frames another
+    // query in the same session would otherwise see released or leaked
+    val s = spark
+    import s.implicits._
+    val tmp = Files.createTempDirectory("graft-sdedup-own").toString
+    val corpusPath = s"$tmp/corpus"; val indexPath = s"$tmp/index"
+    val seed = (0L until 5L).map(i => doc(i, baseText(i))).toDF("id", "text")
+    seed.write.parquet(corpusPath)
+    Dedup.bandIndex(seed, "id", "text", numHashes = 32, bands = 8)
+      .write.parquet(indexPath)
+    spark.catalog.clearCache()
+    graft.Materializer.library.close()
+    StreamingDedup.processBatch(spark,
+      Seq(doc(20L, baseText(3L) + " extra"), doc(21L, baseText(900L))).toDF("id", "text"),
+      corpusPath, indexPath, s"$tmp/pairs", "id", "text", 0.7, 32, 8)
+    assert(spark.read.parquet(s"$tmp/pairs").count() > 0)
+    assert(graft.Materializer.library.staged.isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

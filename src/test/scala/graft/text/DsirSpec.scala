@@ -126,7 +126,7 @@ class DsirSpec extends SparkSuite {
     // drop the persisted tokenized base: a leftover cache plan-matches into
     // later queries via the shared session's cache manager (the hazard
     // HeavyHittersSpec's plan-shape test documents)
-    graft.operators.Dedup.unpersistSketches()
+    graft.Materializer.library.close()
   }
 
   test("w is exactly nll_raw - nll_target on the rounded means") {

@@ -10,7 +10,9 @@
 #      116-query sweep runs with GRAFT_FULL_PARITY=true once per round / on
 #      the final binary) and the pipeline path (RawLoaderSpec,
 #      DbtStyleTestsSpec, PipelineSpec, and WarehouseReplaySpec and
-#      WarehouseCheckpointSpec on the checkpointed warehouse),
+#      WarehouseCheckpointSpec on the checkpointed warehouse), and the
+#      cache owner (MaterializerSpec, plus StreamingCurationSpec for a
+#      micro-batch's own handle),
 #   3. graft.Verify at sf0.01 + the DuckDB oracle compare (the real gate).
 #
 # Total ~10 min on this host. (Since r11 the FULL battery is also cheap —
@@ -20,7 +22,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SUITES=("$@")
-TESTONLY="graft.coverage.AqeParitySpec graft.ingest.RawLoaderSpec graft.quality.DbtStyleTestsSpec graft.pipeline.PipelineSpec graft.models.WarehouseReplaySpec graft.models.WarehouseCheckpointSpec"
+TESTONLY="graft.coverage.AqeParitySpec graft.ingest.RawLoaderSpec graft.quality.DbtStyleTestsSpec graft.pipeline.PipelineSpec graft.models.WarehouseReplaySpec graft.models.WarehouseCheckpointSpec graft.MaterializerSpec graft.streaming.StreamingCurationSpec"
 for s in "${SUITES[@]:-}"; do
   [[ -n "$s" ]] && TESTONLY="$TESTONLY $s"
 done
