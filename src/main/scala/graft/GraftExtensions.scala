@@ -15,9 +15,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
  *   SparkSession.builder().withExtensions(new GraftExtensions()(_))
  * }}}
  *
- * This is the (c)-tier of the extension ladder (SURVEY §7): the same
- * builders back `SketchExpressions.register`, which installs them as temp
- * functions on an already-built session.
+ * This is the (c)-tier of the extension ladder (SURVEY §7) and the only way
+ * the SQL surface is installed: a session built without the extension has
+ * the Scala column API but none of these SQL names.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {

@@ -409,26 +409,49 @@ object LlmOpQueries {
         .orderedSmallBarrier(col("id_a"), col("id_b"))
     }
 
-  /** The shared 3-chain corpus behind [[dedupClusterAssign]] and
-    * [[dedupKeepBest]]: every 10th base doc (< 500 — the 3× corpus makes
-    * the O(N²)+recursive oracle ~4× costlier per doc, so 50 base docs keep
-    * 50 three-chains of certificate power without padding the DuckDB
-    * baseline total; measured 9.6 s at < 1000 vs ~2.4 s at < 500) plus one-
-    * and two-appended-token copies. One definition feeding one matInput key
-    * ("corpus_chain") — both queries previously built this inline, and
-    * whichever ran first silently supplied the other's cached input (r14
-    * review): any future drift between the copies would have produced
-    * order-dependent oracle mismatches. */
-  private def chainCorpus(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir).select(col("doc_id"), col("text"))
-      .filter(col("doc_id") % 10 === 0 && col("doc_id") < 500)
-    val copy1 = base.select((col("doc_id") + 1000000L).as("doc_id"),
-      concat(col("text"), lit(" extraword")).as("text"))
-    val copy2 = base.select((col("doc_id") + 2000000L).as("doc_id"),
-      concat(col("text"), lit(" extraword extrawordtwo")).as("text"))
-    matInput(s, dir, "corpus_chain")(
-      base.unionByName(copy1).unionByName(copy2))
-  }
+  /** The 3-chain corpus clustered once for both [[dedupClusterAssign]] and
+    * [[dedupKeepBest]], so its sketch, pair and edge frames are staged once:
+    * `(doc_id, n_tokens, cluster_id)`, the keep-best score (whitespace
+    * token count) riding the clustering's corpus scan.
+    *
+    * The corpus: every 10th base doc (< 500 — the 3× corpus makes the
+    * O(N²)+recursive oracle ~4× costlier per doc, so 50 base docs keep 50
+    * three-chains of certificate power without padding the DuckDB baseline
+    * total; measured 9.6 s at < 1000 vs ~2.4 s at < 500) plus one- and
+    * two-appended-token copies, a materialized input ("corpus_chain").
+    *
+    * Bands of 2 rows (32 hashes × 16): chain links on short docs sit as low
+    * as ~0.75 Jaccard, where 4-row bands would miss a band-collision with
+    * p ≈ 4.5% per pair; 2-row bands put the worst pair's miss at ~2×10⁻⁶
+    * (and xxhash64 is fixed, so green is stable). unrolledRounds = 2 (3 in
+    * r14, narrowed r15 per the verdict's plan-size item): a pure lazy plan
+    * (every bench pass recomputes pairs AND labels — the convergent variant
+    * would bake prepare-time labels into the plan as a checkpoint leaf),
+    * covering component diameters ≤ 3 (rounds + 1, linear hash-min
+    * unrolling) with the chain corpus at diameter 2. Every unrolled round
+    * inlines one more reference to the whole pair pipeline for Catalyst to
+    * re-analyze PER EXECUTION (~0.1 s/round driver-side at sf0.1, growing
+    * with plan size); the margin-1 bound is pinned by
+    * ConnectedComponentsSpec (rounds = k does NOT cover diameter k+2, loud
+    * assertConverged path), and a deeper natural chain would surface as an
+    * oracle mismatch, not silence — the DuckDB oracle recomputes the exact
+    * closure. */
+  private def chainClusters(s: SparkSession, dir: String): DataFrame =
+    memo(s, dir, "chain_clusters") {
+      val base = docs(s, dir).select(col("doc_id"), col("text"))
+        .filter(col("doc_id") % 10 === 0 && col("doc_id") < 500)
+      val copy1 = base.select((col("doc_id") + 1000000L).as("doc_id"),
+        concat(col("text"), lit(" extraword")).as("text"))
+      val copy2 = base.select((col("doc_id") + 2000000L).as("doc_id"),
+        concat(col("text"), lit(" extraword extrawordtwo")).as("text"))
+      val corpus = matInput(s, dir, "corpus_chain")(
+        base.unionByName(copy1).unionByName(copy2))
+      Dedup.nearDuplicateClusters(
+          corpus.withColumn("n_tokens",
+            TextAnalysis.tokenCount(col("text")).cast("long")),
+          "doc_id", "text",
+          threshold = 0.7, numHashes = 32, bands = 16, unrolledRounds = 2)
+    }
 
   /** Near-dup CLUSTER assignment (oracle-checked row-for-row): a bounded
     * corpus where every 10th base doc gets TWO mutated copies (one and two
@@ -440,35 +463,19 @@ object LlmOpQueries {
     * oracle computes the exact all-pairs ≥ 0.7 graph and closes it with a
     * recursive CTE — hash-equality certifies both full LSH recall AND the
     * distributed component labels, including singleton fallback and
-    * keep-list flags. Bands of 2 rows (32 hashes × 16): chain links on
-    * short docs sit as low as ~0.75 Jaccard, where 4-row bands would miss
-    * a band-collision with p ≈ 4.5% per pair; 2-row bands put the worst
-    * pair's miss at ~2×10⁻⁶ (and xxhash64 is fixed, so green is stable). */
+    * keep-list flags. */
   def dedupClusterAssign(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "__q_cluster_assign") {
-      val corpus = chainCorpus(s, dir)
-      // unrolledRounds = 2 (3 in r14, narrowed r15 per the verdict's plan-
-      // size item): a pure lazy plan (every bench pass recomputes pairs AND
-      // labels — the convergent variant would bake prepare-time labels into
-      // the plan as a checkpoint leaf), covering component diameters ≤ 3
-      // (rounds + 1, linear hash-min unrolling) with the chain corpus at
-      // diameter 2. Every unrolled round inlines one more reference to the
-      // whole pair pipeline for Catalyst to re-analyze PER EXECUTION
-      // (~0.1 s/round driver-side at sf0.1, growing with plan size); the
-      // margin-1 bound is pinned by ConnectedComponentsSpec (rounds = k
-      // does NOT cover diameter k+2, loud assertConverged path), and a
-      // deeper natural chain would surface as an oracle mismatch, not
-      // silence — the DuckDB oracle recomputes the exact closure.
-      Dedup.nearDuplicateClusters(corpus, "doc_id", "text",
-          threshold = 0.7, numHashes = 32, bands = 16, unrolledRounds = 2)
-        .withColumn("is_keeper", col("cluster_id") === col("doc_id"))
+      chainClusters(s, dir)
+        .select(col("doc_id"), col("cluster_id"),
+          (col("cluster_id") === col("doc_id")).as("is_keeper"))
         .orderBy("doc_id")
     }
 
   /** Quality-aware keep-best dedup (oracle-checked row-for-row): the same
-    * 3-chain corpus as [[dedupClusterAssign]], with keeper = arg-max by
-    * (whitespace token count DESC, doc_id ASC) — the C4/RefinedWeb "keep
-    * the best member, not the first" policy
+    * clustered 3-chain corpus as [[dedupClusterAssign]], with keeper =
+    * arg-max by (whitespace token count DESC, doc_id ASC) — the
+    * C4/RefinedWeb "keep the best member, not the first" policy
     * ([[graft.operators.Dedup.keepBestPerCluster]]). The chain corpus makes
     * the policy NON-vacuous by construction: each cluster's members are
     * base < base+1 token < base+2 tokens, so the quality keeper (the
@@ -480,11 +487,8 @@ object LlmOpQueries {
     * skew-proof composite-max AGGREGATE, no window). */
   def dedupKeepBest(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "__q_keep_best") {
-      val corpus = chainCorpus(s, dir)
-      Dedup.nearDuplicateKeepBest(corpus, "doc_id", "text",
-          t => TextAnalysis.tokenCount(t).cast("long"),
-          // rounds = 2, same margin argument as dedupClusterAssign above
-          threshold = 0.7, numHashes = 32, bands = 16, unrolledRounds = 2)
+      Dedup.keepBestPerCluster(chainClusters(s, dir),
+          "doc_id", "cluster_id", "n_tokens")
         .orderedSmallBarrier(col("cluster_id"))
     }
 

@@ -1546,9 +1546,9 @@ object SketchExpressions {
       throw new IllegalArgumentException(
         s"$fname takes $n arguments, got ${exprs.length}")
 
-  /** The SQL-callable function surface, shared by [[register]] (temp
-    * functions on an existing session) and [[graft.GraftExtensions]]
-    * (session-extension injection at build time). */
+  /** The SQL-callable function surface, injected into a session at build
+    * time by [[graft.GraftExtensions]]:
+    * `SELECT minhash_signature(hashes, 32), simhash64(hashes), …`. */
   private[graft] val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "minhash_signature" -> { exprs =>
       arity("minhash_signature", 2)(exprs)
@@ -1598,12 +1598,4 @@ object SketchExpressions {
       }
       UnicodeNormalizeExpr(exprs.head, form)
     })
-
-  /** SQL registration on an existing session:
-    * `SELECT minhash_signature(hashes, 32), simhash64(hashes), …`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    sqlFunctions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
 }

@@ -254,34 +254,6 @@ object Dedup {
       sequence(lit(1), greatest(size(toks) - (k - 1), lit(1))),
       i => concat_ws(" ", slice(toks, i, lit(k)))))
 
-  /** Convenience for tiny frames / tests. Prefer the staged path for scale. */
-  def shingles(text: Column, k: Int = 3): Column =
-    shinglesOfTokens(tokens(text), k)
-
-  /**
-   * One-permutation MinHash signature over a precomputed shingle array:
-   * shingles are hashed once, bucketed into `numHashes` slots, slot minima
-   * form the signature (rotation-densified). Single pass per row via the
-   * custom Catalyst expression [[graft.expressions.MinHashSignatureExpr]] —
-   * numHashes× cheaper than evaluating k independent hash functions.
-   */
-  def minhashSignatureOfShingles(sh: Column, numHashes: Int = 64): Column =
-    graft.expressions.SketchExpressions.minhash_signature(
-      graft.expressions.SketchExpressions.xxhash64_array(sh), numHashes)
-
-  /** MinHash signature from raw text (convenience; one shingle pass). */
-  def minhashSignature(text: Column, numHashes: Int = 64): Column =
-    minhashSignatureOfShingles(shingles(text), numHashes)
-
-  /**
-   * MinHash LSH candidate pairs: band the signature (bands × rowsPerBand =
-   * numHashes), bucket-join on (band_index, band_hash), emit each unordered
-   * id pair once. Shuffle volume: numBands small rows per document — the
-   * scale path; an all-pairs join never materializes.
-   *
-   * Returns (id_a, id_b, est_jaccard) where est_jaccard is the signature
-   * agreement fraction, computed on the collided pair only.
-   */
   /** (id, band, band_hash) rows from a signature frame — `bands` small rows
     * per document, the only thing LSH joins ever shuffle. In `portable`
     * mode the band key is the raw comma-joined slot values (a string an
@@ -306,6 +278,15 @@ object Dedup {
       xxhash64(col("col"), col("band")).as("band_hash"))
   }
 
+  /**
+   * MinHash LSH candidate pairs: band the signature (bands × rowsPerBand =
+   * numHashes), bucket-join on (band_index, band_hash), emit each unordered
+   * id pair once. Shuffle volume: numBands small rows per document — the
+   * scale path; an all-pairs join never materializes.
+   *
+   * Returns (id_a, id_b, est_jaccard) where est_jaccard is the signature
+   * agreement fraction, computed on the collided pair only.
+   */
   def minhashCandidatePairs(
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16,
@@ -612,10 +593,15 @@ object Dedup {
    * (A≈B, B≈C, A̸≈C must keep exactly one of three, not one of each pair).
    * Downstream keep-list = `cluster_id === idCol`.
    *
+   * Output: every column of `df` but `textCol`, plus `cluster_id`. Rider
+   * columns — a quality score for [[keepBestPerCluster]], say — ride the
+   * same corpus scan that feeds the label join, so one clustering serves
+   * both the label and the keep-best decision.
+   *
    * Scale: the pair graph is tiny relative to the corpus (pairs only exist
    * where near-dups exist), and [[ConnectedComponents]] shuffles only
    * (long, long) labels; the final assignment is one left join from the
-   * corpus ids onto the (small) label table.
+   * corpus rows onto the (small) label table.
    *
    * `unrolledRounds` = 0 (default) runs the convergence-detecting
    * [[ConnectedComponents.components]] — correct for any component
@@ -632,21 +618,7 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 64, bands: Int = 16,
       maxBucketSize: Int = 256,
-      unrolledRounds: Int = 0): DataFrame =
-    assignClusters(df.select(col(idCol)), df, idCol, textCol, threshold,
-      numHashes, bands, maxBucketSize, unrolledRounds)
-      .select(col(idCol), col("cluster_id"))
-
-  /** Shared label-attach step: LSH pairs → components → `base` rows (which
-    * must carry `idCol`, plus any rider columns — keep-best rides its score
-    * here so the corpus is scanned once, not once for ids and once for
-    * scores) left-joined to the (small) label table; unlabeled rows become
-    * their own singleton cluster. */
-  private def assignClusters(
-      base: DataFrame,
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, numHashes: Int, bands: Int,
-      maxBucketSize: Int, unrolledRounds: Int): DataFrame = {
+      unrolledRounds: Int = 0): DataFrame = {
     val pairs = nearDuplicatePairs(df, idCol, textCol, threshold,
       numHashes, bands, maxBucketSize)
     val comp =
@@ -658,7 +630,7 @@ object Dedup {
         ConnectedComponents.componentsUnrolled(library.stage(pairs),
           "id_a", "id_b", unrolledRounds, library.stage)
       else ConnectedComponents.components(pairs, "id_a", "id_b")
-    base
+    df.drop(textCol)
       .join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("label"), col(idCol)))
       .drop("label")
@@ -712,28 +684,6 @@ object Dedup {
           col(idCol).as("i"))).as("__best"))
       .select(col(clusterCol), col("n_members"),
         col("__best.i").as("keeper_id"), col("__best.s").as("keeper_score"))
-  }
-
-  /**
-   * [[nearDuplicateClusters]] + [[keepBestPerCluster]] fused: cluster the
-   * corpus, score every member with `scoreOf(textCol)`, return the
-   * per-cluster keep decision. The score rides the SAME corpus scan that
-   * feeds the label join (r14 — the previous form scanned the corpus a
-   * second time for scores and re-joined on the id); scores never shuffle
-   * with the LSH band traffic either way.
-   */
-  def nearDuplicateKeepBest(
-      df: DataFrame, idCol: String, textCol: String,
-      scoreOf: Column => Column,
-      threshold: Double = 0.8,
-      numHashes: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = 256,
-      unrolledRounds: Int = 0): DataFrame = {
-    val scored = assignClusters(
-      df.select(col(idCol), scoreOf(col(textCol)).as("__kb_score")),
-      df, idCol, textCol, threshold, numHashes, bands, maxBucketSize,
-      unrolledRounds)
-    keepBestPerCluster(scored, idCol, "cluster_id", "__kb_score")
   }
 
   /**

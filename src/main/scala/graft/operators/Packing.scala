@@ -65,11 +65,4 @@ object Packing {
       .withColumn("pack_last",
         floor((col("offset") + greatest(toks, lit(1)) - 1) / contextLen))
   }
-
-  /** Per-(shard, pack) fill report: how many documents start inside each
-    * example window and their token mass. */
-  def packFill(plan: DataFrame, tokenCol: String): DataFrame =
-    plan.groupBy(col("shard"), col("pack_first").as("pack"))
-      .agg(count(lit(1)).as("n_docs_starting"),
-        sum(col(tokenCol)).as("n_tokens_starting"))
 }

@@ -99,6 +99,6 @@ object Pipeline {
     ConnectServe.publish("dash_ingestion_trend", D.ingestionTrend(w))
     ConnectServe.publish("dash_dq_issues", D.dqIssues(w))
     ConnectServe.publish("dash_recent_raw", D.recentRaw(w))
-    ConnectServe.start(spark, port) // readOnly = true: the dashboard contract
+    ConnectServe.start(spark, port)
   }
 }

@@ -73,11 +73,11 @@ object DqChecks {
 
   /**
    * All seven checks in a single scan (conditional aggregation), plus the
-   * duplicate check (needs its own groupBy). Throws `DqGateFailure` when any
-   * ERROR-severity count is nonzero, mirroring `sys.exit(1)` at
-   * `data_quality_check.py:197-200`.
+   * duplicate check (needs its own groupBy). Throws `DqGateFailure`, which
+   * carries every result, when any ERROR-severity count is nonzero,
+   * mirroring `sys.exit(1)` at `data_quality_check.py:197-200`.
    */
-  def runAll(raw: DataFrame, failFast: Boolean = true): Seq[CheckResult] = {
+  def runAll(raw: DataFrame): Seq[CheckResult] = {
     def cnt(pred: org.apache.spark.sql.Column) = // coalesce: sum of 0 rows is null
       coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L))
     val row = raw.agg(
@@ -98,7 +98,7 @@ object DqChecks {
       CheckResult("duplicate_event_ids", "WARNING", duplicateEventIds(raw)),
       CheckResult("bad_delivery_dates", "WARNING", row.getAs[Long]("bad_delivery")))
 
-    if (failFast && results.exists(r => r.severity == "ERROR" && r.violations > 0))
+    if (results.exists(r => r.severity == "ERROR" && r.violations > 0))
       throw DqGateFailure(results)
     results
   }

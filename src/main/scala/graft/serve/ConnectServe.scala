@@ -27,22 +27,22 @@ import org.apache.spark.sql.connect.service.SparkConnectService
  *    batches cross the wire — exactly the thin-client shape a BI tool needs
  *    against a 1000-executor cluster.
  *
- * Read-only is ENFORCED, not assumed (default `readOnly = true` on
- * [[start]]): [[ReadOnlyGuard]]'s analyzer check rule — injected by
- * [[graft.GraftExtensions]] and inherited by every Connect client session,
- * which is a `newSession()` clone of the engine session — rejects any
- * write/DDL command (INSERT, CTAS, DROP, saveAsTable, global-temp-view
- * mutation, …) issued by a Connect-managed session, default-deny with a
- * SHOW/DESCRIBE/EXPLAIN/SET/local-temp-view allowlist. The engine's own
- * session keeps full capability, so models re-publish while dashboards stay
- * connected. `start(readOnly = true)` fails fast if the engine session was
- * built without the extension (the claim would otherwise be unenforceable);
- * `readOnly = false` serves trusted full-capability clients. The plan-less
- * proto surfaces (catalog-metadata RPCs, `AddArtifacts`/UDF code upload,
- * shared-cache and streaming commands) are denied at the gRPC service layer
- * by [[ReadOnlyInterceptor]], registered here via the service's public
+ * Read-only is ENFORCED, not assumed: [[ReadOnlyGuard]]'s analyzer check
+ * rule — injected by [[graft.GraftExtensions]] and inherited by every
+ * Connect client session, which is a `newSession()` clone of the engine
+ * session — rejects any write/DDL command (INSERT, CTAS, DROP,
+ * saveAsTable, global-temp-view mutation, …) issued by a Connect-managed
+ * session, default-deny with a SHOW/DESCRIBE/EXPLAIN/SET/local-temp-view
+ * allowlist. The engine's own session keeps full capability, so models
+ * re-publish while dashboards stay connected. [[start]] fails fast if the
+ * engine session was built without the extension (the claim would
+ * otherwise be unenforceable). The plan-less proto surfaces
+ * (catalog-metadata RPCs, `AddArtifacts`/UDF code upload, shared-cache and
+ * streaming commands) are denied at the gRPC service layer by
+ * [[ReadOnlyInterceptor]], registered here via the service's public
  * `spark.connect.grpc.interceptor.classes` hook — see [[ReadOnlyGuard]] for
- * the full two-layer enforcement surface.
+ * the full two-layer enforcement surface. There is no full-capability
+ * serving mode, as the reference has none.
  *
  * Classloading: the Spark Connect *server* uber-jar (on the main classpath)
  * and the *client* uber-jar (`connect-repl/`) both define
@@ -62,64 +62,51 @@ object ConnectServe {
   val DefaultPort = 15102
 
   @volatile private var started = false
-
-  /** Start the Spark Connect endpoint on `localhost:port` (idempotent).
-    * Binding address is pinned to localhost: the serving surface is
-    * in-machine only, mirroring the reference's local read-only connect. */
   @volatile private var startedPort = -1
-  @volatile private var startedReadOnly = true
   @volatile private var startedCtx: org.apache.spark.SparkContext = _
 
-  def start(spark: SparkSession, port: Int = DefaultPort,
-            readOnly: Boolean = true): Unit = synchronized {
+  /** Start the read-only Spark Connect endpoint on `localhost:port`
+    * (idempotent on the same port). Binding address is pinned to localhost:
+    * the serving surface is in-machine only, mirroring the reference's local
+    * read-only connect. Fails fast when the engine session cannot enforce
+    * read-only, or when a Connect service not started here is already
+    * running in this JVM. */
+  def start(spark: SparkSession, port: Int = DefaultPort): Unit = synchronized {
     // the service dies with its SparkContext: if that context was stopped,
     // the guard flag is stale — reset so a fresh context can re-serve
     if (started && startedCtx != null && startedCtx.isStopped) started = false
     if (!started) {
-      if (readOnly) {
-        // force the analyzer build so the ReadOnlyGuard check rule — if the
-        // session was built with GraftExtensions — registers itself, then
-        // fail fast when it did not: client sessions are clones of THIS
-        // session, so an unguarded engine session means an unenforceable
-        // read-only claim, which is exactly what a deployer must not get
-        // silently.
-        spark.sql("SELECT 1")
-        require(ReadOnlyGuard.isCapable(spark),
-          "readOnly=true requires the engine session to carry the " +
-            "ReadOnlyGuard check rule: build it with " +
-            "SparkSession.builder().withExtensions(new GraftExtensions()(_)) " +
-            "or --conf spark.sql.extensions=graft.GraftExtensions, or pass " +
-            "readOnly=false to serve trusted full-capability clients")
-      }
+      // force the analyzer build so the ReadOnlyGuard check rule — if the
+      // session was built with GraftExtensions — registers itself, then
+      // fail fast when it did not: client sessions are clones of THIS
+      // session, so an unguarded engine session means an unenforceable
+      // read-only claim, which is exactly what a deployer must not get
+      // silently.
+      spark.sql("SELECT 1")
+      require(ReadOnlyGuard.isCapable(spark),
+        "serving requires the engine session to carry the ReadOnlyGuard " +
+          "check rule: build it with " +
+          "SparkSession.builder().withExtensions(new GraftExtensions()(_)) " +
+          "or --conf spark.sql.extensions=graft.GraftExtensions")
       // Direct liveness probe BEFORE any global-conf mutation: a service
       // already running means the start() below would be a no-op that never
-      // reads the interceptor conf — fail fast here, and fail SIDE-EFFECT
-      // FREE (the binding/interceptor conf.sets below mutate the JVM-global
-      // SparkConf; probing after them would leave a failed readOnly start
-      // having silently re-pointed a later external service restart at
-      // graft's port with graft's interceptor installed). The probe also
-      // backs up the installCount witness after start(), which a CONCURRENT
-      // Connect-server build in the same JVM advancing the counter could
-      // mask (the witness assumes this is the only builder between its two
-      // reads; the probe has no such assumption).
-      if (readOnly) require(
+      // rebinds to `port` and never reads the interceptor conf — fail fast
+      // here, and fail SIDE-EFFECT FREE (the binding/interceptor conf.sets
+      // below mutate the JVM-global SparkConf; probing after them would
+      // leave a failed start having silently re-pointed a later external
+      // service restart at graft's port with graft's interceptor
+      // installed). The probe also backs up the installCount witness after
+      // start(), which a CONCURRENT Connect-server build in the same JVM
+      // advancing the counter could mask (the witness assumes this is the
+      // only builder between its two reads; the probe has no such
+      // assumption).
+      require(
         !org.apache.spark.sql.connect.GraftConnectBridge.serviceRunning(),
-        "readOnly=true but a Spark Connect service is already running in " +
-          "this JVM — its gRPC server was built without the read-only wire " +
-          "interceptor. Stop it (SparkConnectService.stop) and start the " +
-          "endpoint through ConnectServe, or serve readOnly=false")
-      // Trusted path needs the SAME probe (r12 review): when a service
-      // already runs, the start() below is a no-op that never rebinds, so
-      // this method would record started/startedPort for an endpoint that
-      // may not exist at `port` — clients fail with connection refused
-      // while later start() calls on the REAL port are rejected with
-      // "already started". Fail fast and side-effect free instead.
-      else require(
-        !org.apache.spark.sql.connect.GraftConnectBridge.serviceRunning(),
-        "a Spark Connect service is already running in this JVM — " +
-          "SparkConnectService.start would be a no-op that never rebinds " +
-          s"to port $port. Use the existing service directly, or stop it " +
-          "(SparkConnectService.stop) and start it through ConnectServe")
+        "a Spark Connect service is already running in this JVM — its gRPC " +
+          "server was built without the read-only wire interceptor, and " +
+          s"SparkConnectService.start would never rebind it to port $port. " +
+          "Stop it (SparkConnectService.stop) and start the endpoint " +
+          "through ConnectServe")
       // sc.conf is private[spark]; SparkEnv.conf is the same live SparkConf
       // instance the Connect service reads its binding config from.
       val conf = org.apache.spark.SparkEnv.get.conf
@@ -128,9 +115,8 @@ object ConnectServe {
         .set("spark.connect.grpc.binding.port", port.toString)
       // register the wire-level guard (AddArtifacts / catalog-metadata /
       // streaming-command denial — [[ReadOnlyInterceptor]]) through the
-      // service's public interceptor hook. Registered unconditionally —
-      // it is a volatile-read pass-through unless enforcing — and appended
-      // so deployer-configured interceptors keep running ahead of it.
+      // service's public interceptor hook, appended so deployer-configured
+      // interceptors keep running ahead of it.
       val icKey = "spark.connect.grpc.interceptor.classes"
       val icCls = classOf[ReadOnlyInterceptor].getName
       val ics = conf.getOption(icKey).toSeq
@@ -140,7 +126,7 @@ object ConnectServe {
       // window must never reach an analyzer (or the interceptor) unguarded —
       // the boundary exists from the first instant the port is live.
       val installsBefore = ReadOnlyInterceptor.installCount.get()
-      ReadOnlyGuard.enforcing = readOnly
+      ReadOnlyGuard.enforcing = true
       try {
         SparkConnectService.start(spark.sparkContext)
         // the interceptor conf is only read while the gRPC server is BUILT:
@@ -148,29 +134,24 @@ object ConnectServe {
         // this call), start() is a no-op, the conf was never read, and the
         // wire guard is silently absent — an unenforceable read-only claim,
         // which must fail fast exactly like the analyzer-rule require above
-        if (readOnly) require(
+        require(
           ReadOnlyInterceptor.installCount.get() > installsBefore,
-          "readOnly=true but the Connect service was already running " +
-            "before ConnectServe.start registered its wire interceptor — " +
-            "the gRPC server reads spark.connect.grpc.interceptor.classes " +
-            "only when it is built, so plan-less protos (AddArtifacts, " +
-            "catalog RPCs) would pass unguarded. Stop the existing service " +
-            "(SparkConnectService.stop) and start it through ConnectServe, " +
-            "or serve readOnly=false")
+          "the Connect service was already running before " +
+            "ConnectServe.start registered its wire interceptor — the gRPC " +
+            "server reads spark.connect.grpc.interceptor.classes only when " +
+            "it is built, so plan-less protos (AddArtifacts, catalog RPCs) " +
+            "would pass unguarded. Stop the existing service " +
+            "(SparkConnectService.stop) and start it through ConnectServe")
       } catch {
         case t: Throwable => ReadOnlyGuard.enforcing = false; throw t
       }
       started = true
       startedPort = port
-      startedReadOnly = readOnly
       startedCtx = spark.sparkContext
     } else {
       require(port == startedPort,
         s"Connect endpoint already started on port $startedPort; " +
           s"cannot also bind $port — stop() first")
-      require(readOnly == startedReadOnly,
-        s"Connect endpoint already started with readOnly=$startedReadOnly; " +
-          "cannot change enforcement on a live endpoint — stop() first")
     }
   }
 

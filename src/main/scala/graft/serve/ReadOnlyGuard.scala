@@ -59,7 +59,7 @@ class ReadOnlyViolationException(msg: String) extends SparkException(msg)
  */
 object ReadOnlyGuard {
 
-  /** True while a read-only Connect endpoint is live (set by ConnectServe). */
+  /** True while the Connect endpoint is live (set by ConnectServe). */
   @volatile private[serve] var enforcing: Boolean = false
 
   /** Sessions whose analyzer carries the injected check rule — i.e. sessions
@@ -77,8 +77,8 @@ object ReadOnlyGuard {
       Collections.newSetFromMap(new java.util.WeakHashMap[AnyRef, java.lang.Boolean]()))
 
   /** Was `session`'s analyzer built with the guard installed? ConnectServe
-    * fails fast on start(readOnly=true) when the engine session — the one
-    * Connect clones client sessions from — cannot enforce. */
+    * fails fast on start() when the engine session — the one Connect clones
+    * client sessions from — cannot enforce. */
   def isCapable(session: SparkSession): Boolean = capable.contains(session)
 
   /** Is `session` one created BY the Connect session manager for a remote
@@ -163,8 +163,7 @@ object ReadOnlyGuard {
               "endpoint mirrors the reference dashboards' " +
               "duckdb.connect(read_only=True) contract; only queries, " +
               "EXPLAIN/SHOW/DESCRIBE/SET, and session-local temp views are " +
-              "permitted. Start the endpoint with readOnly=false for a " +
-              "trusted full-capability client.")
+              "permitted.")
         }
       }
   }

@@ -32,10 +32,9 @@ import org.sparkproject.connect.protobuf.{Message => ProtoMessage}
  * `spark.connect.grpc.interceptor.classes` (the service's public interceptor
  * hook — instantiated reflectively by `SparkConnectInterceptorRegistry`, so
  * this class needs its no-arg constructor). One volatile read
- * ([[ReadOnlyGuard.enforcing]]) makes it a pass-through whenever the
- * endpoint is serving trusted full-capability clients (`readOnly = false`),
- * and every call it does inspect is by construction a remote client — the
- * engine session never speaks gRPC to itself.
+ * ([[ReadOnlyGuard.enforcing]]) makes it a pass-through whenever no
+ * endpoint is live, and every call it does inspect is by construction a
+ * remote client — the engine session never speaks gRPC to itself.
  *
  * Denial policy mirrors the analyzer rule's: DEFAULT-DENY with explicit
  * read-only allowlists, so unknown/future command protos and catalog
@@ -60,7 +59,7 @@ class ReadOnlyInterceptor extends ServerInterceptor {
   // the interceptor registry instantiates this class while BUILDING the
   // gRPC server (inside SparkConnectService.start), so construction is the
   // machine-checkable witness that the wire guard is actually installed —
-  // ConnectServe.start(readOnly = true) requires the count to advance
+  // ConnectServe.start requires the count to advance
   // across its start() call and fails fast otherwise (e.g. a service that
   // was already running before the conf was set would silently ignore it)
   installCount.incrementAndGet()
@@ -110,8 +109,7 @@ object ReadOnlyInterceptor {
     s"read-only serving connection: $why. This Spark Connect endpoint " +
       "mirrors the reference dashboards' duckdb.connect(read_only=True) " +
       "contract; only queries, EXPLAIN/SHOW/DESCRIBE/SET, session-local " +
-      "temp views, and read-only catalog metadata are permitted. Start the " +
-      "endpoint with readOnly=false for a trusted full-capability client."
+      "temp views, and read-only catalog metadata are permitted."
 
   /** RPC methods denied wholesale — no request inspection needed. */
   private val deniedMethods = Set("AddArtifacts")

@@ -25,12 +25,6 @@ import org.apache.spark.sql.types.StructType
  */
 object JsonlCorpus {
 
-  /** One JSON line per row over the named columns (all columns if empty). */
-  def toJsonLines(df: DataFrame, cols: Seq[String] = Nil): DataFrame = {
-    val picked = if (cols.isEmpty) df else df.select(cols.map(col): _*)
-    picked.select(to_json(struct(picked.columns.map(col): _*)).as("line"))
-  }
-
   /** Write `df` as `shards` gzipped JSONL files. */
   def writeJsonl(df: DataFrame, dir: String, shards: Int,
                  compression: String = "gzip"): Unit =

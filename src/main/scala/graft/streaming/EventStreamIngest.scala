@@ -10,7 +10,8 @@ import graft.model.LogisticsEvent
  * Kafka → parquet micro-batch consumer (`src/stream/consumer_to_minio.py`).
  *
  * Shape (SURVEY §2.9):
- *  - T1 poll loop            → micro-batch engine (ProcessingTime trigger)
+ *  - T1 poll loop            → micro-batch engine (no long-running poll:
+ *                              each hourly run is one T4 drain)
  *  - T2 count-based batching → `maxOffsetsPerTrigger` (approximate; nothing
  *                              downstream depends on exact-50 files — the
  *                              loader globs `*.parquet`)
@@ -196,27 +197,22 @@ object EventStreamIngest {
 
   /**
    * Bronze sink: parquet + checkpoint, partitioned by ingest date/hour.
-   * `availableNow = true` reproduces the Airflow-style bounded drain: process
-   * everything pending, then stop.
+   * `Trigger.AvailableNow()` is the Airflow-style bounded drain of the
+   * reference's hourly DAG: process everything pending, then stop.
    */
-  def bronzeSink(events: DataFrame, outDir: String, checkpointDir: String,
-                 availableNow: Boolean = true,
-                 processingInterval: String = "1 second"): StreamingQuery = {
-    val stamped = events
+  def bronzeSink(events: DataFrame, outDir: String,
+                 checkpointDir: String): StreamingQuery =
+    events
       .withColumn("ingestion_timestamp", current_timestamp())
       .withColumn("ingest_date", to_date(col("ingestion_timestamp")))
       .withColumn("ingest_hour", hour(col("ingestion_timestamp")))
-    val trigger =
-      if (availableNow) Trigger.AvailableNow()
-      else Trigger.ProcessingTime(processingInterval)
-    stamped.writeStream
+      .writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .partitionBy("ingest_date", "ingest_hour")
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .start()
-  }
 
   /** Per-order event sessions as a streaming aggregation: `session_window`
     * under a watermark, so a session closes (and its state is freed) once

@@ -65,11 +65,10 @@ object StatefulOps {
     }
   }
 
-  /** Pure per-(key, batch) fold — the SEMANTICS, shared by the v1
-    * (`flatMapGroupsWithState`) and v2 (`transformWithState`,
-    * [[StatefulOpsV2]]) processors so the two APIs cannot drift: sort the
-    * batch in (timestamp, event_id) lexicographic-ISO order (SURVEY §1.4),
-    * advance the stored state, emit one update. None for an empty batch. */
+  /** Pure per-(key, batch) fold — the SEMANTICS of [[update]], kept free of
+    * `GroupState` so it is unit-testable on its own: sort the batch in
+    * (timestamp, event_id) lexicographic-ISO order (SURVEY §1.4), advance
+    * the stored state, emit one update. None for an empty batch. */
   private[streaming] def advance(orderId: String, prev: OrderState,
       events: Seq[LogisticsEvent]): Option[(OrderState, OrderUpdate)] = {
     val sorted = events.sortBy(e =>

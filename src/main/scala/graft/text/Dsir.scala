@@ -41,8 +41,7 @@ object Dsir {
   def importanceScores(docs: DataFrame, idCol: String, textCol: String,
                        targetPred: Column, tau: Double = 0.0,
                        k: Double = 0.5, minCount: Long = 1L,
-                       roundTo: Int = 6,
-                       shareTokenize: Boolean = false): DataFrame = {
+                       roundTo: Int = 6): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.scalarSubquery
     // BOTH models ride TWO scalar subqueries (round 7): the bigram side
     // (two nested bigram maps + two prefix maps, one bigram scan) and the
@@ -50,32 +49,17 @@ object Dsir {
     // per-model nllStruct calls would ship six subquery job chains. Two
     // subqueries rather than one keeps the two training scans CONCURRENT
     // (Spark executes subqueries in parallel), which measures faster than
-    // a single serialized tagged-union chain at every tested scale.
-    //
-    // shareTokenize (r8 verdict item 2's bounded experiment): tokenize the
-    // corpus ONCE into a persisted (id, is_t, toks) frame read by both
-    // training subqueries AND the score pass — 1 tokenize pass + a cache
-    // materialization instead of 3 concurrent tokenize passes. The r7
-    // shared-scan lesson predicts the serialization loses at local MB
-    // scale; the flag exists so the A/B is a one-line switch and because
-    // at 100 TB the tradeoff can flip (tokenize cost scales with data,
-    // stage-wave overhead does not).
-    val base0 = docs.select(col(idCol),
-      coalesce(targetPred, lit(false)).as("__is_t"),
-      TextAnalysis.tokens(col(textCol)).as("__toks"))
-    val base =
-      if (shareTokenize) Some(graft.Materializer.library.stage(base0))
-      else None
-    val m = scalarSubquery(base.map(bigramPairRowFromToks(_, minCount))
-      .getOrElse(bigramPairRow(docs, textCol, targetPred, minCount)))
-    val v = scalarSubquery(base.map(vocabPairRowFromToks)
-      .getOrElse(vocabPairRow(docs, textCol, targetPred)))
-    base.getOrElse(
-      docs
-        // tokenize ONCE per row: both model evaluations read the projected
-        // array (CollapseProject keeps a multiply-referenced non-trivial
-        // alias in its own projection, so the split is not inlined twice)
-        .withColumn("__toks", TextAnalysis.tokens(col(textCol))))
+    // a single serialized tagged-union chain at every tested scale. Each
+    // training scan tokenizes on its own: a shared persisted (id, is_t,
+    // toks) frame measured slower at local scale (r8 A/B; the cache write
+    // serializes ahead of both subqueries).
+    val m = scalarSubquery(bigramPairRow(docs, textCol, targetPred, minCount))
+    val v = scalarSubquery(vocabPairRow(docs, textCol, targetPred))
+    docs
+      // tokenize ONCE per row: both model evaluations read the projected
+      // array (CollapseProject keeps a multiply-referenced non-trivial
+      // alias in its own projection, so the split is not inlined twice)
+      .withColumn("__toks", TextAnalysis.tokens(col(textCol)))
       .withColumn("__t", graft.expressions.LmExpressions.bigram_nll(
         col("__toks"), m.getField("bg_t"), m.getField("pfx_t"),
         v.getField("v_t"), k))
@@ -110,8 +94,7 @@ object Dsir {
   def trainPair(docs: DataFrame, textCol: String, targetPred: Column,
                 minCount: Long = 1L): (LmScore.BigramModel, LmScore.BigramModel) = {
     import LmScore.BigramModel
-    val base = docs.select(coalesce(targetPred, lit(false)).as("__is_t"),
-      TextAnalysis.tokens(col(textCol)).as("__toks"))
+    val base = tokenized(docs, textCol, targetPred)
     // per-doc collapsed bigram/token streams (round-6 verdict item 1): the
     // explodes emit one row per DISTINCT per-doc bigram/token, counts final
     val bg = graft.Materializer.library.stage(
@@ -150,19 +133,9 @@ object Dsir {
    */
   private[text] def bigramPairRow(docs: DataFrame, textCol: String,
                                   targetPred: Column,
-                                  minCount: Long): DataFrame =
-    bigramPairRowFromToks(
-      docs.select(coalesce(targetPred, lit(false)).as("__is_t"),
-        TextAnalysis.tokens(col(textCol)).as("__toks")),
-      minCount)
-
-  /** [[bigramPairRow]] over a pre-tokenized `(… __is_t, __toks)` frame —
-    * the shareTokenize path reads the persisted base instead of
-    * re-tokenizing. */
-  private[text] def bigramPairRowFromToks(base: DataFrame,
-                                          minCount: Long): DataFrame = {
+                                  minCount: Long): DataFrame = {
     val tMin = math.max(minCount, 1L)
-    val cells = base
+    val cells = tokenized(docs, textCol, targetPred)
       .select(col("__is_t"),
         explode(graft.expressions.LmExpressions.bigram_counts(
           col("__toks"))).as("e"))
@@ -193,17 +166,17 @@ object Dsir {
     * single distinct-token scan (the [[trainPair]] vRow, struct-packed). */
   private[text] def vocabPairRow(docs: DataFrame, textCol: String,
                                  targetPred: Column): DataFrame =
-    vocabPairRowFromToks(
-      docs.select(coalesce(targetPred, lit(false)).as("__is_t"),
-        TextAnalysis.tokens(col(textCol)).as("__toks")))
-
-  /** [[vocabPairRow]] over a pre-tokenized `(… __is_t, __toks)` frame. */
-  private[text] def vocabPairRowFromToks(base: DataFrame): DataFrame =
-    base
+    tokenized(docs, textCol, targetPred)
       .select(col("__is_t"),
         explode(map_keys(graft.expressions.SketchExpressions.term_counts(
           col("__toks")))).as("w"))
       .agg(count_distinct(when(col("__is_t"), col("w"))).as("v_t"),
         count_distinct(col("w")).as("v_r"))
       .select(struct(col("v_t"), col("v_r")).as("__vocabs"))
+
+  /** `(__is_t, __toks)`: the target flag and the token array per document. */
+  private def tokenized(docs: DataFrame, textCol: String,
+                        targetPred: Column): DataFrame =
+    docs.select(coalesce(targetPred, lit(false)).as("__is_t"),
+      TextAnalysis.tokens(col(textCol)).as("__toks"))
 }

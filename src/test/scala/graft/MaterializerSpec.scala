@@ -115,4 +115,25 @@ class MaterializerSpec extends SparkSuite {
         s"span query's cached relations: $cached")
     } finally Materializer.library.close()
   }
+
+  test("preparing dedup_keep_best and dedup_cluster_assign stages each plan once") {
+    // Both queries cluster the same chain corpus with the same parameters.
+    // Built once per query, the clustering staged its sketch, pair and edge
+    // frames twice: "already cached" warnings while preparing, and every
+    // reset unpersisting and re-persisting each shared frame twice.
+    Materializer.library.close()
+    try {
+      SparkEntry.queries("dedup_keep_best")(spark, sfDir)
+      SparkEntry.queries("dedup_cluster_assign")(spark, sfDir)
+      val plans = Materializer.library.staged.map(_.queryExecution.analyzed)
+      assert(plans.nonEmpty)
+      val twins = for {
+        (a, i) <- plans.zipWithIndex
+        b <- plans.drop(i + 1) if a.sameResult(b)
+      } yield a
+      assert(twins.isEmpty,
+        s"${twins.size} of ${plans.size} staged plans are staged twice:\n" +
+          twins.mkString("\n"))
+    } finally Materializer.library.close()
+  }
 }

@@ -67,12 +67,12 @@ object SparkSuite {
       // Integrity of test-local tmp checkpoints is not what these suites
       // assert; a real DFS deployment re-enables it per stream.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // With ProcessingTimeTimeout state timers (StatefulOps) or
-      // transformWithState timers (StatefulOpsV2), `shouldRunAnotherBatch`
-      // is always true — under Trigger.AvailableNow the engine then spins
-      // NO-DATA micro-batches forever (r11 jstack: a single test query at
-      // batch 2600+, still running 17 min after its suite passed), outliving
-      // awaitTermination(timeout) and starving every later suite in the JVM.
+      // With ProcessingTimeTimeout state timers (StatefulOps),
+      // `shouldRunAnotherBatch` is always true — under Trigger.AvailableNow
+      // the engine then spins NO-DATA micro-batches forever (r11 jstack: a
+      // single test query at batch 2600+, still running 17 min after its
+      // suite passed), outliving awaitTermination(timeout) and starving
+      // every later suite in the JVM.
       // The in-test timers are hours long and never meant to fire; a test
       // that DOES need a no-data batch (watermark finalization) sets this
       // back to true around its query and restores false in a finally —

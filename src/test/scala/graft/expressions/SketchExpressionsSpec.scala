@@ -50,7 +50,6 @@ class SketchExpressionsSpec extends SparkSuite {
   }
 
   test("SQL registration exposes the full function surface") {
-    SketchExpressions.register(spark)
     val r = spark.sql(
       """SELECT simhash64(array(1L, 3L, 3L)) AS sk,
         |       minhash_signature(array(5L, 9L), 4) AS sig,
@@ -69,7 +68,6 @@ class SketchExpressionsSpec extends SparkSuite {
   }
 
   test("unicode_normalize is SQL-callable with default and explicit forms") {
-    SketchExpressions.register(spark)
     val acute = new String(Character.toChars(0x0301))
     val composed = "caf" + new String(Character.toChars(0x00E9))
     val r = spark.sql(
@@ -99,14 +97,12 @@ class SketchExpressionsSpec extends SparkSuite {
       (1L, "a", 3L), (1L, "b", 1L), (1L, "c", 1L),
       (4L, "", 2L), (4L, "x", 1L)))
     // SQL surface
-    SketchExpressions.register(spark)
     val viaSql = spark.sql(
       "SELECT term_counts(array('t', 't', 'u')) AS m").head().getMap[String, Long](0)
     assert(viaSql == Map("t" -> 2L, "u" -> 1L))
   }
 
   test("literal-argument validation raises descriptive errors") {
-    SketchExpressions.register(spark)
     val e1 = intercept[Exception](
       spark.sql("SELECT minhash_signature(array(1L), id) FROM range(1)").collect())
     assert(e1.getMessage.contains("must be a literal"), e1.getMessage)
@@ -126,7 +122,6 @@ class SketchExpressionsSpec extends SparkSuite {
       .map(c => Option(c.getMessage).getOrElse("")).mkString(" | ")
 
   test("analysis-time input type checking rejects wrong-typed arguments") {
-    SketchExpressions.register(spark)
     // array<int> where array<long> element hashes are required: before the
     // ExpectsInputTypes pass this read misaligned 8-byte words out of the
     // int array — plausible-looking garbage sketches with no error
@@ -146,7 +141,6 @@ class SketchExpressionsSpec extends SparkSuite {
   }
 
   test("sign_lsh_sketch rejects nBits > 64 (the sketch is one long)") {
-    SketchExpressions.register(spark)
     // 1L << 65 would silently wrap mod 64 and alias hyperplane signs
     val e = intercept[Exception](
       spark.sql("SELECT sign_lsh_sketch(array(1.0F, -2.0F), 0, 65)").collect())
@@ -154,7 +148,6 @@ class SketchExpressionsSpec extends SparkSuite {
   }
 
   test("vector_dot: mismatched dimensions are an error, not a prefix product") {
-    SketchExpressions.register(spark)
     val e = intercept[Throwable](
       spark.sql("SELECT vector_dot(array(1.0D, 2.0D), array(1.0D))").collect())
     assert(causeChain(e).contains("dimension mismatch"), causeChain(e))
@@ -216,7 +209,6 @@ class SketchExpressionsSpec extends SparkSuite {
   }
 
   test("unicode_normalize: an unknown form fails at plan time, not per task") {
-    SketchExpressions.register(spark)
     val e = intercept[Exception](
       spark.sql("SELECT unicode_normalize('x', 'nfc')").collect())
     assert(causeChain(e).contains("unknown form"), causeChain(e))

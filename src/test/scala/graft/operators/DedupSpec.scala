@@ -73,8 +73,11 @@ class DedupSpec extends SparkSuite {
     // docs 1/2/3 cluster (exact + near dup); score = text length makes doc 3
     // (two chars longer: today→tonight) the quality keeper — NOT the min-id
     // keeper doc 1, so a fallback to min-id policy fails this assert
-    val got = Dedup.nearDuplicateKeepBest(docs, "doc_id", "text",
-        t => length(t).cast("long"), threshold = 0.7)
+    val clustered = Dedup.nearDuplicateClusters(
+      docs.withColumn("score", length(col("text")).cast("long")),
+      "doc_id", "text", threshold = 0.7)
+    assert(clustered.columns.toSeq == Seq("doc_id", "score", "cluster_id"))
+    val got = Dedup.keepBestPerCluster(clustered, "doc_id", "cluster_id", "score")
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got(1L) === ((3L, 3L, 71L))) // cluster 1 = {1,2,3}, keeper 3

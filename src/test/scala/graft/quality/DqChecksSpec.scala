@@ -32,7 +32,7 @@ class DqChecksSpec extends SparkSuite {
       clean.copy(event_id = Some("e6"), latitude = Some(91.0)),     // check 5
       clean.copy(event_id = Some("e7"), estimated_delivery = Some("2020-01-01")), // check 7
       clean))                                                       // duplicate e1 → check 6
-    val r = DqChecks.runAll(raw, failFast = false)
+    val r = intercept[DqChecks.DqGateFailure](DqChecks.runAll(raw)).results
       .map(c => c.name -> c.violations).toMap
     assert(r("null_ids") == 1L)
     assert(r("bad_weights") == 2L)
@@ -54,7 +54,8 @@ class DqChecksSpec extends SparkSuite {
   test("single-scan runAll matches the per-check functions") {
     val raw = mkRaw(Seq(clean, clean.copy(event_id = None),
       clean.copy(event_id = Some("e9"), weight_kg = Some(0.0))))
-    val all = DqChecks.runAll(raw, failFast = false).map(c => c.name -> c.violations).toMap
+    val all = intercept[DqChecks.DqGateFailure](DqChecks.runAll(raw)).results
+      .map(c => c.name -> c.violations).toMap
     assert(all("null_ids") == DqChecks.nullIds(raw))
     assert(all("bad_weights") == DqChecks.badWeights(raw))
     assert(all("malformed_timestamps") == DqChecks.malformedTimestamps(raw))

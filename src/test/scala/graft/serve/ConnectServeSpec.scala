@@ -120,14 +120,7 @@ class ConnectServeSpec extends SparkSuite {
       ConnectServe.start(spark, port = ConnectServe.DefaultPort + 1)
     }
     assert(thrown.getMessage.contains("already started"))
-    // flipping enforcement on a live endpoint must also fail loudly —
-    // silently continuing with the OLD readOnly mode would hand a deployer
-    // the opposite contract from the one they just asked for
-    val flipped = intercept[IllegalArgumentException] {
-      ConnectServe.start(spark, readOnly = false)
-    }
-    assert(flipped.getMessage.contains("readOnly"))
-    // same-port same-mode re-start stays an idempotent no-op
+    // a same-port re-start stays an idempotent no-op
     ConnectServe.start(spark)
   }
 
@@ -146,7 +139,7 @@ class ConnectServeSpec extends SparkSuite {
   // ------------------------------------------------ read-only enforcement
   // the reference's dashboards hold duckdb.connect(read_only=True): a
   // client can query but can NEVER mutate the warehouse or the published
-  // catalog. start() defaults to readOnly=true; these tests drive the
+  // catalog. start() always serves read-only; these tests drive the
   // enforcement over the real wire.
 
   private def exec(sql: String): Unit =
@@ -403,13 +396,6 @@ class ConnectServeSpec extends SparkSuite {
         ConnectServe.start(spark)
       }
       assert(thrown.getMessage.contains("already running"))
-      // trusted path too (r12 review): start() would be a rebind no-op, so
-      // recording started/startedPort would advertise a dead endpoint and
-      // block a later start() on the real port
-      val thrownRw = intercept[IllegalArgumentException] {
-        ConnectServe.start(spark, readOnly = false)
-      }
-      assert(thrownRw.getMessage.contains("already running"))
     } finally {
       SparkConnectService.stop(None, None)
       // restore the suite's endpoint for afterAll symmetry

@@ -6,8 +6,8 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * Property fuzz of [[StatefulOps.advance]] — the shared fold behind BOTH
- * stateful APIs (v1 `flatMapGroupsWithState`, v2 `transformWithState`).
+ * Property fuzz of [[StatefulOps.advance]] — the fold behind
+ * [[StatefulOps.orderProgress]]'s `flatMapGroupsWithState` processor.
  * Invariants, for any event set and ANY partition of it into micro-batches
  * in any batch order:
  *

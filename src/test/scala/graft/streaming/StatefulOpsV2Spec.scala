@@ -4,6 +4,9 @@ import graft.SparkSuite
 import graft.model.LogisticsEvent
 import java.nio.file.Files
 
+/** [[StatefulOps.orderProgress]] on the RocksDB state store: state carried
+  * across micro-batches and restored by a restarted query. (The suite's name
+  * is kept from the `transformWithState` twin these tests once covered.) */
 class StatefulOpsV2Spec extends SparkSuite {
 
   private def ev(id: Int, order: String, minute: Int, status: String) =
@@ -92,6 +95,21 @@ class StatefulOpsV2Spec extends SparkSuite {
     phase() // fresh query instance, fresh buffer: batch-2 rows only
   }
 
+  /** `body` with the RocksDB state store — the production store, whose
+    * changelog/snapshot files are what an executor-loss recovery replays. */
+  private def onRocksDb[T](body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      body
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("restart recovery: a NEW query on the same checkpoint restores per-order state") {
     // o1's batch-2 update must count 3 events (2 recovered + 1 new) with an
     // UNCHANGED status flag, and o2 must see its status change — both
@@ -104,46 +122,25 @@ class StatefulOpsV2Spec extends SparkSuite {
     def shape(us: Seq[OrderUpdate]) =
       us.map(u => (u.order_id, u.n_events, u.status, u.status_changed)).toSet
 
-    // v1 flatMapGroupsWithState on the default (HDFS-backed) store
-    assert(shape(runRestarted("restart_v1", StatefulOps.orderProgress))
+    // the default (HDFS-backed) store, then RocksDB
+    assert(shape(runRestarted("restart_hdfs", StatefulOps.orderProgress))
       === expected)
-
-    // v2 transformWithState on RocksDB — the production store whose
-    // changelog/snapshot files are what an executor-loss recovery replays
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      assert(shape(runRestarted("restart_v2", StatefulOpsV2.orderProgress))
-        === expected)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    assert(shape(onRocksDb(runRestarted("restart_rocksdb", StatefulOps.orderProgress)))
+      === expected)
   }
 
   test("transformWithState: state carries across micro-batches, TTL-backed RocksDB store") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val v2 = runStreamed("tws_v2", StatefulOpsV2.orderProgress)
-      // per (order, batch): o1 b1 (2 ev, changed), o2 b1 (1 ev, changed),
-      // o1 b2 (3 ev, UNCHANGED status), o2 b2 (2 ev, changed)
-      val byKey = v2.groupBy(_.order_id)
-      assert(byKey("o1").map(u => (u.n_events, u.status, u.status_changed)).toSet
-        === Set((2L, "In Transit", true), (3L, "In Transit", false)))
-      assert(byKey("o2").map(u => (u.n_events, u.status, u.status_changed)).toSet
-        === Set((1L, "Created", true), (2L, "Delivered", true)))
+    val rocks = onRocksDb(runStreamed("state_rocksdb", StatefulOps.orderProgress))
+    // per (order, batch): o1 b1 (2 ev, changed), o2 b1 (1 ev, changed),
+    // o1 b2 (3 ev, UNCHANGED status), o2 b2 (2 ev, changed)
+    val byKey = rocks.groupBy(_.order_id)
+    assert(byKey("o1").map(u => (u.n_events, u.status, u.status_changed)).toSet
+      === Set((2L, "In Transit", true), (3L, "In Transit", false)))
+    assert(byKey("o2").map(u => (u.n_events, u.status, u.status_changed)).toSet
+      === Set((1L, "Created", true), (2L, "Delivered", true)))
 
-      // v2 ≡ v1 on the identical scenario (both fold via StatefulOps.advance)
-      val v1 = runStreamed("tws_v1", StatefulOps.orderProgress)
-      assert(v2.toSet === v1.toSet)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    // the store provider does not change what the fold emits
+    val hdfs = runStreamed("state_hdfs", StatefulOps.orderProgress)
+    assert(rocks.toSet === hdfs.toSet)
   }
 }

@@ -113,20 +113,18 @@ class DsirSpec extends SparkSuite {
   }
 
   test("shareTokenize path is row-identical to the concurrent default") {
-    // r8 verdict item 2's bounded experiment lives behind a flag (mixed
-    // local A/B; the tradeoff can flip at scale) — pin that both paths
-    // produce the same rows so the option can never drift semantically
-    val a = Dsir.importanceScores(corpus, "id", "text",
-        targetPred = col("lang") === "en")
-      .collect().map(r => r.toSeq).sortBy(_.head.asInstanceOf[Long])
-    val b = Dsir.importanceScores(corpus, "id", "text",
-        targetPred = col("lang") === "en", shareTokenize = true)
-      .collect().map(r => r.toSeq).sortBy(_.head.asInstanceOf[Long])
-    assert(a.toSeq == b.toSeq)
-    // drop the persisted tokenized base: a leftover cache plan-matches into
-    // later queries via the shared session's cache manager (the hazard
-    // HeavyHittersSpec's plan-shape test documents)
+    // the shared-tokenize branch (a persisted tokenized base) is gone: the
+    // one scoring path stages nothing on the library handle and reads no
+    // cached relation, in its main plan or in its two model subqueries
     graft.Materializer.library.close()
+    val scored = Dsir.importanceScores(corpus, "id", "text",
+      targetPred = col("lang") === "en")
+    assert(scored.count() == 27L)
+    assert(graft.Materializer.library.staged.isEmpty)
+    val cached = scored.queryExecution.withCachedData.collectWithSubqueries {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }
+    assert(cached.isEmpty, scored.queryExecution.withCachedData.toString)
   }
 
   test("w is exactly nll_raw - nll_target on the rounded means") {
