@@ -15,11 +15,21 @@ import org.apache.spark.storage.StorageLevel
  * re-expands that cheaply, Spark re-analyzes, re-plans, serializes and
  * compiles all of it for every query that reads a model.
  *
- * `fromRaw(cacheShared = true)` — the pipeline's path — builds each of the
- * ten models exactly once, in dependency order, with an eager
- * `localCheckpoint` at [[CheckpointLevel]]: every model frame is then a
- * `LogicalRDD` leaf over its stored blocks, and every later plan (the
- * schema tests, the dashboard publish, each wire query) starts from it.
+ * `fromRaw(cacheShared = true)` — the pipeline's path — stores four
+ * frames, each with one eager `localCheckpoint` at [[CheckpointLevel]], and
+ * derives every model from them by projection and filter only:
+ *  1. the split ([[Intermediate.split]]): stg plus the validity flag and
+ *     `invalid_reason`, one narrow job. stg, valid and invalid read it;
+ *  2. the five dimensions in one grouped pass over valid
+ *     ([[Dimensions.grouped]]); each dim filters it by kind;
+ *  3. fact_event, keyed row by row but for its one join, to dim_order
+ *     ([[Facts.factEventKeyed]]);
+ *  4. dq_invalid_delivery_summary, one aggregate by date over the split
+ *     ([[DqSummary.fromSplit]]).
+ * Every model's plan is then `Project`/`Filter` nodes over `LogicalRDD`
+ * leaves, so every later plan (the schema tests, the dashboard publish,
+ * each wire query) starts from stored blocks. Under AQE the build runs
+ * seven Spark jobs, where one checkpoint per model ran 25.
  *  - Snapshot per run: the frames hold what that run built and tested. A
  *    later append to the raw table does not change them (only `raw` itself
  *    is still a lazy read of the table).
@@ -73,28 +83,40 @@ object Warehouse {
    *
    * @param ingestionTs injectable clock for staging (tests / oracle runs pass
    *                    a fixed literal; production uses `current_timestamp()`)
-   * @param cacheShared materialize each model once, in dependency order, as a
-   *                    local checkpoint (see the class doc); false keeps the
+   * @param cacheShared store the four frames the models derive from, as
+   *                    local checkpoints (see the class doc); false keeps the
    *                    lazy views and starts no Spark job
    */
   def fromRaw(
       raw: DataFrame,
       ingestionTs: Column = current_timestamp(),
       cacheShared: Boolean = false): Warehouse = {
-    def model(df: DataFrame): DataFrame =
-      if (cacheShared) df.localCheckpoint(eager = true, storageLevel = CheckpointLevel)
-      else df
-    val stg = model(Staging.stg(raw, ingestionTs))
-    val valid = model(Intermediate.valid(stg))
-    val invalid = model(Intermediate.invalid(stg))
-    val dOrder = model(Dimensions.order(valid))
-    val dTime = model(Dimensions.time(valid))
-    val dStatus = model(Dimensions.status(valid))
-    val dLocation = model(Dimensions.location(valid))
-    val dCarrier = model(Dimensions.carrier(valid))
-    val fact = model(Facts.factEvent(valid, dOrder, dTime, dStatus, dLocation, dCarrier))
-    val dq = model(DqSummary.summary(stg, invalid))
-    Warehouse(raw, stg, valid, invalid, dOrder, dTime, dStatus, dLocation,
-      dCarrier, fact, dq)
+    val stg = Staging.stg(raw, ingestionTs)
+    if (cacheShared) stored(raw, stg)
+    else {
+      val valid = Intermediate.valid(stg)
+      val invalid = Intermediate.invalid(stg)
+      val dOrder = Dimensions.order(valid)
+      val dTime = Dimensions.time(valid)
+      val dStatus = Dimensions.status(valid)
+      val dLocation = Dimensions.location(valid)
+      val dCarrier = Dimensions.carrier(valid)
+      val fact = Facts.factEvent(valid, dOrder, dTime, dStatus, dLocation, dCarrier)
+      Warehouse(raw, stg, valid, invalid, dOrder, dTime, dStatus, dLocation,
+        dCarrier, fact, DqSummary.summary(stg, invalid))
+    }
+  }
+
+  private def stored(raw: DataFrame, stg: DataFrame): Warehouse = {
+    def store(df: DataFrame): DataFrame =
+      df.localCheckpoint(eager = true, storageLevel = CheckpointLevel)
+    val split = store(Intermediate.split(stg))
+    val valid = Intermediate.validOf(split)
+    val dims = store(Dimensions.grouped(valid))
+    val dOrder = Dimensions.orderOf(dims)
+    Warehouse(raw, Intermediate.stgOf(split), valid, Intermediate.invalidOf(split),
+      dOrder, Dimensions.timeOf(dims), Dimensions.statusOf(dims),
+      Dimensions.locationOf(dims), Dimensions.carrierOf(dims),
+      store(Facts.factEventKeyed(valid, dOrder)), store(DqSummary.fromSplit(split)))
   }
 }

@@ -12,9 +12,10 @@ import graft.model.LogisticsEvent
  * pipeline proceeds). The reference signals via process exit code; we raise
  * `DqGateFailure` carrying the per-check counts.
  *
- * Each check is a pushed-down filter + count over the bronze scan. At scale
- * all seven run in ONE job via `runAll` (a single conditional-aggregation
- * pass) rather than seven scans — semantics identical, 7× less I/O.
+ * Each check is a pushed-down filter + count over the bronze scan. The gate,
+ * `runAll`, computes all seven in ONE Spark action over one scan
+ * (conditional aggregation under one group by `event_id`) rather than seven
+ * scans — semantics identical, 7× less I/O.
  */
 object DqChecks {
 
@@ -72,31 +73,33 @@ object DqChecks {
     raw.filter(badDeliveryPred).count()
 
   /**
-   * All seven checks in a single scan (conditional aggregation), plus the
-   * duplicate check (needs its own groupBy). Throws `DqGateFailure`, which
-   * carries every result, when any ERROR-severity count is nonzero,
-   * mirroring `sys.exit(1)` at `data_quality_check.py:197-200`.
+   * All seven checks in one Spark action: one group by `event_id` keeps
+   * each row-level predicate's count and the group's row count, and one
+   * global aggregate over the groups sums the counts and counts the
+   * non-null `event_id` groups holding more than one row (the duplicate
+   * check). Throws `DqGateFailure`, which carries every result, when any
+   * ERROR-severity count is nonzero, mirroring `sys.exit(1)` at
+   * `data_quality_check.py:197-200`.
    */
   def runAll(raw: DataFrame): Seq[CheckResult] = {
-    def cnt(pred: org.apache.spark.sql.Column) = // coalesce: sum of 0 rows is null
-      coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L))
-    val row = raw.agg(
-      cnt(nullIdPred).as("null_ids"),
-      cnt(badWeightPred).as("bad_weights"),
-      cnt(malformedTsPred).as("malformed_ts"),
-      cnt(invalidStatusPred).as("bad_status"),
-      cnt(oobCoordPred).as("bad_coords"),
-      cnt(badDeliveryPred).as("bad_delivery")
-    ).head()
+    val rowChecks = Seq(
+      "null_ids" -> nullIdPred, "bad_weights" -> badWeightPred,
+      "malformed_timestamps" -> malformedTsPred, "invalid_statuses" -> invalidStatusPred,
+      "out_of_bounds_coords" -> oobCoordPred, "bad_delivery_dates" -> badDeliveryPred)
+    def total(c: String) = coalesce(sum(c), lit(0L)).as(c) // sum of 0 rows is null
+    val row = raw
+      .groupBy("event_id")
+      .agg(count(lit(1)).as("n"),
+        rowChecks.map { case (name, pred) => sum(when(pred, 1L).otherwise(0L)).as(name) }: _*)
+      .agg(count(when(col("event_id").isNotNull && col("n") > 1, 1)).as("duplicate_event_ids"),
+        rowChecks.map { case (name, _) => total(name) }: _*)
+      .head()
 
     val results = Seq(
-      CheckResult("null_ids", "ERROR", row.getAs[Long]("null_ids")),
-      CheckResult("bad_weights", "ERROR", row.getAs[Long]("bad_weights")),
-      CheckResult("malformed_timestamps", "ERROR", row.getAs[Long]("malformed_ts")),
-      CheckResult("invalid_statuses", "ERROR", row.getAs[Long]("bad_status")),
-      CheckResult("out_of_bounds_coords", "ERROR", row.getAs[Long]("bad_coords")),
-      CheckResult("duplicate_event_ids", "WARNING", duplicateEventIds(raw)),
-      CheckResult("bad_delivery_dates", "WARNING", row.getAs[Long]("bad_delivery")))
+      "null_ids" -> "ERROR", "bad_weights" -> "ERROR", "malformed_timestamps" -> "ERROR",
+      "invalid_statuses" -> "ERROR", "out_of_bounds_coords" -> "ERROR",
+      "duplicate_event_ids" -> "WARNING", "bad_delivery_dates" -> "WARNING"
+    ).map { case (name, severity) => CheckResult(name, severity, row.getAs[Long](name)) }
 
     if (results.exists(r => r.severity == "ERROR" && r.violations > 0))
       throw DqGateFailure(results)

@@ -155,11 +155,11 @@ class DbtStyleTestsSpec extends SparkSuite {
       suite(wh)
       assert(levels(wh) == before)
     }
-    // the ten shared models (every frame but raw) are still checkpointed
-    // leaves whose blocks are kept
+    // the ten shared models (every frame but raw) still read only stored
+    // frames whose blocks are kept
     val persisted = spark.sparkContext.getPersistentRDDs
     shared.productIterator.drop(1).map(_.asInstanceOf[DataFrame]).foreach { df =>
-      df.queryExecution.analyzed match {
+      df.queryExecution.analyzed.collectLeaves().foreach {
         case leaf: LogicalRDD => assert(persisted.contains(leaf.rdd.id))
         case other => fail(s"not a checkpointed leaf: $other")
       }

@@ -12,8 +12,9 @@
 #      DbtStyleTestsSpec, PipelineSpec, and WarehouseReplaySpec and
 #      WarehouseCheckpointSpec on the checkpointed warehouse), and the
 #      cache owner (MaterializerSpec, plus StreamingCurationSpec for a
-#      micro-batch's own handle), and the serving endpoint's start/stop
+#      micro-batch's own handle), the serving endpoint's start/stop
 #      state machine, which Pipeline.serve runs every hour (ConnectServeSpec),
+#      and the DQ gate, which Pipeline.run runs every hour (DqChecksSpec),
 #   3. graft.Verify at sf0.01 + the DuckDB oracle compare (the real gate).
 #
 # Total ~10 min on this host. (Since r11 the FULL battery is also cheap —
@@ -23,7 +24,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SUITES=("$@")
-TESTONLY="graft.coverage.AqeParitySpec graft.ingest.RawLoaderSpec graft.quality.DbtStyleTestsSpec graft.pipeline.PipelineSpec graft.models.WarehouseReplaySpec graft.models.WarehouseCheckpointSpec graft.MaterializerSpec graft.streaming.StreamingCurationSpec graft.serve.ConnectServeSpec"
+TESTONLY="graft.coverage.AqeParitySpec graft.ingest.RawLoaderSpec graft.quality.DbtStyleTestsSpec graft.pipeline.PipelineSpec graft.models.WarehouseReplaySpec graft.models.WarehouseCheckpointSpec graft.MaterializerSpec graft.streaming.StreamingCurationSpec graft.serve.ConnectServeSpec graft.quality.DqChecksSpec"
 for s in "${SUITES[@]:-}"; do
   [[ -n "$s" ]] && TESTONLY="$TESTONLY $s"
 done
