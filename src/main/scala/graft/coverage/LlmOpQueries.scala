@@ -365,19 +365,19 @@ object LlmOpQueries {
           sum("n_dup_grams").as("n_dup_grams_total")))
 
   /** SimHash (128-bit, tf-weighted) near-duplicate pairs (oracle-checked:
-    * the query runs `portableHashing` — per-token md5 vote bits, sketch
-    * emitted as its eight 16-bit chunks — so DuckDB replays chunk values,
-    * bucket pruning, the candidate join, and the Hamming radius digit-by-
-    * digit; memoized). maxHamming 12: the testdata docs are short (~30
-    * tokens), so the one-token planted mutation shifts up to ~12 of 128
-    * bits — measured planted-pair distances span 1-12 on this corpus;
+    * the sketch is per-token md5 vote bits, emitted as its eight 16-bit
+    * chunks — so DuckDB replays chunk values, bucket pruning, the candidate
+    * join, and the Hamming radius digit-by-digit; memoized). maxHamming 12:
+    * the testdata docs are short (~30 tokens), so the one-token planted
+    * mutation shifts up to ~12 of 128 bits — measured planted-pair
+    * distances span 1-12 on this corpus;
     * 12/128 is the radius that captures all 50 planted pairs (recall beyond
     * the 8-chunk pigeonhole guarantee of 7 is probabilistic, and complete
     * here). */
   def dedupSimhashPairs(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "__q_simhash_pairs")(
       Dedup.simhashNearDuplicates(nearDupCorpus(s, dir), "doc_id", "text",
-          maxHamming = 12, portableHashing = true)
+          maxHamming = 12)
         .agg(count(lit(1)).as("n_pairs"),
           sum(when(col("id_b") === col("id_a") + 1000000L, 1L).otherwise(0L))
             .as("n_planted_found")))
@@ -1283,8 +1283,7 @@ object LlmOpQueries {
     * zero-Exchange (CorpusDiffSpec pins it). */
   def oCorpusDiff(s: SparkSession, dir: String): DataFrame = {
     val (oldV, newV) = corpusVersions(s, dir)
-    graft.layout.CorpusDiff.diff(oldV, newV, "doc_id", Seq("text"),
-      portableHashing = true)
+    graft.layout.CorpusDiff.diff(oldV, newV, "doc_id", Seq("text"))
       .orderBy("doc_id")
   }
 
@@ -1297,8 +1296,7 @@ object LlmOpQueries {
   def oCorpusDiff10x(s: SparkSession, dir: String): DataFrame = {
     val (oldV, newV) =
       corpusVersionsOf(docs10x(s, dir).select("doc_id", "text"))
-    graft.layout.CorpusDiff.diff(oldV, newV, "doc_id", Seq("text"),
-      portableHashing = true)
+    graft.layout.CorpusDiff.diff(oldV, newV, "doc_id", Seq("text"))
       .orderBy("doc_id")
   }
 

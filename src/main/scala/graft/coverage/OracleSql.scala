@@ -496,7 +496,7 @@ object OracleSql {
     }.mkString("CAST(", "\n        + ", " AS BIGINT)")
 
   /**
-   * Replays `Dedup.simhashNearDuplicates(portableHashing = true)` over
+   * Replays `Dedup.simhashNearDuplicates` over
    * `corpusSql` (Hamming ≤ 12, bucket cap 256): per-token md5 digests →
    * per-digit bit votes → strict-majority chunk values → chunk-bucket
    * pruning → candidate pairs → exact chunk-wise Hamming → counts.

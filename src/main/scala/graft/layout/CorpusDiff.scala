@@ -41,16 +41,13 @@ import org.apache.spark.sql.functions._
  * the bucketed zero-Exchange plan; rows with a null key are a
  * data-quality finding for the DQ gate, not diff input).
  *
- * Hashing: `xxhash64` over the content columns by default (codegen'd,
- * engine-specific). `portableHashing = true` switches to the md5-based
- * 60-bit hash ([[graft.operators.Dedup.portableHash60]]) over a
- * U+001F-joined rendering of the content columns (the unit separator
- * cannot appear in sane text, so multi-column renderings never alias),
- * which any engine can replay — the DuckDB oracle certifies the whole
- * operator through this mode. In portable mode NULL content renders as a
- * U+0000 sentinel (a literal lone NUL string collides with NULL —
- * acceptable for provenance text, documented rather than hidden); the
- * default mode feeds nulls to xxhash64 natively, no sentinel.
+ * Hashing: the md5-based 60-bit hash
+ * ([[graft.operators.Dedup.portableHash60]]) over a U+001F-joined
+ * rendering of the content columns (the unit separator cannot appear in
+ * sane text, so multi-column renderings never alias), which any engine can
+ * replay — the DuckDB oracle certifies the whole operator. NULL content
+ * renders as a U+0000 sentinel (a literal lone NUL string collides with
+ * NULL — acceptable for provenance text, documented rather than hidden).
  */
 object CorpusDiff {
 
@@ -59,8 +56,7 @@ object CorpusDiff {
     * multiset changed; see the object scaladoc for semantics and the
     * zero-Exchange bucketed path. */
   def diff(oldV: DataFrame, newV: DataFrame, keyCol: String,
-           contentCols: Seq[String],
-           portableHashing: Boolean = false): DataFrame = {
+           contentCols: Seq[String]): DataFrame = {
     require(contentCols.nonEmpty, "corpusDiff: at least one content column")
     require(!contentCols.contains(keyCol),
       s"corpusDiff: key column $keyCol must not be listed in contentCols")
@@ -68,10 +64,8 @@ object CorpusDiff {
     require(!reserved.contains(keyCol),
       s"corpusDiff: key column $keyCol collides with the output schema")
     def fp(df: DataFrame): Column =
-      if (portableHashing)
-        graft.operators.Dedup.portableHash60(concat_ws("\u001f",
-          contentCols.map(c => coalesce(df(c).cast("string"), lit("\u0000"))): _*))
-      else xxhash64(contentCols.map(df(_)): _*)
+      graft.operators.Dedup.portableHash60(concat_ws("\u001f",
+        contentCols.map(c => coalesce(df(c).cast("string"), lit("\u0000"))): _*))
     def summarize(df: DataFrame): DataFrame =
       df.filter(df(keyCol).isNotNull) // null keys excluded — see scaladoc
         .groupBy(df(keyCol))

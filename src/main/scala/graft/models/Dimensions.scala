@@ -48,6 +48,13 @@ object Dimensions {
    * DuckDB `EXTRACT(DOW …)` is Sunday=0; Spark `dayofweek` is Sunday=1,
    * hence the `- 1` (SURVEY §1.4.5). EXTRACT in DuckDB returns BIGINT —
    * keep LongType for schema parity.
+   *
+   * The casts are ANSI casts, as DuckDB's are: a `timestamp` that does not
+   * parse (`''`, say) aborts the whole model build with
+   * `CAST_INVALID_INPUT`, where DuckDB raises `ConversionException`. So the
+   * DQ gate's `malformed_timestamps` check must run before the model build;
+   * `Pipeline.run` does, and PipelineSpec pins that a blank timestamp stops
+   * at the gate.
    */
   private def calendar(fullTs: Column): Seq[Column] = {
     val ts = fullTs.cast("timestamp")

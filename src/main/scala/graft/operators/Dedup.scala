@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Materializer.library
 
@@ -13,8 +12,9 @@ import graft.Materializer.library
  *  - MinHash:    per-row signature (narrow) → band explosion (k small rows)
  *                → shuffle on (band, band_hash) buckets only — candidate
  *                pairs never require an all-pairs join;
- *  - SimHash:    per-row 64-bit sketch (narrow) → shuffle on 16-bit chunk
- *                buckets (4 rows/doc) → Hamming verify inside buckets;
+ *  - SimHash:    per-row 128-bit tf-weighted sketch (narrow) → shuffle on
+ *                16-bit chunk buckets (8 rows/doc) → Hamming or exact-Jaccard
+ *                verify inside buckets;
  *  - n-gram Jaccard: exact verification measure, evaluated only on LSH
  *                candidates (never all pairs).
  *
@@ -279,47 +279,6 @@ object Dedup {
   }
 
   /**
-   * MinHash LSH candidate pairs: band the signature (bands × rowsPerBand =
-   * numHashes), bucket-join on (band_index, band_hash), emit each unordered
-   * id pair once. Shuffle volume: numBands small rows per document — the
-   * scale path; an all-pairs join never materializes.
-   *
-   * Returns (id_a, id_b, est_jaccard) where est_jaccard is the signature
-   * agreement fraction, computed on the collided pair only.
-   */
-  def minhashCandidatePairs(
-      df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = 256): DataFrame = {
-    // The sketch projection feeds two consumers (bucket stats + the pair
-    // join) — persist it once; the banded stream itself carries only
-    // (id, band, band_hash), never the 64-long signature. The shingle
-    // array is pruned BEFORE the persist (this entry point verifies by
-    // signature agreement, not exact Jaccard), so the cache holds
-    // (id, sig) only — never the wide shingle arrays.
-    val sig = library.stage(
-      sketchFrame(df, idCol, textCol, numHashes).select(col("id"), col("sig")))
-
-    // NOT staged (r14 A/B): the band stream is referenced three times per
-    // execution (bucket census + self-join a/b), but each reference is a
-    // cheap posexplode over the CACHED sig frame — staging it showed no
-    // gain (same-window probes within noise) while adding a cache write
-    // that serializes ahead of consumers that otherwise pipeline, plus a
-    // tracked frame every bench reset re-persists.
-    val banded = pruneFullBuckets(bandRows(sig, numHashes, bands),
-      Seq("band", "band_hash"), maxBucketSize)
-
-    val candidates = bucketSelfPairs(banded, Seq("band", "band_hash"))
-
-    val sigOnly = sig.select(col("id"), col("sig"))
-    candidates
-      .join(sigOnly.withColumnsRenamed(Map("id" -> "id_a", "sig" -> "sig_a")), Seq("id_a"))
-      .join(sigOnly.withColumnsRenamed(Map("id" -> "id_b", "sig" -> "sig_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        sigAgreement(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
-  }
-
-  /**
    * Skew guard for LSH bucket self-joins: drop buckets larger than
    * `maxBucketSize`. Over-full buckets are low-information bands (everything
    * collides) and quadratic in cost; skipping them is the standard
@@ -359,11 +318,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Signature agreement fraction between two minhash signature arrays. */
-  private def sigAgreement(a: Column, b: Column, numHashes: Int): Column =
-    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / numHashes
-
   /**
    * n-gram Jaccard similarity between two shingle-set columns:
    * |A ∩ B| / |A ∪ B|.
@@ -388,11 +342,12 @@ object Dedup {
    * per-element xxhash64 by default,
    * [[graft.expressions.PortableHash60ArrayExpr]] (value-identical to
    * per-element [[portableHash60]]) for the oracle-replayable md5
-   * variants. This is the ONLY construction of the tokenize→shingle→minhash
-   * chain; every entry point (including the portable ones) goes through it
-   * so a staging change can never silently diverge the replayed sketch
-   * from the default one. The `precomputedSketch` contracts remain
-   * default-hash only.
+   * variant of [[nearDuplicatePairs]]. This is the ONLY construction of the
+   * tokenize→shingle→minhash chain; every MinHash entry point —
+   * [[nearDuplicatePairs]] in both hash modes, [[incrementalNearDupPairs]],
+   * [[bandIndex]] — goes through it, so a staging change can never silently
+   * diverge the replayed sketch from the default one. The
+   * `precomputedSketch` contracts remain default-hash only.
    */
   def sketchFrame(df: DataFrame, idCol: String, textCol: String,
                   numHashes: Int = 64,
@@ -457,8 +412,12 @@ object Dedup {
             graft.expressions.SketchExpressions.portable_hash60_array)
         else sketchFrame(df, idCol, textCol, numHashes)))
 
-    // not staged — same A/B as minhashCandidatePairs: recompute from the
-    // cached sig frame beats a serializing cache write
+    // NOT staged (r14 A/B): the band stream is referenced three times per
+    // execution (bucket census + self-join a/b), but each reference is a
+    // cheap posexplode over the CACHED sig frame — staging it showed no
+    // gain (same-window probes within noise) while adding a cache write
+    // that serializes ahead of consumers that otherwise pipeline, plus a
+    // tracked frame every bench reset re-persists.
     val banded = pruneFullBuckets(
       bandRows(sig, numHashes, bands, portableHashing),
       Seq("band", "band_hash"), maxBucketSize)
@@ -687,50 +646,15 @@ object Dedup {
   }
 
   /**
-   * 64-bit SimHash: per-token xxhash64; bit b of the sketch is 1 when more
-   * than half the tokens have bit b set. Pure expressions (bitwise ops over
-   * an exploded bit sequence folded back with aggregate).
-   */
-  /** SimHash sketch from a precomputed token-hash array (one imperative pass,
-    * [[graft.expressions.SimHash64Expr]]). */
-  def simhashOfHashes(hashes: Column): Column =
-    graft.expressions.SketchExpressions.simhash64(hashes)
-
-  /** DISTINCT token hashes (set semantics) for [[simhashOfHashes]]. */
-  def tokenHashes(text: Column): Column =
-    graft.expressions.SketchExpressions.xxhash64_array(
-      array_distinct(tokens(text)))
-
-  /** Token hashes WITH repeats — term-frequency-weighted bit votes. On
-    * small-vocab corpora the distinct-token sets of unrelated documents
-    * nearly coincide (everything contains most of the vocabulary), so
-    * set-semantics sketches collapse together; letting repeats vote encodes
-    * the frequency profile, which still separates documents (round-1
-    * verdict finding: SimHash precision weak on tiny vocabularies). */
-  def tokenHashesTf(text: Column): Column =
-    graft.expressions.SketchExpressions.xxhash64_array(tokens(text))
-
-  def simhash(text: Column): Column = simhashOfHashes(tokenHashes(text))
-
-  /** 128-bit tf-weighted SimHash (array of 2 longs) — the near-dup default. */
-  def simhash128(text: Column): Column =
-    graft.expressions.SketchExpressions.simhash128(tokenHashesTf(text))
-
-  /** Hamming distance between two 64-bit sketches. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** Hamming distance between two 128-bit sketches (2-long arrays). */
-  def hamming128(a: Column, b: Column): Column =
-    bit_count(element_at(a, 1).bitwiseXOR(element_at(b, 1))) +
-      bit_count(element_at(a, 2).bitwiseXOR(element_at(b, 2)))
-
-  /**
-   * SimHash near-duplicate pairs over the 128-bit tf-weighted sketch:
-   * bucket by each of the eight 16-bit chunks — two sketches within Hamming
-   * distance ≤ 7 of each other must agree on at least one chunk (pigeonhole
-   * over 8 chunks), then verify exact Hamming inside buckets. Raising
-   * `maxHamming` past 7 keeps working but the recall guarantee becomes
-   * probabilistic (the flips must land in every chunk to hide a pair).
+   * SimHash near-duplicate pairs over a 128-bit tf-weighted sketch: per-token
+   * md5 digests vote each bit (repeats vote again), and the sketch is
+   * emitted directly as its eight 16-bit chunks (see SimHashHexChunksExpr).
+   * Bucket by each chunk — two sketches within Hamming distance ≤ 7 of each
+   * other must agree on at least one chunk (pigeonhole over 8 chunks), then
+   * verify exact Hamming inside buckets. Raising `maxHamming` past 7 keeps
+   * working but the recall guarantee becomes probabilistic (the flips must
+   * land in every chunk to hide a pair). The md5 votes are engine-portable:
+   * the DuckDB oracle replays chunks, buckets, pairs and Hamming exactly.
    *
    * vs round 1 (64-bit set-semantics sketch, 4 chunks, ≤3): the tf-weighted
    * votes separate small-vocabulary corpora whose distinct-token sets
@@ -740,41 +664,27 @@ object Dedup {
    */
   def simhashNearDuplicates(
       df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 7, maxBucketSize: Int = 256,
-      portableHashing: Boolean = false): DataFrame = {
-    if (portableHashing) {
-      // Engine-portable variant: per-token md5 votes, sketch emitted
-      // directly as its eight 16-bit chunks (see SimHashHexChunksExpr).
-      // Same shuffle shape — 8 small chunk rows per document — and the
-      // DuckDB oracle replays chunks, buckets, pairs, and Hamming exactly.
-      val sk = library.stage(
-        df.select(col(idCol).as("id"),
-          // fused tokens→md5→chunks (r15): one pass, no interpreted
-          // per-token md5 lambda or hex round-trip — bit-identical to
-          // simhash_hex_chunks(transform(tokens, md5)) (TokensExprSpec pin;
-          // the oracle replays the hex-digit contract and stays green)
-          graft.expressions.SketchExpressions.simhash_md5_chunks(
-            tokens(col(textCol))).as("skc")))
-      val chunked0 = sk
-        .select(col("id"), col("skc"), posexplode(col("skc")))
-        .withColumnRenamed("pos", "chunk")
-        .withColumnRenamed("col", "chunk_val")
-      val chunked = pruneFullBuckets(chunked0, Seq("chunk", "chunk_val"), maxBucketSize)
-      val ham = (0 until 8).map { i =>
-        bit_count(element_at(col("a.skc"), i + 1)
-          .bitwiseXOR(element_at(col("b.skc"), i + 1)))
-      }.reduce(_ + _)
-      bucketSelfPairs(chunked, Seq("chunk", "chunk_val"),
-        Seq("hamming" -> ham))
-        .filter(col("hamming") <= maxHamming)
-    } else {
-      val sk = library.stage(
-        df.select(col(idCol).as("id"), simhash128(col(textCol)).as("sk")))
-      val chunked = simhashChunks(sk, maxBucketSize)
-      bucketSelfPairs(chunked, Seq("chunk", "chunk_val"),
-        Seq("hamming" -> hamming128(col("a.sk"), col("b.sk"))))
-        .filter(col("hamming") <= maxHamming)
-    }
+      maxHamming: Int = 7, maxBucketSize: Int = 256): DataFrame = {
+    val sk = library.stage(
+      df.select(col(idCol).as("id"),
+        // fused tokens→md5→chunks (r15): one pass, no interpreted
+        // per-token md5 lambda or hex round-trip — bit-identical to
+        // simhash_hex_chunks(transform(tokens, md5)) (TokensExprSpec pin;
+        // the oracle replays the hex-digit contract and stays green)
+        graft.expressions.SketchExpressions.simhash_md5_chunks(
+          tokens(col(textCol))).as("skc")))
+    val chunked0 = sk
+      .select(col("id"), col("skc"), posexplode(col("skc")))
+      .withColumnRenamed("pos", "chunk")
+      .withColumnRenamed("col", "chunk_val")
+    val chunked = pruneFullBuckets(chunked0, Seq("chunk", "chunk_val"), maxBucketSize)
+    val ham = (0 until 8).map { i =>
+      bit_count(element_at(col("a.skc"), i + 1)
+        .bitwiseXOR(element_at(col("b.skc"), i + 1)))
+    }.reduce(_ + _)
+    bucketSelfPairs(chunked, Seq("chunk", "chunk_val"),
+      Seq("hamming" -> ham))
+      .filter(col("hamming") <= maxHamming)
   }
 
   /** The eight 16-bit chunk rows per sketch (skew-guarded) — the SimHash

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.ingest.RawLoader
 import graft.models.Warehouse
 import graft.quality.{DbtStyleTests, DqChecks}
@@ -73,9 +73,6 @@ object Pipeline {
 
     RunResult(newRows, dq, w, tests)
   }
-
-  /** Serving entry (§3.3): the registered views answer ad-hoc SQL. */
-  def query(spark: SparkSession, sql: String): DataFrame = spark.sql(sql)
 
   /**
    * The dashboard-serving stage: publish every dashboard model under

@@ -93,12 +93,11 @@ object StreamingCuration {
     * `model.unpersistAll()` if the session outlives the stream. */
   def start(newDocs: DataFrame, idCol: String, textCol: String,
             model: LmScore.BigramModel, keptPath: String, droppedPath: String,
-            checkpoint: String, maxNll: Double = 6.0,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+            checkpoint: String, maxNll: Double = 6.0): StreamingQuery = {
     model.persistAll()
     newDocs.writeStream
       .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // materialize the micro-batch once — it feeds the cascade AND the
         // two sink actions; without this each action re-reads the source.

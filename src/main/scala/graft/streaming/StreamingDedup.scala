@@ -58,29 +58,31 @@ object StreamingDedup {
    * ([[Dedup.bandIndex]] written once at bootstrap); `pairsPath` the append
    * sink for verified (new_id, corpus_id, jaccard) rows.
    *
-   * `intraMaxBucketSize` bounds the intra-batch SELF-join's per-bucket work
-   * ([[Dedup.nearDuplicatePairs]]' skew guard): a band bucket larger than
-   * this is dropped from the intra pass. Deliberately asymmetric with the
-   * cross pass, which never prunes — the index join is LINEAR in bucket
-   * size where the self-join is QUADRATIC, so the trade only exists on the
-   * intra side. On boilerplate-heavy batches where hot buckets exceed the
-   * bound, intra recall is traded for bounded work — raise it (or size
-   * batches down) if intra completeness matters more than the guard.
+   * Runs with `Trigger.AvailableNow`: it drains what the source holds and
+   * stops, like the pipeline's bronze sink.
    */
   def start(spark: SparkSession, newDocs: DataFrame,
             corpusPath: String, indexPath: String, pairsPath: String,
             checkpoint: String, idCol: String, textCol: String,
-            threshold: Double = 0.8, numHashes: Int = 64, bands: Int = 16,
-            trigger: Trigger = Trigger.AvailableNow(),
-            intraMaxBucketSize: Int = 256): StreamingQuery =
+            threshold: Double = 0.8, numHashes: Int = 64,
+            bands: Int = 16): StreamingQuery =
     newDocs.writeStream
       .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         processBatch(spark, batch, corpusPath, indexPath, pairsPath,
-          idCol, textCol, threshold, numHashes, bands, intraMaxBucketSize)
+          idCol, textCol, threshold, numHashes, bands)
       }
       .start()
+
+  /** The intra-batch SELF-join's per-bucket bound
+    * ([[Dedup.nearDuplicatePairs]]' skew guard): a band bucket larger than
+    * this is dropped from the intra pass. Deliberately asymmetric with the
+    * cross pass, which never prunes — the index join is LINEAR in bucket
+    * size where the self-join is QUADRATIC, so the trade only exists on the
+    * intra side. On boilerplate-heavy batches where hot buckets exceed the
+    * bound, intra recall is traded for bounded work. */
+  private val intraMaxBucketSize = 256
 
   /** One micro-batch: dedup against the index, then grow the index. Factored
     * out of the foreachBatch closure so batch semantics are testable without
@@ -89,8 +91,7 @@ object StreamingDedup {
       spark: SparkSession, batch: DataFrame,
       corpusPath: String, indexPath: String, pairsPath: String,
       idCol: String, textCol: String,
-      threshold: Double, numHashes: Int, bands: Int,
-      intraMaxBucketSize: Int = 256): Unit = {
+      threshold: Double, numHashes: Int, bands: Int): Unit = {
     // The batch feeds two consumers (pair join + index append) and the
     // shared sketch frame below is staged; materialize the batch once so
     // the source is not re-read per consumer. Both are staged on this
@@ -177,7 +178,7 @@ object StreamingDedup {
         // the skew guard dropped was never recorded, and a later
         // re-delivery of both endpoints cannot recover it (both-committed ⇒
         // excluded). The prune trades exactly this recall for bounded
-        // quadratic work; raise the bound if intra completeness matters.
+        // quadratic work.
         val intra = Dedup.nearDuplicatePairs(b, idCol, textCol,
             threshold, numHashes, bands, maxBucketSize = intraMaxBucketSize,
             precomputedSketch = Some(sketch))

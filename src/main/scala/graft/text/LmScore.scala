@@ -57,16 +57,6 @@ object LmScore {
       .agg(sum(col("e.cnt")).as("c12"))
       .filter(col("c12") >= minCount)
 
-  /** Bigram-prefix counts `(w1, c1)`: occurrences of w1 in positions
-    * 1..len-1, i.e. `sum(c12) GROUP BY w1` — the denominator that makes
-    * `p(·|w1)` a true conditional. */
-  def prefixCounts(corpus: DataFrame, textCol: String): DataFrame =
-    corpus
-      .select(explode(graft.expressions.LmExpressions
-        .bigram_counts(TextAnalysis.tokens(col(textCol)))).as("e"))
-      .groupBy(col("e.w1").as("w1"))
-      .agg(sum(col("e.cnt")).as("c1"))
-
   /** 1-row frame with the training vocabulary size (distinct tokens, all
     * positions) — cross-joined below so the scalar stays inside the plan
     * instead of a driver collect. The per-doc [[graft.expressions
@@ -146,9 +136,9 @@ object LmScore {
    * `w2 = null`), so one aggregation tree yields bigram cells, prefix row
    * sums, AND the vocabulary count — where the three-frame formulation
    * scanned the corpus twice (bigrams + tokens) and shipped three scalar
-   * subqueries. Semantics are identical to [[bigramCounts]] /
-   * [[prefixCounts]] / [[vocabSize]]: prefix sums aggregate BEFORE minCount
-   * pruning, `v` counts distinct tokens over all positions (every token —
+   * subqueries. Semantics are identical to [[train]]'s `bg` / `pfx` / `v`
+   * frames: prefix sums aggregate BEFORE minCount pruning, `v` counts
+   * distinct tokens over all positions (every token —
    * including single-token docs' — appears as a tagged entry), and the
    * bigram map drops w1 groups left empty by pruning (their lookups fall
    * through to the prefix fallback either way). LmScoreSpec pins

@@ -22,15 +22,13 @@ class CorpusDiffSpec extends SparkSuite {
       (4L, "dup"), (5L, "e"), (6L, "f"),
       (7L, "x"), (7L, "z")
     ).toDF("id", "text")
-    for (portable <- Seq(false, true)) {
-      val out = asMap(CorpusDiff.diff(oldV, newV, "id", Seq("text"), portable))
-      assert(out === Map(
-        2L -> ("changed", 1L, 1L),
-        3L -> ("removed", 1L, 0L),
-        4L -> ("changed", 2L, 1L),
-        6L -> ("added", 0L, 1L),
-        7L -> ("changed", 2L, 2L)), s"portable=$portable")
-    }
+    val out = asMap(CorpusDiff.diff(oldV, newV, "id", Seq("text")))
+    assert(out === Map(
+      2L -> ("changed", 1L, 1L),
+      3L -> ("removed", 1L, 0L),
+      4L -> ("changed", 2L, 1L),
+      6L -> ("added", 0L, 1L),
+      7L -> ("changed", 2L, 2L)))
   }
 
   test("row order never matters: shuffled versions diff as empty") {
@@ -47,10 +45,8 @@ class CorpusDiffSpec extends SparkSuite {
     // diff as unchanged.
     val oldV = Seq((1L, "p"), (1L, "p")).toDF("id", "text")
     val newV = Seq((1L, "q"), (1L, "q")).toDF("id", "text")
-    for (portable <- Seq(false, true)) {
-      val out = asMap(CorpusDiff.diff(oldV, newV, "id", Seq("text"), portable))
-      assert(out === Map(1L -> ("changed", 2L, 2L)), s"portable=$portable")
-    }
+    val out = asMap(CorpusDiff.diff(oldV, newV, "id", Seq("text")))
+    assert(out === Map(1L -> ("changed", 2L, 2L)))
   }
 
   test("null keys are excluded (house rule); null CONTENT still diffs") {
@@ -61,28 +57,22 @@ class CorpusDiffSpec extends SparkSuite {
       .toDF("id", "text")
     val newV = Seq((Option(1L), Option("a")), (Option.empty[Long], Option.empty[String]))
       .toDF("id", "text")
-    for (portable <- Seq(false, true)) {
-      val out = CorpusDiff.diff(oldV, newV, "id", Seq("text"), portable)
-      assert(out.count() === 0, s"portable=$portable")
-    }
-    // null → non-null content on a REAL key is a change in both hash modes
+    val out = CorpusDiff.diff(oldV, newV, "id", Seq("text"))
+    assert(out.count() === 0)
+    // null → non-null content on a REAL key is a change
     val o2 = Seq((1L, Option.empty[String])).toDF("id", "text")
     val n2 = Seq((1L, Option("now set"))).toDF("id", "text")
-    for (portable <- Seq(false, true)) {
-      val out = CorpusDiff.diff(o2, n2, "id", Seq("text"), portable)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(out === Map(1L -> "changed"), s"portable=$portable")
-    }
+    val out2 = CorpusDiff.diff(o2, n2, "id", Seq("text"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(out2 === Map(1L -> "changed"))
   }
 
   test("multi-column content: a change in ANY content column is seen") {
     val oldV = Seq((1L, "t", "en"), (2L, "u", "en")).toDF("id", "text", "lang")
     val newV = Seq((1L, "t", "de"), (2L, "u", "en")).toDF("id", "text", "lang")
-    for (portable <- Seq(false, true)) {
-      val out = CorpusDiff.diff(oldV, newV, "id", Seq("text", "lang"), portable)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(out === Map(1L -> "changed"), s"portable=$portable")
-    }
+    val out = CorpusDiff.diff(oldV, newV, "id", Seq("text", "lang"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(out === Map(1L -> "changed"))
   }
 
   test("guards: empty contentCols, key in contentCols, reserved key name") {

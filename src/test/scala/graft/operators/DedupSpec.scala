@@ -101,20 +101,24 @@ class DedupSpec extends SparkSuite {
   }
 
   test("minhash est_jaccard is 1.0 for identical docs") {
-    val cand = Dedup.minhashCandidatePairs(docs, "doc_id", "text")
+    val cand = Dedup.nearDuplicatePairs(docs, "doc_id", "text", threshold = 0.0)
       .filter(col("id_a") === 1L && col("id_b") === 2L).collect()
     assert(cand.length == 1)
-    assert(cand.head.getAs[Double]("est_jaccard") == 1.0)
+    assert(cand.head.getAs[Double]("jaccard") == 1.0)
   }
 
   test("simhash: identical docs have distance 0; near-dups small; unrelated large") {
     val s = spark
     import s.implicits._
-    val sk = docs.select(col("doc_id"), Dedup.simhash(col("text")).as("sk"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    import graft.expressions.SketchExpressions.{simhash128, xxhash64_array}
+    val sk = docs.select(col("doc_id"), simhash128(xxhash64_array(
+        graft.text.TextAnalysis.tokens(col("text")))).as("sk"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    def hamming(a: Seq[Long], b: Seq[Long]): Int =
+      a.zip(b).map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum
     assert(sk(1L) == sk(2L))
-    val near = java.lang.Long.bitCount(sk(1L) ^ sk(3L))
-    val far = java.lang.Long.bitCount(sk(1L) ^ sk(4L))
+    val near = hamming(sk(1L), sk(3L))
+    val far = hamming(sk(1L), sk(4L))
     assert(near < far)
   }
 
@@ -248,8 +252,8 @@ class DedupSpec extends SparkSuite {
   }
 
   test("portable simhash mode finds the exact pair with distance 0 and no far pairs") {
-    val rows = Dedup.simhashNearDuplicates(docs, "doc_id", "text", maxHamming = 3,
-        portableHashing = true).collect()
+    val rows = Dedup.simhashNearDuplicates(docs, "doc_id", "text", maxHamming = 3)
+      .collect()
     val pairs = rows.map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(pairs.contains((1L, 2L)))
     assert(rows.find(r => r.getAs[Long]("id_a") == 1L && r.getAs[Long]("id_b") == 2L)
@@ -265,9 +269,10 @@ class DedupSpec extends SparkSuite {
     //     exact same candidate pairs;
     // (b) pathological corpus (300 identical docs, bucket size 300 > max):
     //     every bucket for the clones is over-full, so no pairs survive.
-    val pruned = Dedup.minhashCandidatePairs(docs, "doc_id", "text", maxBucketSize = 256)
+    val pruned = Dedup.nearDuplicatePairs(docs, "doc_id", "text", threshold = 0.0,
+        maxBucketSize = 256)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    val unpruned = Dedup.minhashCandidatePairs(docs, "doc_id", "text",
+    val unpruned = Dedup.nearDuplicatePairs(docs, "doc_id", "text", threshold = 0.0,
         maxBucketSize = Int.MaxValue)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(pruned == unpruned, "pruning changed output on a corpus with no over-full buckets")
@@ -276,7 +281,8 @@ class DedupSpec extends SparkSuite {
     import s.implicits._
     val clones = (0 until 300).map(i =>
       (i.toLong, "identical content repeated across every single clone document")).toDF("doc_id", "text")
-    val survivors = Dedup.minhashCandidatePairs(clones, "doc_id", "text", maxBucketSize = 100).count()
+    val survivors = Dedup.nearDuplicatePairs(clones, "doc_id", "text", threshold = 0.0,
+      maxBucketSize = 100).count()
     assert(survivors == 0L, s"over-full buckets not pruned: $survivors pairs emitted")
     graft.Materializer.library.close()
   }
@@ -299,7 +305,7 @@ class DedupSpec extends SparkSuite {
     val planted = (0 until 500 by 10).map(d => (d + 1000000L, docText(d) + " extraword"))
     val corpus = (base ++ planted).toDF("doc_id", "text")
 
-    val pairs = Dedup.simhashNearDuplicates(corpus, "doc_id", "text")
+    val pairs = Dedup.simhashVerifiedPairs(corpus, "doc_id", "text")
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
     val plantedFound = pairs.count(p => p._2 == p._1 + 1000000L)
     val falsePositives = pairs.length - plantedFound

@@ -36,7 +36,7 @@ class PipelineSpec extends SparkSuite {
     assert(r.testsPassed, s"failing: ${r.testResults.filterNot(_.passed)}")
 
     // serving path: registered views answer SQL (§3.3)
-    val n = Pipeline.query(spark,
+    val n = spark.sql(
       "SELECT count(*) AS n FROM fact_event").head().getLong(0)
     assert(n == 60)
 
@@ -125,11 +125,15 @@ class PipelineSpec extends SparkSuite {
 
   test("DQ gate halts the pipeline on ERROR-severity violations") {
     val tmp = Files.createTempDirectory("graft-pipe2").toString
-    writeBatchFile(Seq(ev(1), ev(2).copy(weight_kg = Some(-1.0))),
+    // a blank timestamp would abort the model build's date cast; the gate
+    // must stop it first and count it
+    writeBatchFile(Seq(ev(1), ev(2).copy(weight_kg = Some(-1.0)),
+        ev(3).copy(timestamp = Some(""))),
       s"$tmp/landing/bad.parquet")
-    intercept[DqChecks.DqGateFailure] {
+    val e = intercept[DqChecks.DqGateFailure] {
       Pipeline.run(spark, s"$tmp/landing", s"$tmp/bronze",
         s"$tmp/ckpt", s"$tmp/raw")
     }
+    assert(e.results.find(_.name == "malformed_timestamps").get.violations == 1)
   }
 }

@@ -22,7 +22,7 @@ class LmScoreSpec extends SparkSuite {
     val k = 0.5
     val c12 = LmScore.bigramCounts(train, "text").collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val c1 = LmScore.prefixCounts(train, "text").collect()
+    val c1 = LmScore.train(train, "text").pfx.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val v = LmScore.vocabSize(train, "text").collect().head.getLong(0)
     val vocab = Seq("a", "b", "c")
