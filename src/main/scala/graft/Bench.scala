@@ -134,15 +134,10 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
     } catch { case _: Throwable => -1.0 }
-    // escape the interpolated path like Verify does (r11 review): a quote
-    // or backslash in SPARK_GRAFT_SF_DIR would otherwise emit invalid JSON
-    // and lose the round's timings to the driver's json.load
-    val sfJson = "\"" + sfDir.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // escaped (r11 review): a quote or backslash in SPARK_GRAFT_SF_DIR
+    // would otherwise emit invalid JSON and lose the round's timings to
+    // the driver's json.load
+    val sfJson = Verify.jsonString(sfDir)
     // cpus + shuffle width stamped into the line (r14 verdict item 2): the
     // driver's low-core run could not VERIFY that SPARK_GRAFT_CPUS takes
     // effect (every sf0.1 ratio ≈ 1 — fixed-cost-bound rows) and flagged

@@ -1,6 +1,6 @@
 package graft.coverage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.coverage.OperatorQueries.BoundedSort
 import graft.Materializer
@@ -168,13 +168,21 @@ object LlmOpQueries {
     * internally, and rebuilding the query each call re-registered the same
     * plan with the CacheManager (the round-1 "already cached" warnings). */
   def dedupMinhashPairs(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "__q_minhash_pairs")(
-      Dedup.nearDuplicatePairs(nearDupCorpus(s, dir), "doc_id", "text",
-          threshold = 0.7, numHashes = 32, bands = 8,
-          portableHashing = true)
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("id_b") === col("id_a") + 1000000L, 1L).otherwise(0L))
-            .as("n_planted_found")))
+    memo(s, dir, "__q_minhash_pairs")(minhashPairCounts(nearDupCorpus(s, dir)))
+
+  /** [[plantedPairCounts]] of the portable MinHash-LSH pairs (Jaccard ≥ 0.7,
+    * 32 hashes × 8 bands) of `corpus`. */
+  private def minhashPairCounts(corpus: DataFrame): DataFrame =
+    plantedPairCounts(Dedup.nearDuplicatePairs(corpus, "doc_id", "text",
+      threshold = 0.7, numHashes = 32, bands = 8, portableHashing = true))
+
+  /** `n_pairs` and `n_planted_found` of a near-duplicate pair frame
+    * (`id_a < id_b`): a pair is planted when `planted` holds, by default
+    * when `id_b` is `id_a`'s +1,000,000 mutated copy. */
+  private def plantedPairCounts(pairs: DataFrame,
+      planted: Column = col("id_b") === col("id_a") + 1000000L): DataFrame =
+    pairs.agg(count(lit(1)).as("n_pairs"),
+      sum(when(planted, 1L).otherwise(0L)).as("n_planted_found"))
 
   /** Exact-boundary fixture docs (r12 review): before these, no pair in
     * the committed corpus landed anywhere near the 0.7 threshold (measured
@@ -237,28 +245,25 @@ object LlmOpQueries {
    * candidate pairs quadratically by construction and measure nothing).
    */
   private def nearDupCorpus10x(s: SparkSession, dir: String): DataFrame =
-    matInput(s, dir, "corpus_neardup10x") {
-      val base = nearDupCorpus(s, dir)
-      (0 until 10).map { k =>
-        base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_r$k").as("text"))
-      }.reduce(_ unionByName _)
-        .repartition(s.sessionState.conf.numShufflePartitions)
-    }
+    matInput(s, dir, "corpus_neardup10x")(replicate10x(s, nearDupCorpus(s, dir)))
 
   /** The documents table replicated 10× under disjoint vocabularies and ids
     * (same construction rationale as [[nearDupCorpus10x]]; pre-materialized
-    * input for the text-operator scaling queries). */
+    * input for the text-operator scaling queries). `lang` is carried for
+    * the LM 10× train slice; inert elsewhere. */
   private def docs10x(s: SparkSession, dir: String): DataFrame =
-    matInput(s, dir, "docs10x") {
-      val d = docs(s, dir).select("doc_id", "text", "lang")
-      (0 until 10).map { k =>
-        d.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_r$k").as("text"),
-          col("lang")) // carried for the LM 10× train slice; inert elsewhere
-      }.reduce(_ unionByName _)
-        .repartition(s.sessionState.conf.numShufflePartitions)
-    }
+    matInput(s, dir, "docs10x")(replicate10x(s, docs(s, dir), "lang"))
+
+  /** `base`'s (doc_id, text, `carried`…) replicated 10×: replica k offsets
+    * ids by k·10,000,000 and suffixes every token `_r<k>`. */
+  private def replicate10x(s: SparkSession, base: DataFrame,
+                           carried: String*): DataFrame =
+    (0 until 10).map { k =>
+      base.select(((col("doc_id") + lit(k * 10000000L)).as("doc_id") +:
+        regexp_replace(col("text"), "(\\S+)", s"$$1_r$k").as("text") +:
+        carried.map(col)): _*)
+    }.reduce(_ unionByName _)
+      .repartition(s.sessionState.conf.numShufflePartitions)
 
   // Learned BPE merge tables, memoized per (session, dir): the model is a
   // training artifact (prepared offline, like the IVF centroids and the
@@ -314,12 +319,7 @@ object LlmOpQueries {
     * all-pairs. */
   def dedupMinhashPairs10x(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "__q_minhash_pairs_10x")(
-      Dedup.nearDuplicatePairs(nearDupCorpus10x(s, dir), "doc_id", "text",
-          threshold = 0.7, numHashes = 32, bands = 8,
-          portableHashing = true)
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("id_b") === col("id_a") + 1000000L, 1L).otherwise(0L))
-            .as("n_planted_found")))
+      minhashPairCounts(nearDupCorpus10x(s, dir)))
 
   /** Exact-substring duplicate spans (oracle-checked): per-doc counts of
     * 8-token grams shared with at least one other document, over the corpus
@@ -376,11 +376,8 @@ object LlmOpQueries {
     * here). */
   def dedupSimhashPairs(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "__q_simhash_pairs")(
-      Dedup.simhashNearDuplicates(nearDupCorpus(s, dir), "doc_id", "text",
-          maxHamming = 12)
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("id_b") === col("id_a") + 1000000L, 1L).otherwise(0L))
-            .as("n_planted_found")))
+      plantedPairCounts(Dedup.simhashNearDuplicates(nearDupCorpus(s, dir),
+        "doc_id", "text", maxHamming = 12)))
 
   /** SimHash-bucketed near-dup pairs, exact-Jaccard verified, over the same
     * bounded sub-corpus construction as [[dedupMinhashVerified]] — checked
@@ -662,14 +659,21 @@ object LlmOpQueries {
     * the row was certified with. */
   def dedupEmbeddingCosine(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "__q_emb_cosine") {
-      val corpus = nearDupEmbeddings(s, dir)
-      val bits = SimilaritySearch.sizedLshBits(corpus.count(),
-        targetOccupancy = 21, minBits = 8)
-      SimilaritySearch.cosineNearDuplicates(corpus,
-          "vec_id", "v", threshold = 0.99, nTables = 8, nBits = bits)
+      embeddingPairs(nearDupEmbeddings(s, dir))
         .select("id_a", "id_b")
         .orderedSmallBarrier(col("id_a"), col("id_b"))
     }
+
+  /** Cosine ≥ 0.99 pairs of `corpus` (vec_id, v) over 8 sign-LSH tables,
+    * the bucket width sized to ~21 vectors per bucket. The one count() is a
+    * metadata read of the pre-materialized input, paid once at prepare
+    * time. */
+  private def embeddingPairs(corpus: DataFrame): DataFrame = {
+    val bits = SimilaritySearch.sizedLshBits(corpus.count(),
+      targetOccupancy = 21, minBits = 8)
+    SimilaritySearch.cosineNearDuplicates(corpus,
+      "vec_id", "v", threshold = 0.99, nTables = 8, nBits = bits)
+  }
 
   /** Scaling evidence for the embedding near-dup path (rows-only, memoized):
     * the same bucket+verify query over the sign-flipped 10× corpus
@@ -681,21 +685,12 @@ object LlmOpQueries {
     * ~21 vectors/bucket): the candidate stage is quadratic in per-bucket
     * occupancy, so scaling the data without scaling the buckets measures
     * the wrong thing — a fixed 8-bit width cost 94 s here (~100× the
-    * candidates); sized buckets keep candidates ~linear in N. The one
-    * count() is a metadata read of the pre-materialized input, paid once
-    * at prepare time. */
+    * candidates); sized buckets keep candidates ~linear in N. */
   def dedupEmbeddingCosine10x(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "__q_emb_cosine_10x") {
-      val corpus = nearDupEmbeddings10x(s, dir)
-      val bits = SimilaritySearch.sizedLshBits(corpus.count(),
-        targetOccupancy = 21, minBits = 8)
-      SimilaritySearch.cosineNearDuplicates(corpus,
-          "vec_id", "v", threshold = 0.99, nTables = 8, nBits = bits)
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(pmod(col("id_a"), lit(100000000L)) + 1000000L
-              === pmod(col("id_b"), lit(100000000L)), 1L).otherwise(0L))
-            .as("n_planted_found"))
-    }
+    memo(s, dir, "__q_emb_cosine_10x")(
+      plantedPairCounts(embeddingPairs(nearDupEmbeddings10x(s, dir)),
+        planted = pmod(col("id_a"), lit(100000000L)) + 1000000L
+          === pmod(col("id_b"), lit(100000000L))))
 
   /** The embedding-10× path ORACLE-certified by deterministic subsample
     * (r11, VERDICT r10 item 3's second half): the full 10× corpus's exact
@@ -719,10 +714,7 @@ object LlmOpQueries {
         nearDupEmbeddings10x(s, dir)
           .filter(baseId % 10 === 0 && baseId < 1000)
       }
-      val bits = SimilaritySearch.sizedLshBits(sub.count(),
-        targetOccupancy = 21, minBits = 8)
-      SimilaritySearch.cosineNearDuplicates(sub,
-          "vec_id", "v", threshold = 0.99, nTables = 8, nBits = bits)
+      embeddingPairs(sub)
         .select("id_a", "id_b")
         .orderedSmallBarrier(col("id_a"), col("id_b"))
     }
@@ -764,11 +756,20 @@ object LlmOpQueries {
                      portableHashing: Boolean = false): DataFrame = {
     val e = embeddings(s, dir)
     val q = e.filter(col("vec_id") < 10)
+    recallGate(s, dir, minRecall,
+      SimilaritySearch.lshTopK(e, "vec_id", "embedding",
+        q, "vec_id", "embedding", k = 5, nTables = nTables, nBits = nBits,
+        multiProbeBits = multiProbeBits, portableHashing = portableHashing))
+  }
+
+  /** recall@5 of an approximate top-5 (`query_id`, `corpus_id`) against
+    * [[exactTopK]], as one `(recall_at_5, meets_target)` row that survives
+    * only when recall ≥ `minRecall`: a recall collapse empties the row set
+    * and flips the driver check. */
+  private def recallGate(s: SparkSession, dir: String, minRecall: Double,
+                         approxTopK: DataFrame): DataFrame = {
     val exact = exactTopK(s, dir).select("query_id", "corpus_id")
-    val approx = SimilaritySearch.lshTopK(e, "vec_id", "embedding",
-      q, "vec_id", "embedding", k = 5, nTables = nTables, nBits = nBits,
-      multiProbeBits = multiProbeBits, portableHashing = portableHashing)
-      .select("query_id", "corpus_id")
+    val approx = approxTopK.select("query_id", "corpus_id")
       // distinct (r11 advice): the left-join recall form below is only
       // correct when the approx side is unique per (query_id, corpus_id) —
       // a future top-k variant emitting duplicate pairs would fan out the
@@ -806,7 +807,6 @@ object LlmOpQueries {
     memo(s, dir, "__q_ivf_recall") {
       val e = embeddings(s, dir)
       val q = e.filter(col("vec_id") < 10)
-      val exact = exactTopK(s, dir).select("query_id", "corpus_id")
       // nProbe 10/16: the testdata corpus is a worst case for IVF (planted
       // neighbours are near-random, scattering across lists — NOTES_r2), so
       // the recall query probes over half the lists and still tops out at
@@ -814,21 +814,13 @@ object LlmOpQueries {
       // nProbe 4 (proven on a clustered fixture in SimilaritySearchSpec).
       // The primary ANN path is the multi-probe sign-LSH (recall 1.00 here).
       // trainIters 3 tightens centroids at negligible cost (training is
-      // over list means, not the corpus).
-      val approx = SimilaritySearch.ivfTopK(e, "vec_id", "embedding",
-        q, "vec_id", "embedding", k = 5, nLists = 16, nProbe = 10,
-        trainIters = 3)
-        .select("query_id", "corpus_id")
-        .distinct()  // duplicate-pair guard — see lshRecallGated
-      exact.join(approx.withColumn("__hit", lit(1)),
-          Seq("query_id", "corpus_id"), "left")
-        .agg((coalesce(sum(col("__hit")), lit(0)).cast("double") /
-          greatest(count(lit(1)), lit(1L))).as("recall_at_5"))
-        // Gate at the corpus-limited floor (same collapse-visibility rationale
-        // as lshRecallGated): a regression below the documented worst-case
-        // band empties the row set and flips the driver check.
-        .withColumn("meets_target", col("recall_at_5") >= 0.5)
-        .filter(col("meets_target"))
+      // over list means, not the corpus). Gated at the corpus-limited
+      // floor: a regression below the documented worst-case band empties
+      // the row set.
+      recallGate(s, dir, minRecall = 0.5,
+        SimilaritySearch.ivfTopK(e, "vec_id", "embedding",
+          q, "vec_id", "embedding", k = 5, nLists = 16, nProbe = 10,
+          trainIters = 3))
     }
 
   /** Persisted-ANN-index probe (recall-gated rows, like [[simIvfRecall]]):
@@ -865,17 +857,9 @@ object LlmOpQueries {
       SimilaritySearch.buildIvfIndex(e, "vec_id", "embedding",
         tbl, nLists = 16, trainIters = 3, buckets = 8)
       val q = e.filter(col("vec_id") < 10)
-      val exact = exactTopK(s, dir).select("query_id", "corpus_id")
-      val approx = SimilaritySearch.ivfTopKIndexed(s, tbl,
-          q, "vec_id", "embedding", k = 5, nProbe = 10)
-        .select("query_id", "corpus_id")
-        .distinct()  // duplicate-pair guard — see lshRecallGated
-      exact.join(approx.withColumn("__hit", lit(1)),
-          Seq("query_id", "corpus_id"), "left")
-        .agg((coalesce(sum(col("__hit")), lit(0)).cast("double") /
-          greatest(count(lit(1)), lit(1L))).as("recall_at_5"))
-        .withColumn("meets_target", col("recall_at_5") >= 0.5)
-        .filter(col("meets_target"))
+      recallGate(s, dir, minRecall = 0.5,
+        SimilaritySearch.ivfTopKIndexed(s, tbl,
+          q, "vec_id", "embedding", k = 5, nProbe = 10))
     }
 
   /** Reproducible 10% sample by doc_id (oracle-checked row-for-row: the
@@ -980,14 +964,21 @@ object LlmOpQueries {
 
   /** Train/eval 3-gram contamination report over the hash split — the
     * decontamination check run before a pretraining job (oracle-checked). */
-  def tDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    val split = graft.operators.Sampling.withSplit(docs(s, dir), "doc_id")
+  def tDecontaminate(s: SparkSession, dir: String): DataFrame =
+    contamination(docs(s, dir)).orderBy("doc_id")
+
+  /** The train and test slices of `corpus`'s hash split. */
+  private def trainAndTest(corpus: DataFrame): (DataFrame, DataFrame) = {
+    val split = graft.operators.Sampling.withSplit(corpus, "doc_id")
+    (split.filter(col("split") === "train"), split.filter(col("split") === "test"))
+  }
+
+  /** The exact 3-shingle contamination report of `corpus`'s train slice
+    * against its test slice. */
+  private def contamination(corpus: DataFrame): DataFrame = {
+    val (train, test) = trainAndTest(corpus)
     graft.operators.Decontamination
-      .contaminationReport(
-        split.filter(col("split") === "train"),
-        split.filter(col("split") === "test"),
-        "doc_id", "text", k = 3)
-      .orderBy("doc_id")
+      .contaminationReport(train, test, "doc_id", "text", k = 3)
   }
 
   /** [[tDecontaminate]] through the Bloom-pre-filtered variant — the
@@ -1001,12 +992,9 @@ object LlmOpQueries {
     * on the survivors, so the per-pass work is the operator, not a cached
     * result. */
   def tDecontaminateBloom(s: SparkSession, dir: String): DataFrame = {
-    val split = graft.operators.Sampling.withSplit(docs(s, dir), "doc_id")
+    val (train, test) = trainAndTest(docs(s, dir))
     graft.operators.Decontamination
-      .contaminationReportBloom(
-        split.filter(col("split") === "train"),
-        split.filter(col("split") === "test"),
-        "doc_id", "text", k = 3,
+      .contaminationReportBloom(train, test, "doc_id", "text", k = 3,
         expectedEvalShingles = 1L << 16, fpp = 0.01)
       .orderBy("doc_id")
   }
@@ -1057,17 +1045,11 @@ object LlmOpQueries {
     * operator scale; near-linear wall-clock vs [[tDecontaminate]] is the
     * claim. */
   def tDecontaminate10x(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "__q_decontam_10x") {
-      val split = graft.operators.Sampling.withSplit(docs10x(s, dir), "doc_id")
-      graft.operators.Decontamination
-        .contaminationReport(
-          split.filter(col("split") === "train"),
-          split.filter(col("split") === "test"),
-          "doc_id", "text", k = 3)
+    memo(s, dir, "__q_decontam_10x")(
+      contamination(docs10x(s, dir))
         .agg(count(lit(1)).as("n_train_docs"),
           sum(when(col("contamination") > 0, 1L).otherwise(0L))
-            .as("n_contaminated"))
-    }
+            .as("n_contaminated")))
 
   /** Sequence-packing layout: every document's deterministic offset in its
     * shard's concatenated token stream, cut into 512-token examples
@@ -1254,24 +1236,22 @@ object LlmOpQueries {
       .withColumnRenamed("doc_id", "keeper_id")
       .orderBy("canonical_url")
 
-  /** Two deterministic corpus "versions" derived from `documents` — the
-    * snapshot-diff fixture: %10==3 docs exist only in NEW (added), %10==7
+  /** The diff of two deterministic "versions" of `base` (doc_id, text) —
+    * the snapshot-diff fixture: %10==3 docs exist only in NEW (added), %10==7
     * only in OLD (removed), %10==1 docs carry a " [v2]" text edit in NEW
     * (changed by content), and %97==5 docs appear TWICE in OLD but once in
     * NEW (changed by MULTIPLICITY — two identical rows xor to 0, so this
     * leg proves the count term catches what the fingerprint alone cannot).
     * The oracle replays the construction literally. */
-  private def corpusVersions(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    corpusVersionsOf(docs(s, dir).select("doc_id", "text"))
-
-  private def corpusVersionsOf(base: DataFrame): (DataFrame, DataFrame) = {
+  private def corpusVersionsDiff(base: DataFrame): DataFrame = {
     val d = col("doc_id")
     val oldV = base.filter(pmod(d, lit(10)) =!= 3)
       .unionByName(base.filter(pmod(d, lit(97)) === 5 && pmod(d, lit(10)) =!= 3))
     val newV = base.filter(pmod(d, lit(10)) =!= 7)
       .select(d, when(pmod(d, lit(10)) === 1, concat(col("text"), lit(" [v2]")))
         .otherwise(col("text")).as("text"))
-    (oldV, newV)
+    graft.layout.CorpusDiff.diff(oldV, newV, "doc_id", Seq("text"))
+      .orderBy("doc_id")
   }
 
   /** Corpus version diff (oracle-checked row-for-row): added / removed /
@@ -1281,11 +1261,8 @@ object LlmOpQueries {
     * the full-outer join — the shuffle carries ~24 bytes per key, never
     * document bodies; over key-bucketed snapshots the plan is
     * zero-Exchange (CorpusDiffSpec pins it). */
-  def oCorpusDiff(s: SparkSession, dir: String): DataFrame = {
-    val (oldV, newV) = corpusVersions(s, dir)
-    graft.layout.CorpusDiff.diff(oldV, newV, "doc_id", Seq("text"))
-      .orderBy("doc_id")
-  }
+  def oCorpusDiff(s: SparkSession, dir: String): DataFrame =
+    corpusVersionsDiff(docs(s, dir).select("doc_id", "text"))
 
   /** [[oCorpusDiff]] at 10× (oracle-backed scale evidence): the identical
     * version construction over the replicated corpus — the add/remove/edit
@@ -1293,12 +1270,8 @@ object LlmOpQueries {
     * deterministic delta and DuckDB replays the whole thing. Wall clock
     * must scale ~linearly: the per-key collapse keeps the join input at
     * one row per key regardless of corpus width. */
-  def oCorpusDiff10x(s: SparkSession, dir: String): DataFrame = {
-    val (oldV, newV) =
-      corpusVersionsOf(docs10x(s, dir).select("doc_id", "text"))
-    graft.layout.CorpusDiff.diff(oldV, newV, "doc_id", Seq("text"))
-      .orderBy("doc_id")
-  }
+  def oCorpusDiff10x(s: SparkSession, dir: String): DataFrame =
+    corpusVersionsDiff(docs10x(s, dir).select("doc_id", "text"))
 
   /** Temperature mixture weights (oracle-checked row-for-row, every DOUBLE
     * bit-exact): per-language α=0.5 sampling weights over `documents` — the

@@ -960,10 +960,14 @@ object OperatorQueries {
    * All-integer output → exact cross-engine hash.
    */
   def wSessionize(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sessionize
+    perUserSessions(graft.operators.Sessionize
       .sessionStats(T(s, dir, "events"), "user_id", "ts", "event_id",
-        gapSeconds = 4L * 3600)
-      .groupBy("user_id")
+        gapSeconds = 4L * 3600))
+
+  /** Per-user rollup of per-session stats: the one output both sessionize
+    * forms hash-compare against the same oracle. */
+  private def perUserSessions(sessions: DataFrame): DataFrame =
+    sessions.groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"),
         sum("n_events").as("n_events"),
         max("n_events").as("max_session_events"),
@@ -979,15 +983,9 @@ object OperatorQueries {
    * SessionizeSpec.
    */
   def wSessionizeSalted(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sessionize
+    perUserSessions(graft.operators.Sessionize
       .sessionStatsSalted(T(s, dir, "events"), "user_id", "ts", "event_id",
-        gapSeconds = 4L * 3600, bucketSpanSeconds = 24L * 3600)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_sessions"),
-        sum("n_events").as("n_events"),
-        max("n_events").as("max_session_events"),
-        max("duration_us").as("max_session_duration_us"))
-      .orderedSmallBarrier(col("user_id"))
+        gapSeconds = 4L * 3600, bucketSpanSeconds = 24L * 3600))
 
   /**
    * Sessionization at 10× (scaling evidence, rows-only): the events table

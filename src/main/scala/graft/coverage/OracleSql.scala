@@ -575,6 +575,43 @@ object OracleSql {
        |ORDER BY id_a, id_b""".stripMargin
   }
 
+  /** The chain corpus (two mutated copies per base doc) and the exact
+    * >= 0.7 pair graph transitively closed with a recursive CTE: emits
+    * `corpus(doc_id, text)` and `lbl(id, mr)`, the min reachable id per
+    * non-singleton doc. Shared by `dedup_cluster_assign` and
+    * `dedup_keep_best`, as the engine side shares one clustering
+    * (`LlmOpQueries.chainClusters`). Corpus bound < 500 (50 base docs):
+    * the 3x corpus makes this O(N^2)+recursive oracle ~4x costlier per doc
+    * than the verified-pairs ones — 50 three-chains certify the same
+    * properties without padding the DuckDB baseline total (9.6 s at < 1000
+    * vs ~2.4 s here). */
+  private val chainClosureSql: String =
+    s"""WITH RECURSIVE corpus AS (
+       |  SELECT doc_id, text FROM documents
+       |  WHERE doc_id % 10 = 0 AND doc_id < 500
+       |  UNION ALL
+       |  SELECT doc_id + 1000000 AS doc_id, text || ' extraword' AS text
+       |  FROM documents WHERE doc_id % 10 = 0 AND doc_id < 500
+       |  UNION ALL
+       |  SELECT doc_id + 2000000 AS doc_id,
+       |         text || ' extraword extrawordtwo' AS text
+       |  FROM documents WHERE doc_id % 10 = 0 AND doc_id < 500),
+       |tk AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
+       |       FROM corpus),
+       |sh AS (SELECT doc_id, ${shingleSql("toks")} AS sh FROM tk),
+       |pairs AS (
+       |  SELECT a.doc_id AS u, b.doc_id AS v
+       |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+       |  WHERE CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) = 0 THEN 0.0
+       |             ELSE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+       |                  / len(list_distinct(list_concat(a.sh, b.sh))) END >= 0.7),
+       |edges AS (SELECT u, v FROM pairs UNION ALL SELECT v AS u, u AS v FROM pairs),
+       |reach AS (
+       |  SELECT u AS id, v AS r FROM edges
+       |  UNION
+       |  SELECT reach.id, e.v AS r FROM reach JOIN edges e ON reach.r = e.u),
+       |lbl AS (SELECT id, min(r) AS mr FROM reach GROUP BY id)""".stripMargin
+
   /** The bigram-LM chain (`LmScore.perplexityFilter`) over `corpusSql`
     * (must provide doc_id, lang, text), up to the per-doc `agg` CTE —
     * callers append their own final SELECT over `tk`/`agg`. Shared by the
@@ -707,6 +744,87 @@ object OracleSql {
   private val BpeMerges = 24
   private val BpeVocabCap = 2000
 
+  /** The filter-cascade metric CTEs over a `tk(doc_id, toks, ...)` CTE:
+    * `m` (stopword ratio, bigrams, per-language marker hits) and `m2` (dup
+    * fraction, language). `nTokens` is `m`'s token-count column. Shared by
+    * `t_filter_cascade` and `t_curation_pipeline`. Stopword and marker
+    * literals are sourced from the same Scala Seqs the engine uses (no
+    * drift). */
+  private def cascadeMetricsSql(nTokens: String): String =
+    s"""m AS (SELECT doc_id, $nTokens,
+       |        CASE WHEN len(toks) > 0
+       |             THEN CAST(len(list_filter(toks, x -> list_contains(
+       |                    ${stopwordsList}, x))) AS DOUBLE) / len(toks)
+       |             ELSE 0.0 END AS stopword_ratio,
+       |        [array_to_string(toks[i:i+1], ' ')
+       |         FOR i IN range(1, greatest(len(toks)-1, 1) + 1)] AS grams,
+       |        len(list_filter(toks, x -> list_contains(${markers("en")}, x))) AS en,
+       |        len(list_filter(toks, x -> list_contains(${markers("es")}, x))) AS es,
+       |        len(list_filter(toks, x -> list_contains(${markers("fr")}, x))) AS fr,
+       |        len(list_filter(toks, x -> list_contains(${markers("de")}, x))) AS de,
+       |        len(list_filter(toks, x -> list_contains(${markers("zh")}, x))) AS zh
+       |      FROM tk),
+       |m2 AS (SELECT doc_id, n_tokens, stopword_ratio,
+       |         CASE WHEN len(grams) > 0
+       |              THEN CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE)
+       |                   / len(grams)
+       |              ELSE 0.0 END AS dup_frac,
+       |         CASE WHEN greatest(en, es, fr, de, zh) = 0 THEN 'und'
+       |              WHEN de >= en AND de >= es AND de >= fr AND de >= zh THEN 'de'
+       |              WHEN en >= es AND en >= fr AND en >= zh THEN 'en'
+       |              WHEN es >= fr AND es >= zh THEN 'es'
+       |              WHEN fr >= zh THEN 'fr'
+       |              ELSE 'zh' END AS lang
+       |       FROM m)""".stripMargin
+
+  /** The tf/df/rank chain of the salient-term replay over a
+    * `tok(doc_id, term)` CTE: integer-ranked tf-idf (tf DESC, corpus df
+    * ASC, term ASC) as `r(doc_id, term, tf, df, rk)`. Shared by
+    * `t_salient_terms` and `t_salient_terms_10x`. */
+  private val salientRankSql: String =
+    """tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
+      |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
+      |r AS (SELECT tf.doc_id, tf.term, tf.tf, df.df,
+      |             row_number() OVER (PARTITION BY tf.doc_id
+      |               ORDER BY tf.tf DESC, df.df ASC, tf.term ASC) AS rk
+      |      FROM tf JOIN df USING (term))""".stripMargin
+
+  /** The distinct 8-gram census of the span replays over a `tk(doc_id,
+    * toks)` CTE: per-doc distinct grams `g(doc_id, gram)` and the grams
+    * under >= 2 doc ids, `dup(gram)` (grams are per-doc distinct, so plain
+    * count == distinct-doc count). Shared by `dedup_span_report` and
+    * `dedup_span_report_10x`. */
+  private val spanCensusSql: String =
+    """g AS (SELECT doc_id,
+      |             unnest(list_distinct([array_to_string(toks[i:i+7], ' ')
+      |               FOR i IN range(1, greatest(len(toks)-7, 1) + 1)])) AS gram
+      |      FROM tk),
+      |d AS (SELECT gram, count(*) AS n_docs FROM g GROUP BY gram),
+      |dup AS (SELECT gram FROM d WHERE n_docs >= 2)""".stripMargin
+
+  /** The perturbed embedding corpus: every vector plus a planted
+    * near-copy (+1,000,000 ids) of every 10th, emitted as `corpus(vec_id,
+    * v)`. Shared by `dedup_embedding_cosine` and
+    * `dedup_embedding_cosine_10x_verified`. */
+  private val perturbedEmbeddingsSql: String =
+    """WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |pert AS (SELECT vec_id + 1000000 AS vec_id,
+      |                list_transform(range(len(v)),
+      |                               i -> v[i+1] * (1 + 0.001*((i % 5) - 2))) AS v
+      |         FROM base WHERE vec_id % 10 = 0),
+      |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM pert)""".stripMargin
+
+  /** The shard of an md5-hex key column `k` as Shuffling.shuffled computes
+    * it: the value of the key's first 4 hex chars (16-bit bucket) mod
+    * `nShards`. strpos arithmetic is the engine-portable form of Spark's
+    * conv(); continuation lines are indented `indent` spaces. Shared by
+    * `samp_shuffle_shards`, `samp_mix_weighted` and `t_curation_pipeline`. */
+  private def md5ShardSql(nShards: Int, indent: Int): String =
+    Seq(4096, 256, 16, 1).zipWithIndex.map { case (w, i) =>
+      s"(strpos('0123456789abcdef', substring(k,${i + 1},1))-1)" +
+        (if (w > 1) s"*$w" else "")
+    }.mkString("CAST((", "\n" + " " * indent + "+", s") % $nShards AS BIGINT)")
+
   // Shared by `w_sessionize` and `w_sessionize_salted`: the salted Spark
   // form is exactly the plain operator's semantics under a different
   // physical plan, so both hash-compare against one SQL.
@@ -793,19 +911,15 @@ object OracleSql {
          |      FROM documents)
          |GROUP BY 1 ORDER BY split""".stripMargin,
 
-    // Replays Shuffling.shuffled digit-by-digit: shard = value of the md5
-    // key's first 4 hex chars (16-bit bucket) mod 8; pos = per-shard hash
-    // rank. strpos arithmetic is the engine-portable form of Spark's conv().
+    // Replays Shuffling.shuffled digit-by-digit: shard = [[md5ShardSql]]
+    // mod 8; pos = per-shard hash rank.
     "samp_shuffle_shards" ->
-      """WITH keyed AS (
+      s"""WITH keyed AS (
         |  SELECT doc_id, md5('epoch0:' || CAST(doc_id AS VARCHAR)) AS k
         |  FROM documents),
         |sharded AS (
         |  SELECT doc_id, k,
-        |    CAST(((strpos('0123456789abcdef', substring(k,1,1))-1)*4096
-        |         +(strpos('0123456789abcdef', substring(k,2,1))-1)*256
-        |         +(strpos('0123456789abcdef', substring(k,3,1))-1)*16
-        |         +(strpos('0123456789abcdef', substring(k,4,1))-1)) % 8 AS BIGINT)
+        |    ${md5ShardSql(8, indent = 9)}
         |      AS shard
         |  FROM keyed)
         |SELECT doc_id, shard,
@@ -842,10 +956,7 @@ object OracleSql {
          |  FROM mixed),
          |sharded AS (
          |  SELECT mix_source, mix_epoch, doc_id, mk, k,
-         |    CAST(((strpos('0123456789abcdef', substring(k,1,1))-1)*4096
-         |         +(strpos('0123456789abcdef', substring(k,2,1))-1)*256
-         |         +(strpos('0123456789abcdef', substring(k,3,1))-1)*16
-         |         +(strpos('0123456789abcdef', substring(k,4,1))-1)) % 4 AS BIGINT)
+         |    ${md5ShardSql(4, indent = 9)}
          |      AS shard
          |  FROM keyed)
          |SELECT mix_source, mix_epoch, doc_id, shard,
@@ -1001,15 +1112,10 @@ object OracleSql {
     },
 
     "t_salient_terms" ->
-      """WITH tok AS (SELECT doc_id,
-        |                    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+      s"""WITH tok AS (SELECT doc_id,
+        |                    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
         |             FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
-        |r AS (SELECT tf.doc_id, tf.term, tf.tf, df.df,
-        |             row_number() OVER (PARTITION BY tf.doc_id
-        |               ORDER BY tf.tf DESC, df.df ASC, tf.term ASC) AS rk
-        |      FROM tf JOIN df USING (term))
+        |$salientRankSql
         |SELECT doc_id, term, tf, df FROM r WHERE rk = 1 ORDER BY doc_id""".stripMargin,
 
     // 10× scaling twin: DuckDB replays the corpus replication AND the
@@ -1020,12 +1126,7 @@ object OracleSql {
          |tok AS (SELECT doc_id,
          |               unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
          |        FROM rep),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-         |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
-         |r AS (SELECT tf.doc_id, tf.term, tf.tf, df.df,
-         |             row_number() OVER (PARTITION BY tf.doc_id
-         |               ORDER BY tf.tf DESC, df.df ASC, tf.term ASC) AS rk
-         |      FROM tf JOIN df USING (term))
+         |$salientRankSql
          |SELECT CAST(count(*) AS BIGINT) AS n_docs,
          |       CAST(count(DISTINCT term) AS BIGINT) AS n_distinct_terms
          |FROM r WHERE rk = 1""".stripMargin,
@@ -1248,24 +1349,17 @@ object OracleSql {
     // sessionStatsSalted flips this row's hash compare
     "w_sessionize_salted" -> sessionizeSql,
 
-    // exact-substring duplicate spans: distinct 8-token grams per doc, a
-    // gram is a duplicate iff it appears under >= 2 doc ids (grams are
-    // per-doc distinct, so plain count == distinct-doc count)
+    // exact-substring duplicate spans ([[spanCensusSql]]) per doc;
     // input = corpus + planted exact copies of every 10th doc (r12: the
     // duplicate path must be exercised by CONSTRUCTION, not corpus luck)
     "dedup_span_report" ->
-      """WITH src AS (SELECT doc_id, text FROM documents
+      s"""WITH src AS (SELECT doc_id, text FROM documents
         |             UNION ALL
         |             SELECT doc_id + 1000000, text FROM documents
         |             WHERE doc_id % 10 = 0),
-        |tk AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
+        |tk AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
         |            FROM src),
-        |g AS (SELECT doc_id,
-        |             unnest(list_distinct([array_to_string(toks[i:i+7], ' ')
-        |               FOR i IN range(1, greatest(len(toks)-7, 1) + 1)])) AS gram
-        |      FROM tk),
-        |d AS (SELECT gram, count(*) AS n_docs FROM g GROUP BY gram),
-        |dup AS (SELECT gram FROM d WHERE n_docs >= 2)
+        |$spanCensusSql
         |SELECT g.doc_id, count(*) AS n_grams,
         |       CAST(sum(CASE WHEN dup.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
         |         AS n_dup_grams,
@@ -1287,12 +1381,7 @@ object OracleSql {
       s"""WITH rep AS ($docs10xSql),
         |tk AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
         |       FROM rep),
-        |g AS (SELECT doc_id,
-        |             unnest(list_distinct([array_to_string(toks[i:i+7], ' ')
-        |               FOR i IN range(1, greatest(len(toks)-7, 1) + 1)])) AS gram
-        |      FROM tk),
-        |d AS (SELECT gram, count(*) AS n_docs FROM g GROUP BY gram),
-        |dup AS (SELECT gram FROM d WHERE n_docs >= 2),
+        |$spanCensusSql,
         |per AS (SELECT g.doc_id, count(*) AS n_grams,
         |               sum(CASE WHEN dup.gram IS NOT NULL THEN 1 ELSE 0 END) AS n_dup
         |        FROM g LEFT JOIN dup ON g.gram = dup.gram
@@ -1482,41 +1571,12 @@ object OracleSql {
     // covered by the ungated MinHash certificate above.
     "dedup_simhash_verified" -> boundedVerifiedPairsSql(minTokens = 20),
 
-    // Cluster assignment = the exact >=0.7 pair graph transitively closed
-    // with a recursive CTE, min-id label per component, singletons
-    // self-labelled. The chain corpus (two mutated copies per base doc)
-    // makes closure non-trivial: on short docs base<->two-token falls under
-    // the threshold while both chain links stay above it.
-    // corpus bound < 500 (50 base docs): the 3x corpus makes this
-    // O(N^2)+recursive oracle ~4x costlier per doc than the verified-pairs
-    // ones — 50 three-chains certify the same properties without padding
-    // the DuckDB baseline total (9.6 s at < 1000 vs ~2.4 s here).
+    // Cluster assignment = min-id label per component of the closed chain
+    // graph ([[chainClosureSql]]), singletons self-labelled. The chain
+    // corpus makes closure non-trivial: on short docs base<->two-token
+    // falls under the threshold while both chain links stay above it.
     "dedup_cluster_assign" ->
-      s"""WITH RECURSIVE corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  WHERE doc_id % 10 = 0 AND doc_id < 500
-         |  UNION ALL
-         |  SELECT doc_id + 1000000 AS doc_id, text || ' extraword' AS text
-         |  FROM documents WHERE doc_id % 10 = 0 AND doc_id < 500
-         |  UNION ALL
-         |  SELECT doc_id + 2000000 AS doc_id,
-         |         text || ' extraword extrawordtwo' AS text
-         |  FROM documents WHERE doc_id % 10 = 0 AND doc_id < 500),
-         |tk AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |       FROM corpus),
-         |sh AS (SELECT doc_id, ${shingleSql("toks")} AS sh FROM tk),
-         |pairs AS (
-         |  SELECT a.doc_id AS u, b.doc_id AS v
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) = 0 THEN 0.0
-         |             ELSE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |                  / len(list_distinct(list_concat(a.sh, b.sh))) END >= 0.7),
-         |edges AS (SELECT u, v FROM pairs UNION ALL SELECT v AS u, u AS v FROM pairs),
-         |reach AS (
-         |  SELECT u AS id, v AS r FROM edges
-         |  UNION
-         |  SELECT reach.id, e.v AS r FROM reach JOIN edges e ON reach.r = e.u),
-         |lbl AS (SELECT id, min(r) AS mr FROM reach GROUP BY id)
+      s"""$chainClosureSql
          |SELECT c.doc_id,
          |       least(coalesce(l.mr, c.doc_id), c.doc_id) AS cluster_id,
          |       least(coalesce(l.mr, c.doc_id), c.doc_id) = c.doc_id AS is_keeper
@@ -1530,31 +1590,7 @@ object OracleSql {
     // the policy, not a shared code path. Score replay = the tokenCount
     // contract: split on \s+ of the trimmed lowered text, blank/null → 0.
     "dedup_keep_best" ->
-      s"""WITH RECURSIVE corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  WHERE doc_id % 10 = 0 AND doc_id < 500
-         |  UNION ALL
-         |  SELECT doc_id + 1000000 AS doc_id, text || ' extraword' AS text
-         |  FROM documents WHERE doc_id % 10 = 0 AND doc_id < 500
-         |  UNION ALL
-         |  SELECT doc_id + 2000000 AS doc_id,
-         |         text || ' extraword extrawordtwo' AS text
-         |  FROM documents WHERE doc_id % 10 = 0 AND doc_id < 500),
-         |tk AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-         |       FROM corpus),
-         |sh AS (SELECT doc_id, ${shingleSql("toks")} AS sh FROM tk),
-         |pairs AS (
-         |  SELECT a.doc_id AS u, b.doc_id AS v
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) = 0 THEN 0.0
-         |             ELSE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |                  / len(list_distinct(list_concat(a.sh, b.sh))) END >= 0.7),
-         |edges AS (SELECT u, v FROM pairs UNION ALL SELECT v AS u, u AS v FROM pairs),
-         |reach AS (
-         |  SELECT u AS id, v AS r FROM edges
-         |  UNION
-         |  SELECT reach.id, e.v AS r FROM reach JOIN edges e ON reach.r = e.u),
-         |lbl AS (SELECT id, min(r) AS mr FROM reach GROUP BY id),
+      s"""$chainClosureSql,
          |clustered AS (
          |  SELECT c.doc_id,
          |         least(coalesce(l.mr, c.doc_id), c.doc_id) AS cluster_id,
@@ -1574,12 +1610,7 @@ object OracleSql {
          |ORDER BY m.cluster_id""".stripMargin,
 
     "dedup_embedding_cosine" ->
-      """WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |pert AS (SELECT vec_id + 1000000 AS vec_id,
-        |                list_transform(range(len(v)),
-        |                               i -> v[i+1] * (1 + 0.001*((i % 5) - 2))) AS v
-        |         FROM base WHERE vec_id % 10 = 0),
-        |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM pert)
+      s"""$perturbedEmbeddingsSql
         |SELECT a.vec_id AS id_a, b.vec_id AS id_b
         |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
         |WHERE list_cosine_similarity(a.v, b.v) >= 0.99
@@ -1593,12 +1624,7 @@ object OracleSql {
     // decision has ~0.49 of margin (planted ≈ 0.999999, natural max
     // ≈ 0.51), so list_cosine_similarity's op order is irrelevant.
     "dedup_embedding_cosine_10x_verified" ->
-      """WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |pert AS (SELECT vec_id + 1000000 AS vec_id,
-        |                list_transform(range(len(v)),
-        |                               i -> v[i+1] * (1 + 0.001*((i % 5) - 2))) AS v
-        |         FROM base WHERE vec_id % 10 = 0),
-        |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM pert),
+      s"""$perturbedEmbeddingsSql,
         |rep AS (SELECT c.vec_id + k.k * 100000000 AS vec_id,
         |               list_transform(range(len(c.v)),
         |                 i -> CASE WHEN (strpos('0123456789abcdef',
@@ -1757,9 +1783,7 @@ object OracleSql {
 
     // Replays FilterCascade.gopherRecipe: every metric (token count,
     // stopword ratio, dup-2-gram fraction, marker-vote language) plus the
-    // ordered CASE chain with the operator's default thresholds. Stopword
-    // and marker literals are sourced from the same Scala Seqs the engine
-    // uses (no drift).
+    // ordered CASE chain with the operator's default thresholds.
     "t_filter_cascade" ->
       s"""WITH tk AS (SELECT doc_id,
          |              string_split_regex(trim(lower(text)), '\\s+') AS toks,
@@ -1767,31 +1791,7 @@ object OracleSql {
          |                   ELSE len(string_split_regex(trim(lower(text)), '\\s+'))
          |              END AS n_tokens
          |            FROM documents),
-         |m AS (SELECT doc_id, n_tokens,
-         |        CASE WHEN len(toks) > 0
-         |             THEN CAST(len(list_filter(toks, x -> list_contains(
-         |                    ${stopwordsList}, x))) AS DOUBLE) / len(toks)
-         |             ELSE 0.0 END AS stopword_ratio,
-         |        [array_to_string(toks[i:i+1], ' ')
-         |         FOR i IN range(1, greatest(len(toks)-1, 1) + 1)] AS grams,
-         |        len(list_filter(toks, x -> list_contains(${markers("en")}, x))) AS en,
-         |        len(list_filter(toks, x -> list_contains(${markers("es")}, x))) AS es,
-         |        len(list_filter(toks, x -> list_contains(${markers("fr")}, x))) AS fr,
-         |        len(list_filter(toks, x -> list_contains(${markers("de")}, x))) AS de,
-         |        len(list_filter(toks, x -> list_contains(${markers("zh")}, x))) AS zh
-         |      FROM tk),
-         |m2 AS (SELECT doc_id, n_tokens, stopword_ratio,
-         |         CASE WHEN len(grams) > 0
-         |              THEN CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE)
-         |                   / len(grams)
-         |              ELSE 0.0 END AS dup_frac,
-         |         CASE WHEN greatest(en, es, fr, de, zh) = 0 THEN 'und'
-         |              WHEN de >= en AND de >= es AND de >= fr AND de >= zh THEN 'de'
-         |              WHEN en >= es AND en >= fr AND en >= zh THEN 'en'
-         |              WHEN es >= fr AND es >= zh THEN 'es'
-         |              WHEN fr >= zh THEN 'fr'
-         |              ELSE 'zh' END AS lang
-         |       FROM m),
+         |${cascadeMetricsSql("n_tokens")},
          |dec AS (SELECT doc_id, n_tokens,
          |          CASE WHEN n_tokens < 15 THEN 'too_short'
          |               WHEN n_tokens > 100000 THEN 'too_long'
@@ -1865,31 +1865,7 @@ object OracleSql {
       s"""WITH tk AS (SELECT doc_id,
          |              string_split_regex(trim(lower(text)), '\\s+') AS toks
          |            FROM documents),
-         |m AS (SELECT doc_id, len(toks) AS n_tokens,
-         |        CASE WHEN len(toks) > 0
-         |             THEN CAST(len(list_filter(toks, x -> list_contains(
-         |                    ${stopwordsList}, x))) AS DOUBLE) / len(toks)
-         |             ELSE 0.0 END AS stopword_ratio,
-         |        [array_to_string(toks[i:i+1], ' ')
-         |         FOR i IN range(1, greatest(len(toks)-1, 1) + 1)] AS grams,
-         |        len(list_filter(toks, x -> list_contains(${markers("en")}, x))) AS en,
-         |        len(list_filter(toks, x -> list_contains(${markers("es")}, x))) AS es,
-         |        len(list_filter(toks, x -> list_contains(${markers("fr")}, x))) AS fr,
-         |        len(list_filter(toks, x -> list_contains(${markers("de")}, x))) AS de,
-         |        len(list_filter(toks, x -> list_contains(${markers("zh")}, x))) AS zh
-         |      FROM tk),
-         |m2 AS (SELECT doc_id, n_tokens, stopword_ratio,
-         |         CASE WHEN len(grams) > 0
-         |              THEN CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE)
-         |                   / len(grams)
-         |              ELSE 0.0 END AS dup_frac,
-         |         CASE WHEN greatest(en, es, fr, de, zh) = 0 THEN 'und'
-         |              WHEN de >= en AND de >= es AND de >= fr AND de >= zh THEN 'de'
-         |              WHEN en >= es AND en >= fr AND en >= zh THEN 'en'
-         |              WHEN es >= fr AND es >= zh THEN 'es'
-         |              WHEN fr >= zh THEN 'fr'
-         |              ELSE 'zh' END AS lang
-         |       FROM m),
+         |${cascadeMetricsSql("len(toks) AS n_tokens")},
          |k1 AS (SELECT d.doc_id, d.text
          |       FROM documents d JOIN m2 ON d.doc_id = m2.doc_id
          |       WHERE NOT (m2.n_tokens < 15 OR m2.n_tokens > 100000
@@ -1924,10 +1900,7 @@ object OracleSql {
          |            md5('cur1:' || CAST(doc_id AS VARCHAR)) AS k
          |          FROM dd),
          |sharded AS (SELECT doc_id, k,
-         |  CAST(((strpos('0123456789abcdef', substring(k,1,1))-1)*4096
-         |       +(strpos('0123456789abcdef', substring(k,2,1))-1)*256
-         |       +(strpos('0123456789abcdef', substring(k,3,1))-1)*16
-         |       +(strpos('0123456789abcdef', substring(k,4,1))-1)) % 8 AS BIGINT)
+         |  ${md5ShardSql(8, indent = 7)}
          |    AS shard
          |  FROM keyed)
          |SELECT doc_id, shard,

@@ -122,9 +122,9 @@ object DbtStyleTests {
     }
 
     val enumTests = Seq(
-      acceptedValuesCheck("int_invalid_logistics_events", w.invalid, "invalid_reason", Seq(
-        "INVALID_WEIGHT", "MISSING_COORDINATES", "INVALID_ESTIMATED_DELIVERY",
-        "MISSING_STATUS", "MISSING_LOCATION")),
+      // the enumeration the reason CASE labels with, so the two cannot drift
+      acceptedValuesCheck("int_invalid_logistics_events", w.invalid, "invalid_reason",
+        graft.models.Intermediate.reasons),
       acceptedValuesCheck("fact_event", w.factEvent, "is_late_delivery", Seq(true, false)),
       // beyond schema.yml: the conformed status enumeration
       acceptedValuesCheck("dim_status", w.dimStatus, "status_name", validStatuses))

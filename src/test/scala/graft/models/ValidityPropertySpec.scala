@@ -60,10 +60,14 @@ class ValidityPropertySpec extends SparkSuite {
   test("valid ⊎ invalid partitions staging for arbitrary corrupted batches") {
     samples(Gen.listOfN(60, genEvent), 5).foreach { events =>
       val stg = Staging.stg(spark.createDataFrame(events)).cache()
-      val v = Intermediate.valid(stg)
-      val i = Intermediate.invalid(stg)
-      assert(v.count() + i.count() == stg.count())
-      assert(v.select("event_id").intersect(i.select("event_id")).count() == 0)
+      val split = Intermediate.split(stg)
+      // the lazy reference, then the split every hourly run stores
+      Seq(Intermediate.valid(stg) -> Intermediate.invalid(stg),
+          Intermediate.validOf(split) -> Intermediate.invalidOf(split)).foreach {
+        case (v, i) =>
+          assert(v.count() + i.count() == stg.count())
+          assert(v.select("event_id").intersect(i.select("event_id")).count() == 0)
+      }
       stg.unpersist()
     }
   }

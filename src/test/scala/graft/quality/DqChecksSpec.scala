@@ -52,8 +52,11 @@ class DqChecksSpec extends SparkSuite {
   }
 
   test("single-scan runAll matches the per-check functions") {
+    // the last row repeats e9: runAll counts groups with n > 1, the
+    // per-check function filters a grouped count
     val raw = mkRaw(Seq(clean, clean.copy(event_id = None),
-      clean.copy(event_id = Some("e9"), weight_kg = Some(0.0))))
+      clean.copy(event_id = Some("e9"), weight_kg = Some(0.0)),
+      clean.copy(event_id = Some("e9"))))
     val all = intercept[DqChecks.DqGateFailure](DqChecks.runAll(raw)).results
       .map(c => c.name -> c.violations).toMap
     assert(all("null_ids") == DqChecks.nullIds(raw))
@@ -61,6 +64,8 @@ class DqChecksSpec extends SparkSuite {
     assert(all("malformed_timestamps") == DqChecks.malformedTimestamps(raw))
     assert(all("invalid_statuses") == DqChecks.invalidStatuses(raw))
     assert(all("out_of_bounds_coords") == DqChecks.outOfBoundsCoords(raw))
+    assert(all("duplicate_event_ids") == DqChecks.duplicateEventIds(raw))
+    assert(all("duplicate_event_ids") == 1L)
     assert(all("bad_delivery_dates") == DqChecks.badDeliveryDates(raw))
   }
 

@@ -287,6 +287,26 @@ class EventStreamIngestSpec extends SparkSuite {
       msg.toLowerCase.contains("failed to find"), msg)
   }
 
+  test("toKafkaSink fails at start() with the same data-source error and leaves no query") {
+    // the producer side of the same env-bound claim: the sink is wired
+    // (record encoding + options), and start() is where the missing
+    // connector jar surfaces
+    val tmp = Files.createTempDirectory("graft-kafka-sink").toString
+    new java.io.File(s"$tmp/landing").mkdirs()
+    val events = EventStreamIngest.fromFiles(spark, s"$tmp/landing")
+    val thrown = intercept[Exception] {
+      EventStreamIngest.toKafkaSink(events, "broker:9092",
+        checkpointDir = s"$tmp/ckpt")
+    }
+    // the sink lookup raises Spark's Kafka-specific form of the error
+    // ("Failed to find data source: kafka. Please deploy ...")
+    val msg = thrown.getMessage
+    assert(msg.contains("kafka"), msg)
+    assert(msg.contains("DATA_SOURCE_NOT_FOUND") ||
+      msg.toLowerCase.contains("failed to find"), msg)
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("kafka wire records round-trip: encode keys by order_id, decode restores events") {
     val events = spark.createDataFrame((1 to 25).map(ev))
     val records = EventStreamIngest.toKafkaRecords(events)

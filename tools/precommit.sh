@@ -14,7 +14,9 @@
 #      cache owner (MaterializerSpec, plus StreamingCurationSpec for a
 #      micro-batch's own handle), the serving endpoint's start/stop
 #      state machine, which Pipeline.serve runs every hour (ConnectServeSpec),
-#      and the DQ gate, which Pipeline.run runs every hour (DqChecksSpec),
+#      the DQ gate, which Pipeline.run runs every hour (DqChecksSpec), and
+#      the oracle-registry guard (SparkEntrySpec: no orphaned or missing
+#      oracle entry; it starts no Spark session),
 #   3. graft.Verify at sf0.01 + the DuckDB oracle compare (the real gate).
 #
 # Total ~10 min on this host. (Since r11 the FULL battery is also cheap —
@@ -24,7 +26,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SUITES=("$@")
-TESTONLY="graft.coverage.AqeParitySpec graft.ingest.RawLoaderSpec graft.quality.DbtStyleTestsSpec graft.pipeline.PipelineSpec graft.models.WarehouseReplaySpec graft.models.WarehouseCheckpointSpec graft.MaterializerSpec graft.streaming.StreamingCurationSpec graft.serve.ConnectServeSpec graft.quality.DqChecksSpec"
+TESTONLY="graft.coverage.AqeParitySpec graft.ingest.RawLoaderSpec graft.quality.DbtStyleTestsSpec graft.pipeline.PipelineSpec graft.models.WarehouseReplaySpec graft.models.WarehouseCheckpointSpec graft.MaterializerSpec graft.streaming.StreamingCurationSpec graft.serve.ConnectServeSpec graft.quality.DqChecksSpec graft.SparkEntrySpec"
 for s in "${SUITES[@]:-}"; do
   [[ -n "$s" ]] && TESTONLY="$TESTONLY $s"
 done
