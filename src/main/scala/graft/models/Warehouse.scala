@@ -7,7 +7,9 @@ import org.apache.spark.storage.StorageLevel
 /**
  * The whole view DAG wired together — the Spark analogue of `dbt run` over the
  * reference's model tree (every model `+materialized: view`,
- * `logistics_pipeline/dbt_project.yml:32-43`).
+ * `logistics_pipeline/dbt_project.yml:32-43`). [[Warehouse.models]] is the
+ * one place a model is named, with its frame and its schema.yml tests;
+ * `registerViews` and `DbtStyleTests.suite` iterate it.
  *
  * `fromRaw(cacheShared = false)` keeps the reference's views: plain lazy
  * DataFrames, recomputed on every read. Expanded, those views form one plan
@@ -56,23 +58,50 @@ final case class Warehouse(
     factEvent: DataFrame,
     dqInvalidDeliverySummary: DataFrame) {
 
-  /** Register every model as a temp view (the `dbt run` step). */
-  def registerViews(): Unit = {
-    raw.createOrReplaceTempView("raw_logistics")
-    stg.createOrReplaceTempView("stg_logistics_events")
-    valid.createOrReplaceTempView("int_valid_logistics_events")
-    invalid.createOrReplaceTempView("int_invalid_logistics_events")
-    dimOrder.createOrReplaceTempView("dim_order")
-    dimTime.createOrReplaceTempView("dim_time")
-    dimStatus.createOrReplaceTempView("dim_status")
-    dimLocation.createOrReplaceTempView("dim_location")
-    dimCarrier.createOrReplaceTempView("dim_carrier")
-    factEvent.createOrReplaceTempView("fact_event")
-    dqInvalidDeliverySummary.createOrReplaceTempView("dq_invalid_delivery_summary")
+  /** Every model in schema.yml order, raw first and untested: the one place a
+    * view name is paired with its frame (the field itself) and its schema.yml
+    * tests (`logistics_pipeline/models/layer/schema.yml:1-192`). */
+  def models: Seq[Warehouse.Model] = {
+    import Warehouse.Model
+    // a dimension's surrogate and natural keys are each not_null and unique
+    def dim(name: String, df: DataFrame, keys: String*) = Model(name, df, keys, keys)
+    Seq(
+      Model("raw_logistics", raw),
+      Model("stg_logistics_events", stg,
+        Seq("event_id", "order_id", "timestamp", "ingestion_timestamp"), Seq("event_id")),
+      Model("int_valid_logistics_events", valid, Seq("event_id"), Seq("event_id")),
+      Model("int_invalid_logistics_events", invalid, Seq("event_id", "invalid_reason"),
+        // the enumeration the reason CASE labels with, so the two cannot drift
+        acceptedCols = Seq("invalid_reason" -> Intermediate.reasons)),
+      Model("dq_invalid_delivery_summary", dqInvalidDeliverySummary,
+        Seq("event_date", "invalid_reason", "invalid_count")),
+      dim("dim_order", dimOrder, "order_sk", "order_id"),
+      dim("dim_time", dimTime, "time_sk", "full_timestamp"),
+      dim("dim_status", dimStatus, "status_sk", "status_name"),
+      dim("dim_location", dimLocation, "location_sk", "location_name"),
+      dim("dim_carrier", dimCarrier, "carrier_sk", "carrier_name"),
+      Model("fact_event", factEvent, Seq("event_sk", "event_id", "order_sk", "time_sk",
+          "status_sk", "origin_location_sk", "destination_location_sk", "carrier_sk",
+          "is_late_delivery"), Seq("event_sk", "event_id"),
+        acceptedCols = Seq("is_late_delivery" -> Seq(true, false)),
+        fks = Seq(("order_sk", "dim_order", "order_sk"), ("time_sk", "dim_time", "time_sk"),
+          ("status_sk", "dim_status", "status_sk"), ("carrier_sk", "dim_carrier", "carrier_sk"),
+          ("origin_location_sk", "dim_location", "location_sk"),
+          ("destination_location_sk", "dim_location", "location_sk"))))
   }
+
+  /** Register every model as a temp view (the `dbt run` step). */
+  def registerViews(): Unit = models.foreach(m => m.frame.createOrReplaceTempView(m.name))
 }
 
 object Warehouse {
+
+  /** One model: its view name, its frame and its schema.yml tests (not_null
+    * and unique columns, accepted values per column, and relationships as
+    * `(fk, parent view name, pk)`). */
+  final case class Model(name: String, frame: DataFrame,
+      notNullCols: Seq[String] = Nil, uniqueCols: Seq[String] = Nil,
+      acceptedCols: Seq[(String, Seq[Any])] = Nil, fks: Seq[(String, String, String)] = Nil)
 
   /** Where `fromRaw(cacheShared = true)` keeps each model's blocks:
     * deserialized in memory, spilling to local disk. */

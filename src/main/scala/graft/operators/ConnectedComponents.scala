@@ -178,10 +178,14 @@ object ConnectedComponents {
     // execution (wall outside any job in a per-stage profile). The explode
     // emits (u,v), (v,u), (u,u), (v,v) in a single generator pass; self-loops
     // now repeat per edge OCCURRENCE rather than once per node, which is
-    // harmless — like duplicate edges, they only re-send the same min into an
-    // idempotent aggregate — and the node-distinct SHUFFLE disappears
-    // outright (guide §2.4). ConnectedComponentsSpec pins label equality with
-    // union-find on mixed/duplicate/chain graphs for both entry points.
+    // harmless to the labels — like duplicate edges, they only re-send the
+    // same min into an idempotent aggregate. It does cost rows: 4|E|
+    // exploded rows where the old form gave 2|E| + |V|, so an edge list with
+    // many duplicate edges (|V| much smaller than |E|) shuffles up to about
+    // twice as many rows per round. In exchange the node-distinct SHUFFLE
+    // disappears outright (guide §2.4). ConnectedComponentsSpec pins label
+    // equality with union-find on mixed/duplicate/chain graphs for both
+    // entry points.
     val e = edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"))
     e.select(explode(array(

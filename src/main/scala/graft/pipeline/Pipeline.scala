@@ -62,9 +62,10 @@ object Pipeline {
       .parquet(rawTableDir)
     val dq = DqChecks.runAll(raw)
 
-    // 4. dbt_run: past the DQ gate, materialize each model once, in
-    // dependency order, and register it as a view; the tests, the dashboard
-    // publish and every serving query read these checkpointed frames
+    // 4. dbt_run: past the DQ gate, store four frames and derive every model
+    // from one of them by projection or filter, then register each model of
+    // Warehouse.models as a view; the tests, the dashboard publish and every
+    // serving query read the stored frames
     val w = Warehouse.fromRaw(raw, cacheShared = true)
     w.registerViews()
 

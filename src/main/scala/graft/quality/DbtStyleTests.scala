@@ -2,6 +2,9 @@ package graft.quality
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.model.LogisticsEvent
+import graft.models.Warehouse
+import graft.models.Warehouse.Model
 
 /**
  * dbt's four generic schema-test kinds as reusable DataFrame assertions, run
@@ -59,83 +62,41 @@ object DbtStyleTests {
   private val noKey = lit(null).cast("string")
   private def flag(p: Column): Column = when(p, 1L).otherwise(0L)
 
-  private def notNullCheck(model: String, df: DataFrame, c: String): Check =
-    Check(model, s"not_null:$c",
-      Seq(Emit(df, noKey, flag(col(c).isNull), lit(0L))), _.flagged)
-
-  private def acceptedValuesCheck(model: String, df: DataFrame, c: String,
-                                  values: Seq[Any]): Check =
-    Check(model, s"accepted_values:$c",
-      Seq(Emit(df, noKey, flag(col(c).isNotNull && !col(c).isin(values: _*)), lit(0L))),
+  private def notNullCheck(m: Model, c: String): Check =
+    Check(m.name, s"not_null:$c", Seq(Emit(m.frame, noKey, flag(col(c).isNull), lit(0L))),
       _.flagged)
 
-  private def uniqueCheck(model: String, df: DataFrame, c: String): Check =
-    Check(model, s"unique:$c",
-      Seq(Emit(df, col(c).cast("string"), flag(col(c).isNotNull), lit(0L))), _.dupKeys)
+  private def acceptedValuesCheck(m: Model, c: String, values: Seq[Any]): Check =
+    Check(m.name, s"accepted_values:$c",
+      Seq(Emit(m.frame, noKey, flag(col(c).isNotNull && !col(c).isin(values: _*)), lit(0L))),
+      _.flagged)
 
-  private def relationshipsCheck(model: String, child: DataFrame, fk: String,
-                                 parent: DataFrame, pk: String): Check =
-    Check(model, s"relationships:$fk", Seq(
-      Emit(child, col(fk).cast("string"), flag(col(fk).isNotNull), lit(0L)),
-      Emit(parent, col(pk).cast("string"), lit(0L), lit(1L))), _.orphans)
+  private def uniqueCheck(m: Model, c: String): Check =
+    Check(m.name, s"unique:$c",
+      Seq(Emit(m.frame, col(c).cast("string"), flag(col(c).isNotNull), lit(0L))), _.dupKeys)
 
-  /**
-   * The FULL schema.yml test roster over a built warehouse, mirrored
-   * declaration by declaration from
-   * `logistics_pipeline/models/layer/schema.yml:1-192` (51 tests), plus one
-   * beyond-schema bonus (status_name accepted_values against the conformed
-   * status enumeration). Test names are `kind:column` per model, so the
-   * suite output reads like `dbt test`'s.
-   */
-  private def roster(w: graft.models.Warehouse): Seq[Check] = {
-    import graft.model.LogisticsEvent.validStatuses
+  private def relationshipsCheck(m: Model, fk: String, parent: Model, pk: String): Check =
+    Check(m.name, s"relationships:$fk", Seq(
+      Emit(m.frame, col(fk).cast("string"), flag(col(fk).isNotNull), lit(0L)),
+      Emit(parent.frame, col(pk).cast("string"), lit(0L), lit(1L))), _.orphans)
 
-    // (model, frame, not_null columns, unique columns) — schema.yml order
-    val columnTests: Seq[(String, DataFrame, Seq[String], Seq[String])] = Seq(
-      ("stg_logistics_events", w.stg,
-        Seq("event_id", "order_id", "timestamp", "ingestion_timestamp"),
-        Seq("event_id")),
-      ("int_valid_logistics_events", w.valid,
-        Seq("event_id"), Seq("event_id")),
-      ("int_invalid_logistics_events", w.invalid,
-        Seq("event_id", "invalid_reason"), Seq.empty),
-      ("dq_invalid_delivery_summary", w.dqInvalidDeliverySummary,
-        Seq("event_date", "invalid_reason", "invalid_count"), Seq.empty),
-      ("dim_order", w.dimOrder,
-        Seq("order_sk", "order_id"), Seq("order_sk", "order_id")),
-      ("dim_time", w.dimTime,
-        Seq("time_sk", "full_timestamp"), Seq("time_sk", "full_timestamp")),
-      ("dim_status", w.dimStatus,
-        Seq("status_sk", "status_name"), Seq("status_sk", "status_name")),
-      ("dim_location", w.dimLocation,
-        Seq("location_sk", "location_name"), Seq("location_sk", "location_name")),
-      ("dim_carrier", w.dimCarrier,
-        Seq("carrier_sk", "carrier_name"), Seq("carrier_sk", "carrier_name")),
-      ("fact_event", w.factEvent,
-        Seq("event_sk", "event_id", "order_sk", "time_sk", "status_sk",
-          "origin_location_sk", "destination_location_sk", "carrier_sk",
-          "is_late_delivery"),
-        Seq("event_sk", "event_id")))
+  /** The FULL schema.yml roster of [[Warehouse.models]] (51 tests), plus one
+    * beyond-schema bonus: status_name against the conformed status
+    * enumeration. Test names are `kind:column` per model, as in `dbt test`. */
+  private def roster(w: Warehouse): Seq[Check] = {
+    val models = w.models
+    val byName = models.map(m => m.name -> m).toMap
+    def model(name: String): Model = byName.getOrElse(name,
+      throw new IllegalArgumentException(s"no warehouse model is named '$name'"))
 
-    val keyTests = columnTests.flatMap { case (m, df, nn, uq) =>
-      nn.map(notNullCheck(m, df, _)) ++ uq.map(uniqueCheck(m, df, _))
-    }
-
-    val enumTests = Seq(
-      // the enumeration the reason CASE labels with, so the two cannot drift
-      acceptedValuesCheck("int_invalid_logistics_events", w.invalid, "invalid_reason",
-        graft.models.Intermediate.reasons),
-      acceptedValuesCheck("fact_event", w.factEvent, "is_late_delivery", Seq(true, false)),
+    val keyTests = models.flatMap(m =>
+      m.notNullCols.map(notNullCheck(m, _)) ++ m.uniqueCols.map(uniqueCheck(m, _)))
+    val enumTests = models.flatMap(m => m.acceptedCols.map { case (c, vs) =>
+      acceptedValuesCheck(m, c, vs) }) :+
       // beyond schema.yml: the conformed status enumeration
-      acceptedValuesCheck("dim_status", w.dimStatus, "status_name", validStatuses))
-
-    val relTests = Seq(
-      ("order_sk", w.dimOrder, "order_sk"), ("time_sk", w.dimTime, "time_sk"),
-      ("status_sk", w.dimStatus, "status_sk"), ("carrier_sk", w.dimCarrier, "carrier_sk"),
-      ("origin_location_sk", w.dimLocation, "location_sk"),
-      ("destination_location_sk", w.dimLocation, "location_sk")
-    ).map { case (fk, dim, pk) => relationshipsCheck("fact_event", w.factEvent, fk, dim, pk) }
-
+      acceptedValuesCheck(model("dim_status"), "status_name", LogisticsEvent.validStatuses)
+    val relTests = models.flatMap(m =>
+      m.fks.map { case (fk, parent, pk) => relationshipsCheck(m, fk, model(parent), pk) })
     keyTests ++ enumTests ++ relTests
   }
 
@@ -159,7 +120,7 @@ object DbtStyleTests {
    * a checkpointed leaf on the pipeline's warehouse, the model's whole
    * lineage on lazy views.
    */
-  def suite(w: graft.models.Warehouse): Seq[TestResult] = {
+  def suite(w: Warehouse): Seq[TestResult] = {
     val checks = roster(w)
     val tallies = tally(checks)
     checks.zipWithIndex.map { case (c, i) =>

@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.model.LogisticsEvent
 
@@ -82,10 +82,15 @@ object DqChecks {
    * `data_quality_check.py:197-200`.
    */
   def runAll(raw: DataFrame): Seq[CheckResult] = {
-    val rowChecks = Seq(
-      "null_ids" -> nullIdPred, "bad_weights" -> badWeightPred,
-      "malformed_timestamps" -> malformedTsPred, "invalid_statuses" -> invalidStatusPred,
-      "out_of_bounds_coords" -> oobCoordPred, "bad_delivery_dates" -> badDeliveryPred)
+    // (name, severity, row predicate) in result order; duplicates count groups
+    val checks: Seq[(String, String, Option[Column])] = Seq(
+      ("null_ids", "ERROR", Some(nullIdPred)), ("bad_weights", "ERROR", Some(badWeightPred)),
+      ("malformed_timestamps", "ERROR", Some(malformedTsPred)),
+      ("invalid_statuses", "ERROR", Some(invalidStatusPred)),
+      ("out_of_bounds_coords", "ERROR", Some(oobCoordPred)),
+      ("duplicate_event_ids", "WARNING", None),
+      ("bad_delivery_dates", "WARNING", Some(badDeliveryPred)))
+    val rowChecks = checks.collect { case (name, _, Some(pred)) => name -> pred }
     def total(c: String) = coalesce(sum(c), lit(0L)).as(c) // sum of 0 rows is null
     val row = raw
       .groupBy("event_id")
@@ -95,11 +100,8 @@ object DqChecks {
         rowChecks.map { case (name, _) => total(name) }: _*)
       .head()
 
-    val results = Seq(
-      "null_ids" -> "ERROR", "bad_weights" -> "ERROR", "malformed_timestamps" -> "ERROR",
-      "invalid_statuses" -> "ERROR", "out_of_bounds_coords" -> "ERROR",
-      "duplicate_event_ids" -> "WARNING", "bad_delivery_dates" -> "WARNING"
-    ).map { case (name, severity) => CheckResult(name, severity, row.getAs[Long](name)) }
+    val results = checks.map { case (name, severity, _) =>
+      CheckResult(name, severity, row.getAs[Long](name)) }
 
     if (results.exists(r => r.severity == "ERROR" && r.violations > 0))
       throw DqGateFailure(results)

@@ -39,6 +39,10 @@ class PipelineSpec extends SparkSuite {
     val n = spark.sql(
       "SELECT count(*) AS n FROM fact_event").head().getLong(0)
     assert(n == 60)
+    // every declared model answers under its own view name
+    val models = r.warehouse.models
+    assert(models.map(_.name).distinct.size == 11)
+    models.foreach(m => assert(spark.table(m.name).count() == m.frame.count(), m.name))
 
     // second run with one new batch + replayed events: only new rows load
     writeBatchFile((55 to 70).map(ev), s"$tmp/landing/b2.parquet")
