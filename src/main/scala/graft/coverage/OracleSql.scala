@@ -1783,7 +1783,7 @@ object OracleSql {
 
     // Replays FilterCascade.gopherRecipe: every metric (token count,
     // stopword ratio, dup-2-gram fraction, marker-vote language) plus the
-    // ordered CASE chain with the operator's default thresholds.
+    // ordered CASE chain with the operator's threshold constants.
     "t_filter_cascade" ->
       s"""WITH tk AS (SELECT doc_id,
          |              string_split_regex(trim(lower(text)), '\\s+') AS toks,

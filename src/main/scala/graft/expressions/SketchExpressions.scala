@@ -1037,13 +1037,19 @@ private[expressions] object Md5Local {
  * so the semantics below are pinned operator by operator, and
  * TokensExprSpec fuzzes the equivalence over adversarial whitespace):
  *
- *  - `lower` is `CollationSupport.Lower.exec(v, collationId, useICU)` with
+ *  - `lower` is `CollationSupport.Lower.exec(v, UTF8_BINARY, useICU)` with
  *    `useICU = spark.sql.icu.caseMappings.enabled` resolved lazily per
  *    expression instance — exactly what the `Lower` expression does. The
  *    fast path below applies plain ASCII `A–Z`+32 lowering only to
  *    FULL-ASCII strings, where the JVM and ICU case mappings agree
  *    byte-for-byte; any non-ASCII byte bails to the verbatim
  *    `CollationSupport` call (ICU can change byte LENGTH there — İ → i̇).
+ *  - Input is UTF8_BINARY only. `inputTypes` is the plain `StringType`,
+ *    and analysis does not cast a collated string to it: a `STRING COLLATE
+ *    tr_CI` / `UNICODE_CI` / `UTF8_LCASE` argument fails with
+ *    `DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE`. So no locale-aware case
+ *    mapping (Turkish I → ı) can reach the ASCII lowering, and TokensExprSpec
+ *    pins the rejection.
  *  - `trim` strips 0x20 SPACES only (`UTF8String.trim()`), never other
  *    whitespace — a leading tab survives the trim, and Java split then
  *    emits a leading "" field.
@@ -1082,10 +1088,6 @@ case class WhitespaceTokensExpr(child: Expression)
   @transient private lazy val useICU: Boolean =
     org.apache.spark.sql.internal.SQLConf.get.getConf(
       org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
-  @transient private lazy val collationId: Int = child.dataType match {
-    case st: StringType => st.collationId
-    case _ => 0
-  }
 
   @inline private def isWs(b: Byte): Boolean =
     b == 0x20 || (b >= 0x09 && b <= 0x0D)
@@ -1146,7 +1148,8 @@ case class WhitespaceTokensExpr(child: Expression)
     * return-this ASCII shortcut), never a reused scan/row buffer. */
   private def slow(s0: UTF8String): GenericArrayData = {
     val lowered = org.apache.spark.sql.catalyst.util.CollationSupport.Lower
-      .exec(s0, collationId, useICU)
+      .exec(s0, org.apache.spark.sql.catalyst.util.CollationFactory.UTF8_BINARY_COLLATION_ID,
+        useICU)
     val b = lowered.trim().getBytes
     val n = b.length
     if (n == 0)

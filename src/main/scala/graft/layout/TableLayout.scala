@@ -18,19 +18,22 @@ import org.apache.spark.sql.functions._
  */
 object TableLayout {
 
+  /** [[compactSmallFiles]]' output file size: 128 MiB, Spark's default
+    * input split (`spark.sql.files.maxPartitionBytes`). */
+  private val TargetBytes = 128L << 20
+
   /**
-   * Rewrite a directory of many small parquet files into ~targetBytes files.
+   * Rewrite a directory of many small parquet files into ~TargetBytes files.
    * Reads once, writes once; the repartition count is derived from actual
    * on-disk size. Output lands in `outDir` (callers swap directories
    * atomically — never compact in place).
    */
-  def compactSmallFiles(spark: SparkSession, inDir: String, outDir: String,
-                        targetBytes: Long = 128L << 20): Long = {
+  def compactSmallFiles(spark: SparkSession, inDir: String, outDir: String): Long = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(inDir), spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.getContentSummary(
       new org.apache.hadoop.fs.Path(inDir)).getLength
-    val parts = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+    val parts = math.max(1, math.ceil(totalBytes.toDouble / TargetBytes).toInt)
     spark.read.parquet(inDir)
       .repartition(parts)
       .write.mode("overwrite").parquet(outDir)

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
  * Scale design:
  *  - media bytes never shuffle: every stage is a narrow mapPartitions over
  *    the scan, metadata-only projections shuffle instead;
- *  - `targetPartitionBytes` guides a repartitionByRange on id for writes so
+ *  - `TargetPartitionBytes` guides a repartitionByRange on id for writes so
  *    single oversized blobs don't skew partitions;
  *  - decode batches amortize per-record codec setup inside a partition,
  *    mirroring the Arrow-batch shape a vectorized UDF would use.
@@ -814,18 +814,20 @@ object Multimodal {
       .withColumn("out_height", (col("height") * col("scale")).cast("int"))
   }
 
+  /** [[writePartitioned]]' partition size: 128 MiB of blob bytes. */
+  private val TargetPartitionBytes = 128L << 20
+
   /**
    * Write layout for blob tables: range-partition by id so a handful of huge
-   * blobs can't skew a partition past `targetPartitionBytes`.
+   * blobs can't skew a partition past `TargetPartitionBytes`.
    */
-  def writePartitioned(media: DataFrame, path: String,
-                       targetPartitionBytes: Long = 128L << 20): Unit = {
+  def writePartitioned(media: DataFrame, path: String): Unit = {
     // coalesce AROUND the sum too (r11 review): sum() over ZERO rows is
     // null, and getLong on it NPE'd instead of writing an empty table
     val approxBytes = media.select(
       coalesce(sum(coalesce(length(col("content")), lit(0))), lit(0L)))
       .head().getLong(0)
-    val parts = math.max(1, (approxBytes / targetPartitionBytes).toInt)
+    val parts = math.max(1, (approxBytes / TargetPartitionBytes).toInt)
     media.repartitionByRange(parts, col("media_id"))
       .write.mode("overwrite").parquet(path)
   }

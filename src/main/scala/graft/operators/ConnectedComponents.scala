@@ -39,6 +39,10 @@ import org.apache.spark.storage.StorageLevel
  */
 object ConnectedComponents {
 
+  /** Round cap for [[components]]: pointer jumping bounds rounds by
+    * ~log2(diameter), so 50 rounds is never reached by a sane edge list. */
+  private val MaxIters = 50
+
   /**
    * Component labels for every node incident to an edge: (id, label) where
    * label = the minimum node id in the component. Nodes with no edges don't
@@ -50,8 +54,7 @@ object ConnectedComponents {
    * production entry point. For small known-diameter graphs where a pure
    * lazy plan is wanted, see [[componentsUnrolled]].
    */
-  def components(edges: DataFrame, srcCol: String, dstCol: String,
-                 maxIters: Int = 50): DataFrame = {
+  def components(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val sym = symmetrize(edges, srcCol, dstCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -60,7 +63,7 @@ object ConnectedComponents {
 
     var it = 0
     var converged = false
-    while (!converged && it < maxIters) {
+    while (!converged && it < MaxIters) {
       val next = round(sym, labels).localCheckpoint()
       val nextSum = checkSum(next)
       // release the SUPERSEDED round's checkpoint blocks (r11 review):
@@ -79,7 +82,7 @@ object ConnectedComponents {
     sym.unpersist()
     if (!converged)
       throw new IllegalStateException(
-        s"connected components did not converge in $maxIters rounds " +
+        s"connected components did not converge in $MaxIters rounds " +
           "(pointer jumping bounds rounds by ~log2(diameter) — check the " +
           "edge list for unexpected structure)")
     labels

@@ -25,12 +25,14 @@ import org.apache.spark.sql.types.StructType
  */
 object JsonlCorpus {
 
+  /** Shard codec: gzip, the conventional JSONL handoff trade (see above). */
+  private val Compression = "gzip"
+
   /** Write `df` as `shards` gzipped JSONL files. */
-  def writeJsonl(df: DataFrame, dir: String, shards: Int,
-                 compression: String = "gzip"): Unit =
+  def writeJsonl(df: DataFrame, dir: String, shards: Int): Unit =
     df.repartition(shards)
       .write.mode("overwrite")
-      .option("compression", compression)
+      .option("compression", Compression)
       .json(dir)
 
   /** Read a JSONL directory with an explicit schema. Rows that fail to

@@ -109,9 +109,13 @@ object EventStreamIngest {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(dir)
 
+  /** [[withStreamingDedup]]'s lateness horizon: how long a duplicate may
+    * trail its first copy and still be dropped in-stream. */
+  private val DedupLateness = "1 hour"
+
   /** Streaming-native dedup (T5 alternative): event-time watermark bounds the
-    * dedup state; duplicates beyond the lateness horizon fall through to the
-    * load-time anti-join safety net.
+    * dedup state; duplicates beyond the `DedupLateness` horizon fall through
+    * to the load-time anti-join safety net.
     *
     * NULL event_ids pass through UNDEDUPED (r11 review):
     * `dropDuplicatesWithinWatermark` treats nulls as equal, so two DIFFERENT
@@ -153,14 +157,14 @@ object EventStreamIngest {
     *    independent review pass + a two-batch progress probe; the
     *    "healthy stream" test pins the watermark's advance so neither trap
     *    can come back silently). */
-  def withStreamingDedup(events: DataFrame, lateness: String = "1 hour"): DataFrame = {
+  def withStreamingDedup(events: DataFrame): DataFrame = {
     val timed = events
       .withColumn("event_time", try_to_timestamp(col("timestamp")))
     val deduped = timed
       .filter(col("event_time").isNotNull)
       .withColumn("__dedup_key",
         coalesce(col("event_id"), expr("uuid()")))
-      .withWatermark("event_time", lateness)
+      .withWatermark("event_time", DedupLateness)
       .dropDuplicatesWithinWatermark("__dedup_key")
       .drop("__dedup_key")
     deduped.unionByName(timed.filter(col("event_time").isNull))
@@ -214,42 +218,43 @@ object EventStreamIngest {
       .trigger(Trigger.AvailableNow())
       .start()
 
+  /** The windowed aggregations' lateness horizon: a window or session
+    * stays open this long past the latest event time seen. */
+  private val WindowLateness = "10 minutes"
+
+  /** The event-time rule of the windowed aggregations: `event_time` parsed
+    * from `timestamp`, rows that fail to parse dropped, and a watermark of
+    * `WindowLateness` when streaming (batch runs have no state to bound).
+    *
+    * Unparseable timestamps are EXCLUDED, not stamped with NOW (r12
+    * review — same watermark-contamination failure as
+    * [[withStreamingDedup]]: one corrupt row in a backfill advanced the
+    * watermark to wall-clock, closed every real historical session as late
+    * and fabricated a count in the current minute). A row with no event
+    * time belongs to no window or session; `n_bad_ts` counts the
+    * exclusions. */
+  private def eventTimed(events: DataFrame): DataFrame = {
+    val timed = events
+      .withColumn("event_time", try_to_timestamp(col("timestamp")))
+      .filter(col("event_time").isNotNull)
+    if (timed.isStreaming) timed.withWatermark("event_time", WindowLateness)
+    else timed
+  }
+
   /** Per-order event sessions as a streaming aggregation: `session_window`
     * under a watermark, so a session closes (and its state is freed) once
     * the watermark passes its last event + gap. Batch twin and gap semantics:
     * [[graft.operators.Sessionize]] (SessionizeSpec proves the partitioning
     * equivalence and drives this shape through a real stream). */
-  def sessionCounts(events: DataFrame, gapSeconds: Long = 1800,
-                    lateness: String = "10 minutes"): DataFrame = {
-    // unparseable timestamps are EXCLUDED, not stamped with NOW (r12
-    // review — same watermark-contamination failure as withStreamingDedup:
-    // one corrupt row in a backfill advanced the watermark to wall-clock
-    // and closed every real historical session as late). A row with no
-    // event time belongs to no session; `n_bad_ts` counts the exclusions.
-    val timed = events
-      .withColumn("event_time", try_to_timestamp(col("timestamp")))
-      .filter(col("event_time").isNotNull)
-    val marked = if (timed.isStreaming) timed.withWatermark("event_time", lateness)
-                 else timed
+  def sessionCounts(events: DataFrame, gapSeconds: Long = 1800): DataFrame =
     graft.operators.Sessionize.sessionWindowAgg(
-      marked, "order_id", "event_time", gapSeconds)
-  }
+      eventTimed(events), "order_id", "event_time", gapSeconds)
 
   /** Per-minute event counts as a streaming aggregation (the streaming
     * analogue of the monitoring dashboard's A12, with watermarked state). */
-  def minuteCounts(events: DataFrame, lateness: String = "10 minutes"): DataFrame = {
-    // unparseable timestamps excluded — see [[sessionCounts]]: a row with
-    // no event time can be assigned no window truthfully, and stamping NOW
-    // both fabricated a count in the current minute and poisoned the
-    // watermark for real historical rows
-    val timed = events
-      .withColumn("event_time", try_to_timestamp(col("timestamp")))
-      .filter(col("event_time").isNotNull)
-    val marked = if (timed.isStreaming) timed.withWatermark("event_time", lateness)
-                 else timed   // batch runs have no state to bound
-    marked
+  def minuteCounts(events: DataFrame): DataFrame =
+    eventTimed(events)
       .groupBy(window(col("event_time"), "1 minute"))
       .agg(count(lit(1)).as("event_count"))
       .select(col("window.start").as("minute"), col("event_count"))
-  }
 }

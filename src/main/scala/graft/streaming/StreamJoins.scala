@@ -27,10 +27,13 @@ import org.apache.spark.sql.functions._
  */
 object StreamJoins {
 
+  /** Both sides' watermark delay: how late an event may arrive and still
+    * find its match; state is kept for `span + WatermarkDelay` per side. */
+  private val WatermarkDelay = "10 minutes"
+
   def intervalJoin(left: DataFrame, right: DataFrame, key: String,
                    leftTs: String, rightTs: String,
-                   maxSpanSeconds: Long,
-                   watermarkDelay: String = "10 minutes"): DataFrame = {
+                   maxSpanSeconds: Long): DataFrame = {
     // Loud collision guard (r12 review): the blanket `_r` suffix can mint a
     // name either side already carries — chaining two interval joins feeds
     // `status_r` back in as a left column, or the right side itself holds
@@ -43,11 +46,11 @@ object StreamJoins {
       s"intervalJoin: suffixed right column(s) ${collisions.mkString(", ")} " +
         "collide with an existing column — rename the inputs (e.g. the " +
         "previous join's *_r outputs) before joining")
-    val l = left.withWatermark(leftTs, watermarkDelay).alias("l")
+    val l = left.withWatermark(leftTs, WatermarkDelay).alias("l")
     val rRenamed = right.columns.foldLeft(right) { (df, c) =>
       if (c == key) df else df.withColumnRenamed(c, s"${c}_r")
     }
-    val r = rRenamed.withWatermark(s"${rightTs}_r", watermarkDelay).alias("r")
+    val r = rRenamed.withWatermark(s"${rightTs}_r", WatermarkDelay).alias("r")
     val cond =
       col(s"l.$key") === col(s"r.$key") &&
         col(s"r.${rightTs}_r") >= col(s"l.$leftTs") - expr(s"interval $maxSpanSeconds seconds") &&

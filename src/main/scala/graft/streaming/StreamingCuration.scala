@@ -5,6 +5,7 @@ import scala.util.Using
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 import graft.Materializer
 import graft.text.{FilterCascade, LmScore}
 
@@ -82,19 +83,21 @@ object StreamingCuration {
   /** Start the stream: curated docs → `keptPath`, audit rows (id, text,
     * drop_reason, nll) → `droppedPath`.
     *
-    * The model frames are persisted here for the stream's lifetime (r12
-    * review): [[LmScore.score]] carries the model as scalar subqueries,
-    * which re-execute per action — unpersisted, every micro-batch re-ran
-    * the full training aggregation over the reference corpus, making
-    * per-batch latency proportional to TRAINING-corpus size instead of
-    * batch size. The frozen model the scaladoc promises is now frozen in
-    * cache too (small: a 1-row combined model + the vocab²-bounded
-    * tables). They stay cached after the query stops — release with
-    * `model.unpersistAll()` if the session outlives the stream. */
+    * The model's `combined` row — the one frame the score path executes —
+    * is persisted here for the stream's lifetime (r12 review):
+    * [[LmScore.score]] carries it as a scalar subquery, which re-executes
+    * per action — unpersisted, every micro-batch re-ran the full training
+    * aggregation over the reference corpus, making per-batch latency
+    * proportional to TRAINING-corpus size instead of batch size. The
+    * frozen model the scaladoc promises is now frozen in cache too (small:
+    * one row). Persisting is idempotent: an already-cached row is left as
+    * it is. It stays cached after the query stops — release it with
+    * `model.combined.unpersist()` if the session outlives the stream. */
   def start(newDocs: DataFrame, idCol: String, textCol: String,
             model: LmScore.BigramModel, keptPath: String, droppedPath: String,
             checkpoint: String, maxNll: Double = 6.0): StreamingQuery = {
-    model.persistAll()
+    if (model.combined.storageLevel == StorageLevel.NONE)
+      model.combined.persist(StorageLevel.MEMORY_AND_DISK)
     newDocs.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

@@ -46,7 +46,7 @@ object Dsir {
     // BOTH models ride TWO scalar subqueries (round 7): the bigram side
     // (two nested bigram maps + two prefix maps, one bigram scan) and the
     // vocabulary side (both distinct-token counts, one token scan) — where
-    // per-model nllStruct calls would ship six subquery job chains. Two
+    // per-model LmScore.train models would each rescan the corpus. Two
     // subqueries rather than one keeps the two training scans CONCURRENT
     // (Spark executes subqueries in parallel), which measures faster than
     // a single serialized tagged-union chain at every tested scale. Each
@@ -77,59 +77,17 @@ object Dsir {
   }
 
   /**
-   * Train the target AND raw models from ONE pass over the corpus — the
-   * K-models-one-scan shape: two independent `LmScore.train` calls would
-   * explode the corpus into bigrams twice (and the token stream twice for
-   * the vocabularies), pure duplicated heavy work since the target slice
-   * is a subset of the raw corpus. Instead one bigram explode aggregates
-   * BOTH counts per (w1, w2) — raw = count(*), target = count where the
-   * document satisfies `targetPred` — and one token explode computes both
-   * vocabulary sizes via a conditional distinct. Prefix counts are row
-   * sums of the unpruned bigram table per model (same
-   * summed-before-pruning rule as `LmScore.train`). Results are exactly
-   * the two independently-trained models (DsirSpec pins this against two
-   * `LmScore` runs); the corpus-scale work halves, and everything after
-   * the explode is vocabulary-bounded.
-   */
-  def trainPair(docs: DataFrame, textCol: String, targetPred: Column,
-                minCount: Long = 1L): (LmScore.BigramModel, LmScore.BigramModel) = {
-    import LmScore.BigramModel
-    val base = tokenized(docs, textCol, targetPred)
-    // per-doc collapsed bigram/token streams (round-6 verdict item 1): the
-    // explodes emit one row per DISTINCT per-doc bigram/token, counts final
-    val bg = graft.Materializer.library.stage(
-      base.select(col("__is_t"),
-          explode(graft.expressions.LmExpressions.bigram_counts(col("__toks"))).as("e"))
-        .groupBy(col("e.w1").as("w1"), col("e.w2").as("w2"))
-        .agg(sum(col("e.cnt")).as("c12_r"),
-          sum(when(col("__is_t"), col("e.cnt")).otherwise(0L)).as("c12_t")))
-    val vRow = graft.Materializer.library.stage(
-      base.select(col("__is_t"), explode(map_keys(graft.expressions
-          .SketchExpressions.term_counts(col("__toks")))).as("w"))
-        .agg(count_distinct(col("w")).as("v_r"),
-          count_distinct(when(col("__is_t"), col("w"))).as("v_t")))
-    val target = BigramModel(
-      bg = bg.filter(col("c12_t") >= math.max(minCount, 1L))
-        .select(col("w1"), col("w2"), col("c12_t").as("c12")),
-      pfx = bg.groupBy("w1").agg(sum(col("c12_t")).as("c1"))
-        .filter(col("c1") > 0),
-      v = vRow.select(col("v_t").as("v")))
-    val raw = BigramModel(
-      bg = bg.filter(col("c12_r") >= minCount)
-        .select(col("w1"), col("w2"), col("c12_r").as("c12")),
-      pfx = bg.groupBy("w1").agg(sum(col("c12_r")).as("c1")),
-      v = vRow.select(col("v_r").as("v")))
-    (target, raw)
-  }
-
-  /**
    * Both models' bigram sides as ONE 1-row frame `struct(bg_t, pfx_t,
    * bg_r, pfx_r)` from a single bigram scan of the corpus (round 7): the
    * per-doc collapsed bigram explode feeds a (w1, w2) cell aggregation
    * carrying raw AND target totals, and one aggregation tree then yields
-   * both nested bigram maps and both prefix maps. Semantics match
-   * [[trainPair]] field for field (same pruning rules, prefix sums before
-   * pruning); DsirSpec pins the equality, the oracle replays every number.
+   * both nested bigram maps and both prefix maps. This is the
+   * K-models-one-scan shape: two independent [[LmScore.train]] calls would
+   * explode the corpus into bigrams twice, though the target slice is a
+   * subset of the raw corpus. Semantics match `LmScore.train` on the
+   * target slice and on the whole corpus field for field (same pruning
+   * rules, prefix sums before pruning); DsirSpec pins the equality, the
+   * oracle replays every number.
    */
   private[text] def bigramPairRow(docs: DataFrame, textCol: String,
                                   targetPred: Column,
@@ -163,7 +121,8 @@ object Dsir {
   }
 
   /** Both vocabulary sizes as ONE 1-row frame `struct(v_t, v_r)` from a
-    * single distinct-token scan (the [[trainPair]] vRow, struct-packed). */
+    * single distinct-token scan: `v_t` and `v_r` equal the `v` of
+    * [[LmScore.train]] on the target slice and on the whole corpus. */
   private[text] def vocabPairRow(docs: DataFrame, textCol: String,
                                  targetPred: Column): DataFrame =
     tokenized(docs, textCol, targetPred)

@@ -29,18 +29,24 @@ object FilterCascade {
       .withColumn("kept", col("drop_reason").isNull)
   }
 
+  // gopherRecipe's thresholds; the t_filter_cascade oracle SQL repeats them
+  private val MinTokens = 15
+  private val MaxTokens = 100000
+  private val MinStopwordRatio = 0.01
+  private val MaxDupNgramFrac = 0.2
+  private val AllowedLangs = Seq("en")
+
   /**
    * The C4/Gopher-flavored default recipe over a text column: length gates,
    * stopword-density floor (gibberish/code), repetition ceiling (boilerplate
    * loops), language allowlist. Emits the metric columns next to the
-   * decision — the audit row a curation log stores. Thresholds are
-   * parameters: every corpus tunes them.
+   * decision — the audit row a curation log stores. Thresholds are the
+   * constants above (`MinTokens`, `MaxTokens`, `MinStopwordRatio`,
+   * `MaxDupNgramFrac`, `AllowedLangs`): every caller runs this one recipe,
+   * and a corpus that needs others builds its own rule list for
+   * [[withDecision]].
    */
-  def gopherRecipe(df: DataFrame, textCol: String,
-                   minTokens: Int = 15, maxTokens: Int = 100000,
-                   minStopwordRatio: Double = 0.01,
-                   maxDupNgramFrac: Double = 0.2,
-                   allowedLangs: Seq[String] = Seq("en")): DataFrame = {
+  def gopherRecipe(df: DataFrame, textCol: String): DataFrame = {
     // Tokenize ONCE (r12 review): every metric below consumes the same
     // staged token array — the previous form re-split the full text four
     // times per row (inside repetitionMetrics, as __toks, inside
@@ -57,10 +63,10 @@ object FilterCascade {
       .withColumn("lang", TextAnalysis.languageIdOfTokens(col("__toks")))
       .drop("__toks")
     withDecision(staged, Seq(
-      "too_short" -> (col("n_tokens") < minTokens),
-      "too_long" -> (col("n_tokens") > maxTokens),
-      "low_stopword" -> (col("stopword_ratio") < minStopwordRatio),
-      "repetitive" -> (col("dup_ngram_frac") > maxDupNgramFrac),
-      "wrong_language" -> !col("lang").isin(allowedLangs: _*)))
+      "too_short" -> (col("n_tokens") < MinTokens),
+      "too_long" -> (col("n_tokens") > MaxTokens),
+      "low_stopword" -> (col("stopword_ratio") < MinStopwordRatio),
+      "repetitive" -> (col("dup_ngram_frac") > MaxDupNgramFrac),
+      "wrong_language" -> !col("lang").isin(AllowedLangs: _*)))
   }
 }

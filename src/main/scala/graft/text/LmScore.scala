@@ -19,13 +19,16 @@ import org.apache.spark.sql.functions._
  * the training vocabulary size. A document's score is the mean `-ln p`
  * over its bigrams; lower = more in-domain.
  *
- * Scale shape (100 TB): both model tables are vocabulary-bounded (and
- * prunable with `minCount`), so they BROADCAST — as single-row map columns
- * consumed by a fused one-pass scoring expression ([[score]]; zero
- * shuffles, zero per-bigram rows), with the explode → broadcast-join →
- * aggregate formulation kept as [[scoreExploded]] for models too large for
- * two broadcast maps. No model state ever shuffles with the corpus either
- * way.
+ * One trainer ([[train]]) builds one model shape ([[BigramModel]]).
+ *
+ * Scale shape (100 TB): the model tables are vocabulary-bounded (and
+ * prunable with `minCount`), so they BROADCAST — as one single-row frame
+ * of map columns, carried as one scalar subquery into a fused one-pass
+ * scoring expression ([[score]]; zero shuffles, zero per-bigram rows),
+ * with the explode → broadcast-join → aggregate formulation kept as
+ * [[scoreExploded]], the semantic reference and the shape for models too
+ * large for two broadcast maps. No model state ever shuffles with the
+ * corpus either way.
  */
 object LmScore {
 
@@ -68,42 +71,17 @@ object LmScore {
         .term_counts(TextAnalysis.tokens(col(textCol))))).as("w"))
       .agg(count_distinct(col("w")).as("v"))
 
-  /** A trained model: bigram counts, prefix counts, and the 1-row vocab
-    * size — all vocabulary-bounded, all broadcast at score time. Train
+  /** A trained model, built only by [[train]]: bigram counts, prefix
+    * counts, and the 1-row vocab size — all vocabulary-bounded. Train
     * offline once, score any corpus (or stream) against it.
     *
-    * `combined` (round 7, set by [[train]]): the same model as ONE 1-row
-    * frame `struct(__bg, __pfx, v)` built in a single pass over the
-    * training corpus — [[nllStruct]] carries it as a single scalar
-    * subquery instead of three, collapsing the per-run training work from
-    * two corpus scans + three subquery job chains to one of each. The
-    * three relational fields stay authoritative for [[scoreExploded]] and
-    * hand-built models. */
+    * `combined` (round 7): the same model as ONE 1-row frame
+    * `struct(__bg, __pfx, v)` built in a single pass over the training
+    * corpus — the only frame the score path ([[nllStruct]]) executes, as a
+    * single scalar subquery. The three relational fields stay authoritative
+    * for [[scoreExploded]] and direct inspection. */
   final case class BigramModel(bg: DataFrame, pfx: DataFrame, v: DataFrame,
-                               combined: Option[DataFrame] = None) {
-    // only the frames the score path actually executes: `combined` when
-    // present (the [[nllStruct]] default), else the three relational
-    // frames ([[scoreExploded]] / hand-built models) — persisting frames
-    // that never materialize would only register dead cache entries
-    // (the r7 rationale for train() itself persisting nothing)
-    private def scoreFrames: Seq[DataFrame] =
-      combined.map(Seq(_)).getOrElse(Seq(bg, pfx, v))
-
-    /** Cache the model so repeated scoring (a stream applying a frozen
-      * model per micro-batch, a service scoring many corpora) pays the
-      * training aggregation ONCE — the scalar subqueries [[nllStruct]]
-      * carries re-execute per action and, unpersisted, re-run the full
-      * training scan each time (r12 review). Idempotent. */
-    def persistAll(): this.type = {
-      scoreFrames.foreach(f =>
-        if (f.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          f.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      this
-    }
-
-    /** Release [[persistAll]]'s cache entries. */
-    def unpersistAll(): this.type = { scoreFrames.foreach(_.unpersist()); this }
-  }
+                               combined: DataFrame)
 
   /** Train on a corpus. The score path ([[nllStruct]]) consumes ONLY the
     * `combined` single-subquery model, built in one corpus pass; the three
@@ -116,8 +94,8 @@ object LmScore {
     * bigram). Nothing here is persisted: the frames never execute on the
     * default score path, and registering a never-materialized cache entry
     * per train() call would only grow the tracked-frame queue (r7
-    * review); a caller that drives the exploded path repeatedly can
-    * persist the model frames itself. */
+    * review); a caller that scores repeatedly persists `combined` itself
+    * (as [[graft.streaming.StreamingCuration.start]] does). */
   def train(corpus: DataFrame, textCol: String,
             minCount: Long = 1L): BigramModel = {
     val bgRaw = bigramCounts(corpus, textCol, minCount = 1L)
@@ -125,7 +103,7 @@ object LmScore {
       bg = bgRaw.filter(col("c12") >= minCount),
       pfx = bgRaw.groupBy("w1").agg(sum(col("c12")).as("c1")),
       v = vocabSize(corpus, textCol),
-      combined = Some(combinedModelRow(corpus, textCol, minCount)))
+      combined = combinedModelRow(corpus, textCol, minCount))
   }
 
   /**
@@ -186,9 +164,10 @@ object LmScore {
    * bigrams score null and are never kept (no evidence).
    *
    * Plan shape (round-5 verdict item 5): the model collapses to single-row
-   * MAP values — nested `w1→(w2→c12)` plus `w1→c1` — carried as SCALAR
-   * SUBQUERIES, and [[graft.expressions.BigramNllExpr]] scores each token
-   * array in one narrow pass. ZERO shuffles, zero joins, and zero
+   * MAP values — nested `w1→(w2→c12)` plus `w1→c1` — carried as ONE
+   * SCALAR SUBQUERY ([[nllStruct]]), and
+   * [[graft.expressions.BigramNllExpr]] scores each token array in one
+   * narrow pass. ZERO shuffles, zero joins, and zero
    * per-bigram rows on the score path (the exploded formulation below
    * pushed |tokens| rows per doc through two joins and an aggregate — the
    * 10× bench's dominant cost). Training still executes inside every run:
@@ -216,32 +195,15 @@ object LmScore {
   }
 
   /** The fused per-doc score as a Column: a `(n_bigrams, nll_sum)` struct
-    * over a token-array column, with the model collapsed to single-row MAP
-    * values carried as scalar subqueries (see [[score]] for why subqueries,
-    * not 1-row broadcast joins). Factored out so multi-model scorers
-    * ([[Dsir]]) can evaluate SEVERAL models in the same narrow pass — each
-    * call contributes its own subquery stages but zero joins and zero
-    * per-bigram rows on the shared score scan. */
+    * over a token-array column, with the model's `combined` row carried as
+    * ONE scalar subquery (see [[score]] for why a subquery, not a 1-row
+    * broadcast join) whose three fields feed the expression: zero joins
+    * and zero per-bigram rows on the score scan. */
   def nllStruct(model: BigramModel, toks: Column, k: Double): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.scalarSubquery
-    model.combined match {
-      case Some(row) =>
-        // one subquery carries the whole model; the three expression inputs
-        // are field reads of its single cached row
-        val m = scalarSubquery(row)
-        graft.expressions.LmExpressions.bigram_nll(
-          toks, m.getField("__bg"), m.getField("__pfx"), m.getField("v"), k)
-      case None =>
-        val bgRow = model.bg
-          .groupBy("w1")
-          .agg(map_from_entries(collect_list(struct(col("w2"), col("c12")))).as("m"))
-          .agg(map_from_entries(collect_list(struct(col("w1"), col("m")))).as("__bg"))
-        val pfxRow = model.pfx
-          .agg(map_from_entries(collect_list(struct(col("w1"), col("c1")))).as("__pfx"))
-        graft.expressions.LmExpressions.bigram_nll(
-          toks, scalarSubquery(bgRow), scalarSubquery(pfxRow),
-          scalarSubquery(model.v), k)
-    }
+    val m = scalarSubquery(model.combined)
+    graft.expressions.LmExpressions.bigram_nll(
+      toks, m.getField("__bg"), m.getField("__pfx"), m.getField("v"), k)
   }
 
   /**

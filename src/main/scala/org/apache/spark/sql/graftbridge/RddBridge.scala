@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.LogicalRDD
  * to the CacheManager, so there is NO public way to release a superseded
  * checkpoint's blocks before driver GC gets around to it. Iterative
  * algorithms ([[graft.operators.ConnectedComponents]]) would otherwise pin
- * up to maxIters copies of their state in executor storage. `LogicalRDD` is
+ * up to `MaxIters` copies of their state in executor storage. `LogicalRDD` is
  * `private[sql]`; same one-object remedy as [[ColumnBridge]].
  */
 object RddBridge {

@@ -23,6 +23,8 @@ import graft.text.TextAnalysis
  *    `spark.sql.icu.caseMappings.enabled` — both settings exercised):
  *    Turkish İ (length-changing), ß/ẞ, final sigma, full-width, titlecase
  *    Dž, ligatures, combining marks, surrogate pairs;
+ *  - a collated argument (tr_CI, UNICODE_CI, UTF8_LCASE) fails analysis,
+ *    so only UTF8_BINARY input ever reaches the ASCII fast path;
  *  - a seeded fuzz over a whitespace-heavy mixed-script alphabet.
  *
  * Also pins the two r15 hash-fusion expressions against their HOF twins:
@@ -115,6 +117,17 @@ class TokensExprSpec extends SparkSuite {
         // fresh columns per setting: useICU resolves lazily per expression
         // instance, exactly like Lower's own lazy val
         compareBoth(adversarial)
+        // no collated string reaches the expression: analysis rejects it
+        // instead of casting, so the ASCII fast path never stands in for a
+        // locale-aware lower (Turkish I → ı under tr_CI)
+        val s = spark
+        import s.implicits._
+        for (c <- Seq("tr_CI", "UNICODE_CI", "UTF8_LCASE")) {
+          val e = intercept[org.apache.spark.sql.AnalysisException](
+            Seq("ISTANBUL I").toDF("text")
+              .select(TextAnalysis.tokens(collate(col("text"), c))))
+          assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), e.getMessage)
+        }
       }
     } finally {
       orig match {

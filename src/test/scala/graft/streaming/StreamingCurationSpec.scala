@@ -115,7 +115,7 @@ class StreamingCurationSpec extends SparkSuite {
       maxNll = 1.5).awaitTermination(120000)
     assert(spark.read.parquet(s"$tmp/kept").count() === 1)
     assert(graft.Materializer.library.staged.isEmpty)
-    model.unpersistAll()
+    model.combined.unpersist()
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

@@ -48,7 +48,9 @@ class DsirSpec extends SparkSuite {
   test("1-row pair model frames ≡ trainPair's two models, field for field") {
     val targetPred = col("lang") === "en"
     for (minCount <- Seq(1L, 2L)) {
-      val (target, raw) = Dsir.trainPair(corpus, "text", targetPred, minCount)
+      // the reference: two independent single-model trainings
+      val target = LmScore.train(corpus.filter(targetPred), "text", minCount)
+      val raw = LmScore.train(corpus, "text", minCount)
       val row = Dsir.bigramPairRow(corpus, "text", targetPred, minCount)
         .collect().head.getStruct(0)
       val vRow = Dsir.vocabPairRow(corpus, "text", targetPred)

@@ -79,7 +79,7 @@ class LmScoreSpec extends SparkSuite {
       Seq((7L, "b a"), (8L, "solo"), (9L, ""))).toDF("id", "text")
     for (minCount <- Seq(1L, 3L)) {
       val m = LmScore.train(docs, "text", minCount)
-      val row = m.combined.get.collect().head.getStruct(0)
+      val row = m.combined.collect().head.getStruct(0)
       val bgMap = row.getMap[String, Map[String, Long]](0)
       val pfxMap = row.getMap[String, Long](1)
       val v = row.getLong(2)
@@ -123,5 +123,11 @@ class LmScoreSpec extends SparkSuite {
       n.contains("Join") || n.contains("Generate") || n.contains("Exchange"))
     assert(banned.isEmpty,
       s"score path must be a narrow projection, found $banned in: $p")
+    // the whole model rides ONE scalar subquery: its `combined` row
+    val subIds = root.collect { case n => n }.flatMap(_.expressions)
+      .flatMap(_.collect {
+        case s: org.apache.spark.sql.execution.ScalarSubquery => s.exprId
+      }).distinct
+    assert(subIds.size == 1, root.toString)
   }
 }

@@ -4,12 +4,17 @@ calls, with how many times the tests name it.
 
 Usage: python3 tools/unused_defs.py [repo_root]
 
-Comments are stripped before counting (string literals are kept: a SQL
-string may call a registered function). A name counts as called when it
-occurs more often than it is defined, so the census is by name: a name
-defined twice and called once, a self-recursive def, or a def only reached
+Comments are stripped before counting. A string literal counts only where
+it calls the name (`name(`: a SQL string may call a registered function),
+and never in the file that defines the name, so an error message that
+names its own def does not hide it. A call written `Object.name` counts
+only for the def in that object, so `ConnectServe.publish` does not hide
+`SnapshotStore.publish`. Any other occurrence counts for every def of that
+name, so the census is otherwise by name: a name defined twice and called
+once without a qualifier, a self-recursive def, or a def only reached
 through a named argument of the same name can hide from it. `override`
-defs are skipped (the framework calls them).
+defs and `main(args` entry points are skipped (the framework or the JVM
+calls them).
 
 Defs listed in KEPT are references kept on purpose; they print in their own
 block, after the candidates, with the reason they stay.
@@ -19,9 +24,17 @@ import sys
 from collections import Counter
 from pathlib import Path
 
-TOKEN = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*[\s\S]*?\*/')
+TOKEN = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|'
+                   r"'(?:\\.|[^'\\\n])'|//[^\n]*|/\*[\s\S]*?\*/")
 DEF = re.compile(r'^(?P<pre>[^\n]*?)\bdef\s+(?P<name>[A-Za-z_][A-Za-z0-9_]*)', re.M)
 WORD = re.compile(r'[A-Za-z_][A-Za-z0-9_]*')
+DEF_SITE = re.compile(r'\bdef\s+$')
+QUALIFIER = re.compile(r'\b(?P<qual>[A-Za-z_][A-Za-z0-9_]*)\s*\.\s*$')
+CALL = re.compile(r'\b(?P<name>[A-Za-z_][A-Za-z0-9_]*)\s*\(')
+DECL = re.compile(r'^(?P<indent> *)(?:[\w\[\]]+\s+)*(?:object|class|trait)\s+'
+                  r'(?P<name>[A-Za-z_][A-Za-z0-9_]*)', re.M)
+OBJECT = re.compile(r'\bobject\s+(?P<name>[A-Za-z_][A-Za-z0-9_]*)')
+INTERPOLATION = re.compile(r'\$\{(?:[^{}]|\{[^{}]*\})*\}|\$[A-Za-z_][A-Za-z0-9_]*')
 
 _DQ = 'per-check reference that DqChecksSpec compares the one-pass gate against'
 _DBT = 'single-test reference that DbtStyleTestsSpec compares the one-pass suite against'
@@ -38,33 +51,90 @@ KEPT = {
     'DqChecks.badDeliveryDates': _DQ,
     'DbtStyleTests.notNull': _DBT,
     'DbtStyleTests.acceptedValues': _DBT,
+    'DbtStyleTests.unique': _DBT,
+    'DbtStyleTests.relationships': _DBT,
     'TextAnalysis.tokensHof': _HOF,
     'Dedup.shinglesOfTokensHof': _HOF,
     'EventStreamIngest.fromKafka': _KAFKA,
     'EventStreamIngest.toKafkaSink': _KAFKA,
+    'LmScore.scoreExploded': 'the semantic reference for fused scoring (LmScoreSpec)',
+    'NaiveBayes.evidenceSums':
+        'the bit-equality test hook (NaiveBayesSpec, LmExpressionsPropertySpec)',
 }
 
 
-def strip_comments(src):
-    return TOKEN.sub(lambda m: m.group(0) if m.group(0).startswith('"') else
-                     '\n' * m.group(0).count('\n'), src)
+def split_source(src):
+    """(code with comments and string literals blanked, the string literals).
+    The `${...}` and `$name` parts of an interpolated string stay code."""
+    strings = []
+
+    def blank(m):
+        tok = m.group(0)
+        if tok.startswith("'"):
+            return ' ' * len(tok)
+        if not tok.startswith('"'):
+            return '\n' * tok.count('\n')
+        interpolated = m.start() > 0 and (src[m.start() - 1].isalnum()
+                                          or src[m.start() - 1] == '_')
+        code = [' '] * len(tok)
+        if interpolated:
+            for part in INTERPOLATION.finditer(tok):
+                code[part.start():part.end()] = part.group(0)
+            tok = INTERPOLATION.sub(' ', tok)
+        strings.append(tok)
+        return ''.join(code)
+    return TOKEN.sub(blank, src), strings
 
 
 def sources(*dirs):
-    return {p: strip_comments(p.read_text(encoding='utf-8'))
+    return {p: split_source(p.read_text(encoding='utf-8'))
             for d in dirs for p in sorted(Path(d).rglob('*.scala'))}
+
+
+def owner_at(code, pos):
+    """The object/class/trait enclosing `pos`: the last one declared before it
+    at a smaller indent than the line at `pos`."""
+    line_start = code.rfind('\n', 0, pos) + 1
+    indent = len(code[line_start:pos]) - len(code[line_start:pos].lstrip(' '))
+    names = [m.group('name') for m in DECL.finditer(code, 0, line_start)
+             if len(m.group('indent')) < indent]
+    return names[-1] if names else None
 
 
 def main(root):
     main_src = sources(root / 'src/main')
-    uses = Counter(w for s in sources(root / 'perfbench/harness').values() for w in WORD.findall(s))
-    uses.update(w for s in main_src.values() for w in WORD.findall(s))
-    tests = Counter(w for s in sources(root / 'src/test').values() for w in WORD.findall(s))
-    defs = [(p, s.count('\n', 0, m.start()) + 1, m.group('name'))
-            for p, s in main_src.items() for m in DEF.finditer(s)
-            if 'override' not in m.group('pre')]
-    n_defs = Counter(name for _, _, name in defs)
-    unused = [(p, line, name) for p, line, name in defs if uses[name] <= n_defs[name]]
+    bench_src = sources(root / 'perfbench/harness')
+    objects = {m.group('name') for code, _ in main_src.values()
+               for m in OBJECT.finditer(code)}
+    tests = Counter(w for code, strs in sources(root / 'src/test').values()
+                    for w in WORD.findall(code + ' '.join(strs)))
+    defs = [(p, code.count('\n', 0, m.start()) + 1, m.group('name'),
+             owner_at(code, m.start('name')))
+            for p, (code, _) in main_src.items() for m in DEF.finditer(code)
+            if 'override' not in m.group('pre')
+            and not (m.group('name') == 'main' and code.startswith('(args', m.end()))]
+    # name -> owners it is called through (None: unqualified or qualified by
+    # a non-object), and name -> files whose string literals call it
+    called_via = {}
+    string_calls = {}
+    for p, (code, strs) in {**main_src, **bench_src}.items():
+        for m in WORD.finditer(code):
+            before = code[max(0, m.start() - 80):m.start()]
+            if DEF_SITE.search(before):
+                continue
+            q = QUALIFIER.search(before)
+            q = q and q.group('qual')
+            called_via.setdefault(m.group(0), set()).add(q if q in objects else None)
+        for lit in strs:
+            for m in CALL.finditer(lit):
+                string_calls.setdefault(m.group('name'), set()).add(p)
+
+    def used(p, name, owner):
+        via = called_via.get(name, set())
+        return (None in via or owner in via
+                or bool(string_calls.get(name, set()) - {p}))
+    unused = [(p, line, name) for p, line, name, owner in defs
+              if not used(p, name, owner)]
     why = {d: KEPT.get(f'{d[0].stem}.{d[2]}') for d in unused}
     for p, line, name in [d for d in unused if not why[d]]:
         print(f'{p.relative_to(root)}:{line}\t{name}\ttest refs: {tests[name]}')
